@@ -148,7 +148,7 @@ object CorpusMain {
       fingerprint = s"n=$nDocs;salt=$saltTarget")
 
     // 1. extraction (native extract_spans — span-for-span equal to the
-    //    typed engine, SpanEqualitySpec). The span table commits ONCE:
+    //    oracle, SpanEqualitySpec). The span table commits ONCE:
     //    extraction is the expensive pass, and both the text funnel and
     //    the multimodal side output below read the committed table
     //    instead of re-running it

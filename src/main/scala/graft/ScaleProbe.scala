@@ -2,9 +2,9 @@ package graft
 
 import org.apache.spark.sql.{SparkSession, functions => F}
 
-/** Ad-hoc probe: scaling of a pure-Tungsten columnar job (no typed object
-  * stage) vs the typed mapPartitions extract, to locate the scaling limiter.
-  * Usage: ScaleProbe <inputDir> <mode: sql|typed> <cores> [runs] */
+/** Ad-hoc probe: scaling of a pure-Tungsten columnar job vs the native
+  * `extract_spans` extract over the same input, to locate the scaling limiter.
+  * Usage: ScaleProbe <inputDir> <mode: sql|expr> <cores> [runs] */
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val inputDir = args(0); val mode = args(1); val cores = args(2).toInt
@@ -20,12 +20,6 @@ object ScaleProbe {
           .select(F.posexplode(F.col("spans")).as(Seq("p", "s")))
           .groupBy($"s.kind").agg(F.count("*"), F.sum(F.length($"s.text")))
           .collect(); 0L
-      case "typed" =>
-        spark.read.parquet(inputDir).as[RawDoc]
-          .mapPartitions { it =>
-            val reg = CompiledRegistry.default
-            it.map(d => Classify.extractDoc(d, reg))
-          }.toDF().agg(F.count("*"), F.sum(F.size($"spans"))).collect(); 0L
       case "expr" =>
         plans.GraftFunctions.extractColumnar(spark.read.parquet(inputDir))
           .agg(F.count("*"), F.sum(F.size($"spans"))).collect(); 0L

@@ -115,7 +115,9 @@ object Dedup {
     // doubled again by the pushed `size(sig) >= bands` filter). A lazy
     // checkpoint of the narrow (id, sig) input caches k×32 hex chars per
     // doc; banding over the cached rows is bands×md5 per doc — noise.
-    val sigs = sigDf.localCheckpoint(eager = false)
+    // Projected first: a caller may pass the full minhashSignatures output,
+    // and pinning its text column would cache the corpus itself.
+    val sigs = sigDf.select(col(idCol), col("sig")).localCheckpoint(eager = false)
     val banded = bandedSignatures(sigs, idCol, bands)
     // The guard itself must not buffer the hot bucket: a windowed count
     // would pull every banded row of the hot bucket into one task, so the

@@ -221,8 +221,8 @@ object TextStats {
       }
     }
 
-  /** Integer quality score: 4·words + 3·stopwords (the boilerplate
-    * classifier's text-density formula, graft.Classify.textScore). */
+  /** Integer quality score: 4·words + 3·stopwords, where words are the
+    * space-split tokens and stopwords those in graft.Classify.Stopwords. */
   def qualityScore(textCol: Column): Column = {
     val stops = graft.Classify.Stopwords.toSeq.sorted.map("'" + _ + "'").mkString(",")
     (lit(4) * size(split(textCol, " ")) +

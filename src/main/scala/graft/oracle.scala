@@ -3,8 +3,9 @@ package graft
 /** Single-threaded golden oracle (SURVEY.md §5.1).
   *
   * Independent, deliberately naive re-implementation of the extraction spec
-  * — functional style, regex via scala matching, no shared code with
-  * [[Classify]] beyond the spec constants in [[Registry]]. The distributed
+  * — functional style, regex via scala matching, no shared code with the
+  * `extract_spans` expression ([[graft.plans.ExtractExpression]]) beyond
+  * the spec constants in [[Registry]] and [[Classify]]. The distributed
   * pipeline must agree with this span-for-span (kind, text, media_ref,
   * order) on every fixture and generated doc; this preserves the shape of
   * qetch's extractor test strategy (known input → exact expected ordered
@@ -28,8 +29,8 @@ object ReferenceOracle {
   private def words(t: String): List[String] = t.split(" ").filter(_.nonEmpty).toList
 
   def extract(doc: RawDoc): ExtractedDoc = {
-    // null text/media_ref normalize to "" (same contract as Classify and
-    // the native expression)
+    // null text/media_ref normalize to "" (same contract as the native
+    // expression)
     val spans = doc.spans
       .map(s => RawSpan(s.kind, Option(s.text).getOrElse(""),
         Option(s.media_ref).getOrElse(""), s.offset))

@@ -5,20 +5,20 @@ import org.apache.spark.sql.functions._
 
 /** The distributed extraction core (SURVEY.md §3.4, §7.3 M1).
   *
-  * One typed `mapPartitions` stage sandwiched between column-algebra
-  * DataFrame stages: the registry (config, not data) is shipped once per
-  * task closure and compiled once per partition; each document flows
-  * through dispatch → classify → media-link exactly as in qetch's
+  * One native `extract_spans` projection ([[plans.ExtractExpression]])
+  * between column-algebra DataFrame stages: the rule set (config, not
+  * data) ships inside the plan and compiles once per task; each document
+  * flows through dispatch → classify → media-link exactly as in qetch's
   * `extract()` (qetch/extractors/_common.py::BaseExtractor.extract), but
-  * over partitions of a Dataset instead of one URL at a time.
+  * over partitions of a table instead of one URL at a time.
   *
   * Scale design:
   *  - `repartitionByRange(buckets, $"bucket", $"doc_id")` is the single
   *    Exchange; bucket is the checkpoint/lineage unit (SURVEY.md §2C) and
   *    doc_id range-ordering keeps partitions balanced (doc_ids are uniform;
   *    domain skew never reaches this shuffle key).
-  *  - the iterator is fully streaming: no per-partition buffering beyond the
-  *    current document (spill-safety at 100 TB, SURVEY.md §4.2).
+  *  - the projection is fully streaming: no per-partition buffering beyond
+  *    the current document (spill-safety at 100 TB, SURVEY.md §4.2).
   *  - metrics are DERIVED FROM DATA AT REST, never from accumulators:
   *    Spark only guarantees exactly-once accumulator semantics inside
   *    actions, so task retries / speculative execution would double-count
@@ -28,24 +28,19 @@ import org.apache.spark.sql.functions._
   */
 object ExtractJob {
 
-  /** Pure transform: raw docs → extracted docs (typed mapPartitions path).
-    * `rules` defaults to the built-in registry; [[backfill]] passes the
-    * UPDATED rule set when reprocessing after a registry change (the rule
-    * seq is config-sized — it ships in the task closure and compiles once
-    * per partition exactly like the default). */
+  /** Pure transform: raw docs → extracted docs, the `extract_spans`
+    * expression behind the bucket range exchange. `rules` defaults to the
+    * built-in registry; [[backfill]] passes the UPDATED rule set when
+    * reprocessing after a registry change (the rule seq is config-sized —
+    * it ships in the plan and compiles once per task like the default). */
   def transform(
       docs: Dataset[RawDoc],
       numPartitions: Int = DocGen.NumBuckets,
       rules: Seq[ExtractorRule] = Registry.rules): Dataset[ExtractedDoc] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-
-    docs
-      .repartitionByRange(numPartitions, $"bucket", $"doc_id")
-      .mapPartitions { it =>
-        val registry = new CompiledRegistry(rules)
-        it.map(doc => Classify.extractDoc(doc, registry))
-      }
+    import docs.sparkSession.implicits._
+    plans.GraftFunctions.extractColumnar(
+      docs.toDF().repartitionByRange(numPartitions, $"bucket", $"doc_id"), rules)
+      .as[ExtractedDoc]
   }
 
   /** Full job: extract `docs` restricted to `pendingBuckets`, write each
@@ -58,12 +53,8 @@ object ExtractJob {
     * is the source of truth (SURVEY.md §7.4, §7.5-2). Pending buckets that
     * receive ZERO documents are still committed (rows=0, empty watermark,
     * no files) so a sparse table converges instead of re-running forever.
-    *
-    * `native = true` routes extraction through the `extract_spans` Catalyst
-    * expression (plans.ExtractExpression — the fast path, ~1.7×). Both
-    * engines are span-for-span identical (SpanEqualitySpec) and produce the
-    * same table schema (including `spans_in`, the raw input span count that
-    * makes input-side metrics derivable at rest).
+    * Rows carry `spans_in`, the raw input span count that makes input-side
+    * metrics derivable at rest.
     */
   def run(
       spark: SparkSession,
@@ -71,10 +62,8 @@ object ExtractJob {
       tableDir: String,
       runId: String,
       resume: Boolean = true,
-      native: Boolean = false,
       numPartitions: Int = 0): Manifest.Snapshot =
-    runGated(spark, docs, tableDir, runId, _ => true, resume, native,
-      numPartitions).get
+    runGated(spark, docs, tableDir, runId, _ => true, resume, numPartitions).get
 
   /** WRITE-AUDIT-PUBLISH extraction (Iceberg's WAP pattern — the data
     * quality gate a production table needs in front of every publish):
@@ -104,7 +93,6 @@ object ExtractJob {
       runId: String,
       audit: DataFrame => Boolean,
       resume: Boolean = true,
-      native: Boolean = false,
       numPartitions: Int = 0): Option[Manifest.Snapshot] = {
     import spark.implicits._
     val t0 = System.nanoTime()
@@ -129,9 +117,7 @@ object ExtractJob {
     // numPartitions.
     val parts = if (numPartitions > 0) numPartitions
       else math.max(1, math.min(pending.length, pendingDocs.rdd.getNumPartitions))
-    val extracted =
-      if (native) plans.GraftFunctions.extractColumnar(pendingDocs.toDF())
-      else transform(pendingDocs, numPartitions = parts).toDF()
+    val extracted = transform(pendingDocs, numPartitions = parts).toDF()
 
     // pre-write listing: dynamic overwrite only replaces directories of
     // partitions PRESENT in the output, so a pending bucket that receives

@@ -1,8 +1,11 @@
 package graft.plans
 
+import graft.{CompiledRegistry, ExtractorRule, Registry}
 import org.apache.spark.sql.{DataFrame, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.graft.ExpressionColumn
 
 /** Registration of graft's native expressions.
   *
@@ -28,7 +31,7 @@ object GraftFunctions {
     new ExpressionInfo(classOf[ExtractExpression].getName, "extract_spans"),
     (children: Seq[Expression]) => {
       require(children.length == 1, "extract_spans takes exactly one argument")
-      ExtractExpression(children.head)
+      ExtractExpression(children.head, CompiledRegistry.default)
     })
 
   /** Idempotent runtime registration on an existing session. */
@@ -37,13 +40,15 @@ object GraftFunctions {
     spark.sessionState.functionRegistry.registerFunction(id, info, builder)
   }
 
-  /** Columnar extraction: the whole pipeline as one native expression —
-    * no typed object stage, zero-copy span text. Output columns match
-    * ExtractedDoc. */
-  def extractColumnar(docs: DataFrame): DataFrame = {
-    register(docs.sparkSession)
-    import org.apache.spark.sql.functions.{col, expr, size}
-    docs.select(col("doc_id"), expr("extract_spans(spans)").as("__ex"),
+  /** Columnar extraction: the whole pipeline as one native expression over
+    * `rules` (default: the built-in registry) — zero-copy span text, no
+    * per-doc objects. Output columns match ExtractedDoc. */
+  def extractColumnar(docs: DataFrame,
+      rules: Seq[ExtractorRule] = Registry.rules): DataFrame = {
+    import org.apache.spark.sql.functions.{col, size}
+    val ex = ExpressionColumn(
+      ExtractExpression(UnresolvedAttribute.quoted("spans"), CompiledRegistry(rules)))
+    docs.select(col("doc_id"), ex.as("__ex"),
         size(col("spans")).as("__n_in"), col("domain"), col("bucket"))
       .select(col("doc_id"), col("__ex.spans").as("spans"),
         col("__ex.extractor").as("extractor"),

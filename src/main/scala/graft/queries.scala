@@ -4243,7 +4243,7 @@ object Queries {
   // classifier spec (registry dispatch, keep rules, variant-run islands,
   // canonicalization, dense renumbering, confidence) is replayed in ANSI
   // SQL (gaps-and-islands windows + regexes). Three independent
-  // implementations now agree: Classify/ExtractExpression (Spark),
+  // implementations now agree: ExtractExpression (Spark),
   // ReferenceOracle (sbt test), and this SQL (driver gate).
   // ------------------------------------------------------------------
 
@@ -4278,8 +4278,8 @@ object Queries {
   private val SmallDocFilter = s"doc_id < '$SmallDocMax'"
 
   /** The classifier replayed as DuckDB CTEs over the staged corpus.
-    * Mirrors graft.Classify.extractDoc / plans.ExtractExpression /
-    * graft.ReferenceOracle — keep the four in sync. Produces CTEs:
+    * Mirrors plans.ExtractExpression / graft.ReferenceOracle — keep the
+    * three in sync. Produces CTEs:
     *  - `corpus`  (doc_id, bucket, spans)
     *  - `ndoc`    per-doc raw span count
     *  - `drule`   per-doc extractor (ordered first-match dispatch)
@@ -4497,8 +4497,9 @@ object Queries {
             |  CAST(count(DISTINCT domain) AS BIGINT) AS domains
             |FROM d GROUP BY bucket ORDER BY bucket""".stripMargin))
 
-  /** Full extraction over the staged corpus (typed mapPartitions path):
-    * per-extractor rollup, now oracle-checked end to end. */
+  /** Full extraction over the staged corpus (ExtractJob.transform, range
+    * exchange + extract_spans): per-extractor rollup, oracle-checked end
+    * to end. */
   private val qExtract = QueryDef(
     "q_extract_pipeline",
     (s, _) => {

@@ -1,6 +1,7 @@
 package graft
 
 import java.util.regex.{Matcher, Pattern}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Extractor registry: ordered first-match URL-pattern dispatch.
   *
@@ -9,8 +10,8 @@ import java.util.regex.{Matcher, Pattern}
   * (SURVEY.md §2A O1–O3). qetch keeps a module-level list of extractor
   * classes and returns the FIRST whose regex handles match the URL; dispatch
   * is ordered and deterministic. Here the registry is a small immutable
-  * `Seq[ExtractorRule]` built on the driver and broadcast (it is config, not
-  * data); patterns are compiled once per partition via [[CompiledRegistry]].
+  * `Seq[ExtractorRule]` built on the driver; it is config, not data, and
+  * its compiled form [[CompiledRegistry]] ships inside the query plan.
   *
   * Patterns use named groups exactly like qetch's handles
   * (e.g. `(?P<id>...)` → Java `(?<id>...)`).
@@ -69,50 +70,56 @@ object Registry {
   def quality(ext: String): Int = qualityOf.getOrElse(ext, 10)
 }
 
-/** Per-partition compiled form of the registry: patterns compiled once,
-  * reused across every doc in the partition (qetch compiles handles at class
-  * definition time; our unit of reuse is the Spark partition). */
-final class CompiledRegistry(rules: Seq[ExtractorRule]) extends Serializable {
+/** The compiled form of a rule set — the one thing the `extract_spans`
+  * expression ([[graft.plans.ExtractExpression]]) evaluates against.
+  * Patterns, literal needles, UTF-8 rule names and canonical templates are
+  * built lazily once per instance; the instance ships inside the physical
+  * plan, so an executor builds them once per task (qetch compiles handles
+  * at class definition time). A case class, so two expressions over equal
+  * rule sets are equal plan nodes. */
+final case class CompiledRegistry(rules: Seq[ExtractorRule]) {
 
-  @transient private lazy val compiled: Seq[(ExtractorRule, Pattern)] =
-    rules.map(r => (r, Pattern.compile(r.pattern)))
+  @transient private lazy val patterns: Array[Pattern] =
+    rules.map(r => Pattern.compile(r.pattern)).toArray
 
-  /** Per-rule guaranteed-literal needle ("" = none): a ref not containing
-    * it cannot match, so the regex is skipped (CompiledRegistry.literalNeedle). */
-  @transient private lazy val needles: Seq[String] =
-    rules.map(r => CompiledRegistry.literalNeedle(r.pattern))
+  /** Per-rule guaranteed-literal needle ([[CompiledRegistry.literalNeedle]])
+    * as UTF-8 bytes: a ref that does not CONTAIN it cannot match the rule,
+    * so the regex — and the UTF8String→String copy it needs — is skipped.
+    * Unmatched-host refs, the common case in an open crawl, never allocate.
+    * null = no safe needle, always run the regex. */
+  @transient private lazy val needles: Array[UTF8String] = rules.map { r =>
+    val n = CompiledRegistry.literalNeedle(r.pattern)
+    if (n.isEmpty) null else UTF8String.fromString(n)
+  }.toArray
 
-  @transient private lazy val idxByName: Map[String, Int] =
-    rules.zipWithIndex.map { case (r, i) => r.name -> i }.toMap
+  /** Rule names as UTF8Strings, by registration-order index. */
+  @transient lazy val names: Array[UTF8String] =
+    rules.map(r => UTF8String.fromString(r.name)).toArray
 
-  /** Registration-order index of a rule in THIS registry — dispatch
-    * priority must be resolved against the compiled rule set, never the
-    * global [[Registry.rules]] (a backfill runs with an EDITED set). */
-  def indexOf(rule: ExtractorRule): Int = idxByName(rule.name)
-
-  /** Rule name at a registration-order index of THIS registry. */
-  def nameAt(idx: Int): String = rules(idx).name
-
-  /** First rule (in registry order) matching the ref, with its Matcher —
-    * qetch get_handle analog. Needle precheck skips regex work for refs
-    * that cannot match (most of an open crawl). */
-  def dispatch(ref: String): Option[(ExtractorRule, Matcher)] = {
-    var i = 0
-    while (i < compiled.length) {
-      val needle = needles(i)
-      if (needle.isEmpty || ref.contains(needle)) {
-        val m = compiled(i)._2.matcher(ref)
-        if (m.matches()) return Some((compiled(i)._1, m))
+  /** First rule in registration order whose pattern fully matches `ref` —
+    * qetch get_handle analog. Returns the rule index and stores its Matcher
+    * at `matchers(pos)`, or returns -1 (nothing stored). Priority is always
+    * THIS rule set's order, never the global [[Registry.rules]] (a backfill
+    * runs with an EDITED set). */
+  def dispatch(ref: UTF8String, matchers: Array[Matcher], pos: Int): Int = {
+    val ps = patterns; val ns = needles
+    var refStr: String = null
+    var r = 0
+    while (r < ps.length) {
+      if (ns(r) == null || ref.contains(ns(r))) {
+        if (refStr == null) refStr = ref.toString
+        val m = ps(r).matcher(refStr)
+        if (m.matches()) { matchers(pos) = m; return r }
       }
-      i += 1
+      r += 1
     }
-    None
+    -1
   }
 
   /** Canonical templates parsed ONCE into literal/group segments — the
     * per-span rewrite is then a plain StringBuilder concat instead of a
     * regex replaceAllIn per media group (hot path at corpus scale). */
-  @transient private lazy val templates: Map[String, Array[Either[String, String]]] =
+  @transient private lazy val templates: Array[Array[Either[String, String]]] =
     rules.map { r =>
       val segs = scala.collection.mutable.ArrayBuffer.empty[Either[String, String]]
       val pat = "\\$\\{([a-zA-Z]+)\\}".r
@@ -123,14 +130,14 @@ final class CompiledRegistry(rules: Seq[ExtractorRule]) extends Serializable {
         last = g.end
       }
       if (last < r.canonical.length) segs += Left(r.canonical.substring(last))
-      r.name -> segs.toArray
-    }.toMap
+      segs.toArray
+    }.toArray
 
-  /** Rewrite a matched ref to its canonical form by substituting named
-    * groups into the rule's template (qetch handle_raw→handle_basic
-    * normalization, gfycat.py, SURVEY.md §2A O7). */
-  def canonicalize(rule: ExtractorRule, m: Matcher): String = {
-    val segs = templates(rule.name)
+  /** Rewrite a ref matched by rule `rule` to its canonical form by
+    * substituting named groups into the rule's template (qetch
+    * handle_raw→handle_basic normalization, gfycat.py, SURVEY.md §2A O7). */
+  def canonicalize(rule: Int, m: Matcher): String = {
+    val segs = templates(rule)
     val sb = new java.lang.StringBuilder(48)
     var i = 0
     while (i < segs.length) {
@@ -146,22 +153,27 @@ final class CompiledRegistry(rules: Seq[ExtractorRule]) extends Serializable {
   /** Variant-group key for a matched media ref: same (rule, identity) ⇒
     * quality variants of the same logical item (qetch content-list grouping,
     * SURVEY.md §2A D2). Identity = all named groups except `ext`. */
-  def groupKey(rule: ExtractorRule, m: Matcher): String = rule.name + ":" + {
-    rule.name match {
+  def groupKey(rule: Int, m: Matcher): String = {
+    val name = rules(rule).name
+    name + ":" + (name match {
       case "gfyclip"   => m.group("id")
       case "chanboard" => m.group("board") + "/" + m.group("tim")
       case "albumhost" => m.group("album") + "/" + m.group("item")
       case _           => m.group(0)
-    }
+    })
   }
 
-  /** Extension of a matched ref (for quality ranking); "" if none. */
-  def extOf(rule: ExtractorRule, m: Matcher): String =
-    try Option(m.group("ext")).getOrElse("") catch { case _: Exception => "" }
+  /** Quality of a matched ref's variant, by its `ext` group
+    * ([[Registry.quality]]; a rule without an `ext` group ranks as ""). */
+  def quality(m: Matcher): Int = Registry.quality(
+    try Option(m.group("ext")).getOrElse("") catch { case _: Exception => "" })
+
+  /** Plan strings name the rules, not every pattern. */
+  override def toString: String = rules.map(_.name).mkString("rules(", ",", ")")
 }
 
 object CompiledRegistry {
-  def default: CompiledRegistry = new CompiledRegistry(Registry.rules)
+  val default: CompiledRegistry = CompiledRegistry(Registry.rules)
 
   /** Longest literal substring that EVERY match of `pattern` must contain —
     * used as a byte-level precheck that skips regex evaluation (and, in the

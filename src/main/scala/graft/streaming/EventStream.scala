@@ -27,19 +27,15 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 object EventStream {
 
   /** Streaming extraction: raw-doc parquet files appearing under `inDir` →
-    * extracted spans. Uses the identical classifier as the batch path (same
-    * registry, same semantics) via a DataFrame-level map on the typed rows. */
+    * extracted spans, through the same native `extract_spans` expression as
+    * the batch path (Catalyst expressions are engine-agnostic between batch
+    * and micro-batch plans). */
   def extractStream(spark: SparkSession, inDir: String, schemaFrom: DataFrame): DataFrame = {
-    import spark.implicits._
     val raw = spark.readStream
       .schema(schemaFrom.schema)
       .option("maxFilesPerTrigger", 8)
       .parquet(inDir)
-      .as[graft.RawDoc]
-    raw.mapPartitions { it =>
-      val reg = graft.CompiledRegistry.default
-      it.map(d => graft.Classify.extractDoc(d, reg))
-    }.toDF()
+    graft.plans.GraftFunctions.extractColumnar(raw)
   }
 
   /** Run the extraction stream to a parquet sink, draining what is
@@ -53,18 +49,6 @@ object EventStream {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .start()
-  }
-
-  /** Streaming extraction through the NATIVE `extract_spans` expression —
-    * the columnar fast path works unchanged under incremental execution
-    * (Catalyst expressions are engine-agnostic between batch and
-    * micro-batch plans). */
-  def extractStreamNative(spark: SparkSession, inDir: String, schemaFrom: DataFrame): DataFrame = {
-    val raw = spark.readStream
-      .schema(schemaFrom.schema)
-      .option("maxFilesPerTrigger", 8)
-      .parquet(inDir)
-    graft.plans.GraftFunctions.extractColumnar(raw)
   }
 
   /** Streaming extraction INTO the manifest table — the incremental
@@ -85,7 +69,7 @@ object EventStream {
       checkpointDir: String, schemaFrom: DataFrame): StreamingQuery = {
     val streamId = streamIdFor(checkpointDir, spark.sessionState.newHadoopConf())
     val legacyId = legacyStreamIdFor(checkpointDir)
-    extractStreamNative(spark, inDir, schemaFrom).writeStream
+    extractStream(spark, inDir, schemaFrom).writeStream
       .option("checkpointLocation", checkpointDir)
       .outputMode(OutputMode.Append())
       .trigger(Trigger.AvailableNow())

@@ -1,6 +1,17 @@
 package graft
 
+import java.util.regex.Matcher
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
+
+/** [[CompiledRegistry.dispatch]] as an Option: (rule index, rule name, Matcher). */
+object Dispatch {
+  def apply(reg: CompiledRegistry, ref: String): Option[(Int, String, Matcher)] = {
+    val ms = new Array[Matcher](1)
+    val r = reg.dispatch(UTF8String.fromString(ref), ms, 0)
+    if (r < 0) None else Some((r, reg.rules(r).name, ms(0)))
+  }
+}
 
 /** literalNeedle: the guaranteed-substring precheck must be sound (every
   * matching string contains the needle) and useful on the real registry. */
@@ -16,8 +27,8 @@ class NeedleSpec extends AnyFunSuite {
     val urls = (0L until 500L).map(DocGen.docFor)
       .flatMap(_.spans).filter(s => s.kind == "media" && s.media_ref.nonEmpty)
     urls.foreach { s =>
-      reg.dispatch(s.media_ref).foreach { case (rule, _) =>
-        val needle = CompiledRegistry.literalNeedle(rule.pattern)
+      Dispatch(reg, s.media_ref).foreach { case (r, _, _) =>
+        val needle = CompiledRegistry.literalNeedle(reg.rules(r).pattern)
         assert(needle.isEmpty || s.media_ref.contains(needle), s"${s.media_ref} vs $needle")
       }
     }
@@ -41,6 +52,7 @@ class NeedleSpec extends AnyFunSuite {
   * qetch can_handle analog (SURVEY.md §5.2-2, FIXTURES.md §4). */
 class DispatchSpec extends AnyFunSuite {
   private val reg = CompiledRegistry.default
+  private def dispatch(u: String) = Dispatch(reg, u)
 
   private val gfyAccept = Seq(
     "https://media.gfyclip.test/AbcDef.mp4",
@@ -62,13 +74,13 @@ class DispatchSpec extends AnyFunSuite {
     "https://chanboard.test/g/1400000001.jpg")
 
   test("gfyclip corpus") {
-    gfyAccept.foreach(u => assert(reg.dispatch(u).exists(_._1.name == "gfyclip"), u))
-    gfyReject.foreach(u => assert(!reg.dispatch(u).exists(_._1.name == "gfyclip"), u))
+    gfyAccept.foreach(u => assert(dispatch(u).exists(_._2 == "gfyclip"), u))
+    gfyReject.foreach(u => assert(!dispatch(u).exists(_._2 == "gfyclip"), u))
   }
 
   test("chanboard corpus") {
-    chanAccept.foreach(u => assert(reg.dispatch(u).exists(_._1.name == "chanboard"), u))
-    chanReject.foreach(u => assert(reg.dispatch(u).isEmpty, u))
+    chanAccept.foreach(u => assert(dispatch(u).exists(_._2 == "chanboard"), u))
+    chanReject.foreach(u => assert(dispatch(u).isEmpty, u))
   }
 
   private val albAccept = Seq(
@@ -82,27 +94,27 @@ class DispatchSpec extends AnyFunSuite {
   )
 
   test("albumhost corpus") {
-    albAccept.foreach(u => assert(reg.dispatch(u).exists(_._1.name == "albumhost"), u))
-    albReject.foreach(u => assert(reg.dispatch(u).isEmpty, u))
+    albAccept.foreach(u => assert(dispatch(u).exists(_._2 == "albumhost"), u))
+    albReject.foreach(u => assert(dispatch(u).isEmpty, u))
   }
 
   test("canonicalization substitutes named groups") {
-    val Some((r1, m1)) = reg.dispatch("https://media.gfyclip.test/AbcDef.webm")
+    val Some((r1, _, m1)) = dispatch("https://media.gfyclip.test/AbcDef.webm")
     assert(reg.canonicalize(r1, m1) == "https://gfyclip.test/AbcDef")
-    val Some((r2, m2)) = reg.dispatch("https://img.chanboard.test/tv/42.png")
+    val Some((r2, _, m2)) = dispatch("https://img.chanboard.test/tv/42.png")
     assert(reg.canonicalize(r2, m2) == "https://chanboard.test/tv/42.png")
-    val Some((r3, m3)) = reg.dispatch("https://i.albumhost.test/alb1/100.webm")
+    val Some((r3, _, m3)) = dispatch("https://i.albumhost.test/alb1/100.webm")
     assert(reg.canonicalize(r3, m3) == "https://albumhost.test/alb1/100")
     // two-level key: same album, different item → DIFFERENT groups
-    val Some((r4, m4)) = reg.dispatch("https://i.albumhost.test/alb1/101.webm")
+    val Some((r4, _, m4)) = dispatch("https://i.albumhost.test/alb1/101.webm")
     assert(reg.groupKey(r3, m3) != reg.groupKey(r4, m4))
   }
 
   test("first-match is stable under repeated calls") {
     val urls = (gfyAccept ++ chanAccept ++ gfyReject).toVector
-    val first = urls.map(u => reg.dispatch(u).map(_._1.name))
+    val first = urls.map(u => dispatch(u).map(_._2))
     (1 to 5).foreach { _ =>
-      assert(urls.map(u => reg.dispatch(u).map(_._1.name)) == first)
+      assert(urls.map(u => dispatch(u).map(_._2)) == first)
     }
   }
 }

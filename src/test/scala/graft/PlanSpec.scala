@@ -86,6 +86,10 @@ class PlanSpec extends AnyFunSuite {
     val p = ExtractJob.transform(docs, 4).queryExecution.executedPlan.toString
     val exchanges = p.linesIterator.count(_.contains("Exchange"))
     assert(exchanges == 1, s"expected 1 exchange, got $exchanges:\n$p")
+    // the extractor is a projection, never a per-doc object stage
+    assert(!p.contains("DeserializeToObject") && !p.contains("MapPartitions"),
+      s"transform plans a typed object stage:\n$p")
+    assert(p.contains("extract_spans"), p)
   }
 
   test("salted aggregation keeps partial aggregates before the shuffle") {
@@ -171,20 +175,38 @@ class PlanSpec extends AnyFunSuite {
 
   test("lshCandidatePairs materializes the signature relation once (no per-consumer re-derivation)") {
     // the banded relation feeds the guard count AND both self-join sides;
-    // without the internal checkpoint the per-shingle k×md5 signature
+    // without the internal materialization the per-shingle k×md5 signature
     // subtree is re-derived per consumer (r6 before-plans carried SIX
-    // copies of it). With it, every consumer reads the cached (id, sig)
-    // leaf — the plan must contain NO parquet scan at all.
+    // copies of it). Compute-once means the salt-0 md5 signature term
+    // appears at most once in the executed plan, however it is pinned.
     import spark.implicits._
     val docs = spark.read.parquet(s"$dir/documents.parquet")
       .where($"doc_id" < 40).select($"doc_id", $"text")
     val sigs = ops.Dedup.minhashSignatures(docs, "text", 8)
       .select($"doc_id", $"sig")
-    val p = ops.Dedup.lshCandidatePairs(sigs, "doc_id", bands = 4)
-      .queryExecution.executedPlan.toString
-    assert(!p.contains("Scan parquet"),
-      "signature subtree re-derived per consumer — expected one checkpointed leaf:\n" +
-        p.take(1200))
+    val salt0 = "md5(cast(concat(0:, "
+    val reference = sigs.queryExecution.executedPlan.toString
+    assert(reference.contains(salt0), s"probe term missing from the signature plan:\n$reference")
+    val pairs = ops.Dedup.lshCandidatePairs(sigs, "doc_id", bands = 4)
+    pairs.collect()
+    val p = pairs.queryExecution.executedPlan.toString
+    val copies = p.sliding(salt0.length).count(_ == salt0)
+    assert(copies <= 1, s"signature subtree derived $copies times:\n" + p.take(1200))
+  }
+
+  test("lshCandidatePairs pins only (id, sig) of a wide input") {
+    // a caller may pass the full minhashSignatures output, text included:
+    // every leaf of the candidate plan must be the (id, sig) materialization
+    import spark.implicits._
+    val docs = spark.read.parquet(s"$dir/documents.parquet")
+      .where($"doc_id" < 40).select($"doc_id", $"text")
+    val wide = ops.Dedup.minhashSignatures(docs, "text", 8)
+    assert(wide.columns.contains("text"))
+    val pairs = ops.Dedup.lshCandidatePairs(wide, "doc_id", bands = 4)
+    val leaves = pairs.queryExecution.optimizedPlan.collectLeaves()
+    assert(leaves.nonEmpty)
+    leaves.foreach(l => assert(l.output.map(_.name) == Seq("doc_id", "sig"),
+      s"pinned leaf carries ${l.output.map(_.name)}"))
   }
 
   test("jaccardVerify semi-filters each side to the candidate ids before the word-set projection") {

@@ -43,16 +43,32 @@ class PropertySpec extends AnyFunSuite {
     ss.zipWithIndex.map { case ((k, t, r), i) => RawSpan(k, t, r, i) }.toVector,
     "src0", DocGen.bucketOf(f"p$idn%010d"))
 
-  test("deterministic: extracting twice gives identical results") {
-    checkAll(docGen) { d =>
-      val reg = CompiledRegistry.default
-      Classify.extractDoc(d, reg) == Classify.extractDoc(d, reg)
+  /** The 300 generated samples, re-keyed by sample index so doc ids are
+    * unique; all of them are extracted in ONE ExtractJob.transform batch. */
+  private lazy val samples: Seq[RawDoc] = (0 until 300).flatMap { i =>
+    docGen.apply(Gen.Parameters.default, Seed(1000L + i)).map { d =>
+      val id = f"p$i%010d"
+      d.copy(doc_id = id, bucket = DocGen.bucketOf(id))
     }
   }
 
+  private def extractSamples(): Map[String, ExtractedDoc] =
+    ExtractJob.transform(spark.createDataset(samples), 4)
+      .collect().map(d => d.doc_id -> d).toMap
+
+  private lazy val extracted: Map[String, ExtractedDoc] = extractSamples()
+
+  private def checkSamples(p: (RawDoc, ExtractedDoc) => Boolean): Unit = {
+    assert(extracted.size == samples.size)
+    samples.foreach(d => assert(p(d, extracted(d.doc_id)), s"property failed for $d"))
+  }
+
+  test("deterministic: extracting twice gives identical results") {
+    assert(extractSamples() == extracted)
+  }
+
   test("kept text spans are a subsequence of input texts") {
-    checkAll(docGen) { d =>
-      val out = Classify.extractDoc(d, CompiledRegistry.default)
+    checkSamples { (d, out) =>
       val inTexts = d.spans.sortBy(_.offset).map(_.text)
       val outTexts = out.spans.filter(s => s.kind == "text" || s.kind == "title").map(_.text)
       // subsequence check
@@ -65,10 +81,7 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("offsets dense and monotone") {
-    checkAll(docGen) { d =>
-      val out = Classify.extractDoc(d, CompiledRegistry.default)
-      out.spans.map(_.offset) == out.spans.indices
-    }
+    checkSamples((_, out) => out.spans.map(_.offset) == out.spans.indices)
   }
 
   test("partition invariance: same output set under 1, 3, 8 partitions") {

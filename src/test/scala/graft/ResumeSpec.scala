@@ -115,20 +115,30 @@ class ResumeSpec extends AnyFunSuite {
     assert(runIds == Set("gated-3"))
   }
 
-  test("native (extract_spans) job produces a byte-identical table to the typed job") {
+  test("extraction job table == ReferenceOracle per doc; metrics agree with the data") {
     val docs = DocGen.generate(spark, 500, 8)
-    val typedDir = freshDir(); val nativeDir = freshDir()
-    ExtractJob.run(spark, docs, typedDir, "t", resume = false)
-    ExtractJob.run(spark, docs, nativeDir, "n", resume = false, native = true)
-    assert(tableDocs(nativeDir) == tableDocs(typedDir))
-    // native metrics come from data at rest: docs/spans_out must agree
-    val mT = spark.read.parquet(s"$typedDir/metrics")
+    val dir = freshDir()
+    ExtractJob.run(spark, docs, dir, "n", resume = false)
+    val table = spark.read.parquet(s"$dir/data").as[ExtractedDoc].collect()
+      .map(d => d.doc_id -> d).toMap
+    val raw = docs.collect()
+    assert(table.size == raw.length)
+    raw.foreach { d =>
+      val exp = ReferenceOracle.extract(d)
+      val act = table(d.doc_id)
+      assert(act.spans.map(s => (s.kind, s.text, s.media_ref, s.offset)) ==
+        exp.spans.map(s => (s.kind, s.text, s.media_ref, s.offset)), s"spans of ${d.doc_id}")
+      assert(act.extractor == exp.extractor && act.confidence == exp.confidence &&
+        act.spans_in == d.spans.length && act.bucket == d.bucket, s"row of ${d.doc_id}")
+    }
+    // metrics come from data at rest: per-bucket docs/spans_out match the oracle
+    val metrics = spark.read.parquet(s"$dir/metrics")
       .groupBy($"bucket").sum("docs", "spans_out")
       .as[(Int, Long, Long)].collect().toSet
-    val mN = spark.read.parquet(s"$nativeDir/metrics")
-      .groupBy($"bucket").sum("docs", "spans_out")
-      .as[(Int, Long, Long)].collect().toSet
-    assert(mN == mT)
+    val expected = raw.groupBy(_.bucket).map { case (b, ds) =>
+      (b, ds.length.toLong, ds.map(d => ReferenceOracle.extract(d).spans.length.toLong).sum)
+    }.toSet
+    assert(metrics == expected)
   }
 
   test("rerun of a complete table is a no-op (same snapshot returned)") {

@@ -3,9 +3,11 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** THE invariant (SURVEY.md §5.2-1, BASELINE.json input_hint): for every
-  * fixture and generated doc, the distributed pipeline's span sequence
-  * equals the single-threaded oracle's on (kind, text, media_ref, order),
-  * with offsets dense and strictly increasing. */
+  * fixture and generated doc, the extractor's span sequence — through
+  * ExtractJob.transform and through the bare columnar projection — equals
+  * the single-threaded oracle's on (kind, text, media_ref, order), with
+  * the same extractor and confidence and offsets dense and strictly
+  * increasing. */
 class SpanEqualitySpec extends AnyFunSuite {
   private val spark = TestSpark.spark
   import spark.implicits._
@@ -23,8 +25,10 @@ class SpanEqualitySpec extends AnyFunSuite {
     val failures = docs.flatMap { d =>
       val exp = ReferenceOracle.extract(d)
       val act = actual(d.doc_id)
-      if (seq(act) != seq(exp) || act.extractor != exp.extractor)
-        Some(s"${d.doc_id}: expected ${seq(exp)} [${exp.extractor}], got ${seq(act)} [${act.extractor}]")
+      if (seq(act) != seq(exp) || act.extractor != exp.extractor ||
+          act.confidence != exp.confidence)
+        Some(s"${d.doc_id}: expected ${seq(exp)} [${exp.extractor} ${exp.confidence}], " +
+          s"got ${seq(act)} [${act.extractor} ${act.confidence}]")
       else None
     }
     assert(failures.isEmpty, failures.mkString("\n"))
@@ -67,21 +71,19 @@ class SpanEqualitySpec extends AnyFunSuite {
     assert(n == DocGen.fixtures.size)
   }
 
-  test("null text/media_ref normalize to empty in all three implementations") {
-    // foreign parquet can carry nulls the generator never produces; typed,
-    // native and oracle must agree (null → "")
+  test("null text/media_ref normalize to empty in the extractor and the oracle") {
+    // foreign parquet can carry nulls the generator never produces; the
+    // extractor and the oracle must agree (null → "")
     val doc = RawDoc("n0000000001", Vector(
       RawSpan("title", null, null, 0),
       RawSpan("text", "the table scan joins the fast row", null, 1),
       RawSpan("media", null, "https://media.gfyclip.test/NullTest.mp4", 2),
       RawSpan("media", null, null, 3)), "src0", DocGen.bucketOf("n0000000001"))
-    val typed = Classify.extractDoc(doc, CompiledRegistry.default)
     val oracle = ReferenceOracle.extract(doc)
-    val native = runColumnar(Seq(doc))(doc.doc_id)
-    assert(seq(typed) == seq(oracle), s"typed=${seq(typed)} oracle=${seq(oracle)}")
+    val native = runPipeline(Seq(doc))(doc.doc_id)
     assert(seq(native) == seq(oracle), s"native=${seq(native)} oracle=${seq(oracle)}")
-    assert(typed.spans.map(_.kind) == Seq("title", "text", "media"))
-    assert(typed.spans.forall(s => s.text != null && s.media_ref != null))
+    assert(native.spans.map(_.kind) == Seq("title", "text", "media"))
+    assert(native.spans.forall(s => s.text != null && s.media_ref != null))
   }
 
   test("offsets are dense 0..n-1 and strictly increasing") {

@@ -50,7 +50,7 @@ class StreamingSpec extends AnyFunSuite {
     val schemaFrom = spark.createDataset(Seq(DocGen.docFor(0L))).toDF()
     spark.createDataset((0L until 150L).map(DocGen.docFor)).toDF()
       .write.mode("append").parquet(in)
-    val q = streaming.EventStream.extractStreamNative(spark, in, schemaFrom)
+    val q = streaming.EventStream.extractStream(spark, in, schemaFrom)
       .writeStream.format("parquet")
       .option("path", out).option("checkpointLocation", ckpt)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
