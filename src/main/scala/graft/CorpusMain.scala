@@ -37,27 +37,41 @@ private[graft] object CorpusPrep {
 
   /** Reassembly of document text from kept non-media spans in offset
     * order (the text-funnel head); zero-text docs drop. */
-  def textsOf(extracted: DataFrame): DataFrame =
+  def textsOf(extracted: DataFrame): DataFrame = textOf(extracted).where(hasText)
+
+  /** [[textsOf]] before its non-empty filter: every doc, zero-text ones
+    * included. */
+  def textOf(extracted: DataFrame): DataFrame =
     extracted
       .select(col("doc_id"), col("domain"),
         array_join(expr(
           "transform(array_sort(filter(spans, s -> s.kind <> 'media'), " +
             "(a, b) -> a.offset - b.offset), s -> s.text)"), " ").as("text"))
-      .where(length(col("text")) > 0)
+
+  /** The non-empty-text predicate of [[textsOf]]. */
+  def hasText: Column = length(col("text")) > 0
 
   /** PII scrub + the FULL Gopher gate at the pipeline's constants
     * (minWords 8; repetition caps 0.30 / 0.18 / 0.15 on the 2000-word
-    * prefix). */
+    * prefix), judged on the REDACTED text.
+    *
+    * It filters on the INCOMING `text` before it projects the redacted
+    * one, and the predicate binds the redacted text and its capped word
+    * array once each ([[ops.Cleaning.bindOnce]]). A filter over redefined
+    * `text`/`w` columns would be pushed through their projection with the
+    * alias inlined at every reference: the gate reads them ~30 times, so
+    * the plan carried that many copies of `redactPii` (and, further down,
+    * of whatever produced `text`). Here pushdown carries one. */
   def cleanGate(texts: DataFrame): DataFrame = {
-    val wCap: Column = slice(ops.Cleaning.wordsOf(col("text")), 1, 2000)
-    texts
-      .withColumn("text", ops.Cleaning.redactPii(col("text")))
-      .withColumn("w", wCap)
-      .where(ops.Cleaning.gopherQualityGate(col("text"), col("w"), minWords = 8) &&
-        ops.Cleaning.topWordFracQ4(col("w")) <= 3000 &&
-        ops.Cleaning.topNgramCharFracQ4(col("w"), 3) <= 1800 &&
-        ops.Cleaning.dupNgramCharFracQ4(col("w"), 5) <= 1500)
-      .drop("w")
+    val gate = ops.Cleaning.bindOnce(ops.Cleaning.redactPii(col("text"))) { t =>
+      ops.Cleaning.bindOnce(slice(ops.Cleaning.wordsOf(t), 1, 2000)) { w =>
+        ops.Cleaning.gopherQualityGate(t, w, minWords = 8) &&
+          ops.Cleaning.topWordFracQ4(w) <= 3000 &&
+          ops.Cleaning.topNgramCharFracQ4(w, 3) <= 1800 &&
+          ops.Cleaning.dupNgramCharFracQ4(w, 5) <= 1500
+      }
+    }
+    texts.where(gate).withColumn("text", ops.Cleaning.redactPii(col("text")))
   }
 
   /** Bulk language gate: keep docs langIdBulk calls 'en' (docs with no

@@ -91,22 +91,42 @@ object IncrementalCorpus {
     require(new Manifest(corpusTableDir(outDir), conf(spark)).head().nonEmpty,
       s"no corpus at ${corpusTableDir(outDir)} — bootstrap first " +
         "(an increment admitted before bootstrap would mute the seed batch)")
-    val extracted = plans.GraftFunctions.extractColumnar(raw.toDF())
-      .select(col("doc_id"), col("domain"), col("spans"))
-    // materialize the gated batch ONCE: admitIndexedBatch drives several
-    // actions over it (input count, admission joins, outcome counts) and
-    // would otherwise re-run extraction + gates per action
-    val cleaned = CorpusPrep.langGateEn(
-      CorpusPrep.cleanGate(CorpusPrep.textsOf(extracted))).localCheckpoint()
+    val gated = gateIncrement(raw.toDF())
     val holdout = CorpusMain.readStage(spark, outDir, "eval_holdout")
-    val admissible = cleaned.join(
-      ops.Cleaning.decontaminate(cleaned, holdout, "doc_id", "text",
+    val admissible = gated.join(
+      ops.Cleaning.decontaminate(gated, holdout, "doc_id", "text",
           k = HoldoutDeconK)
         .where(col("keep") === 1).select(col("doc_id")),
       "doc_id")
     streaming.EventStream.admitIndexedBatch(admissible, batchId,
       corpusTableDir(outDir), StreamId, "doc_id", "text", 0.8, 8, 4,
       layoutOf(spark, outDir))
+  }
+
+  /** The admission front end of one increment: extraction, then the
+    * batch pipeline's text funnel ([[CorpusPrep]]) up to the language
+    * gate, each document computed once.
+    *
+    * It is pinned at the stage boundaries [[CorpusMain]] commits, so no
+    * predicate is pushed across them:
+    *  - the extracted texts, pinned BEFORE their non-empty filter. Pushed
+    *    into the extraction projection, that filter and every gate above
+    *    it would inline their own copy of `extract_spans`; pushed through
+    *    the input's repartition onto a local Dataset, the optimizer would
+    *    fold the whole chain on the driver;
+    *  - `cleaned`: the language gate reads its input three times (its
+    *    self-join and two reads inside langIdBulk);
+    *  - `lang_en`, pinned eagerly: admission runs several actions over
+    *    it (input count, admission joins, outcome counts).
+    * The first two pins are lazy (like [[ops.Dedup]]'s `mat`): they
+    * materialize inside the final pin's job. */
+  private[graft] def gateIncrement(raw: DataFrame): DataFrame = {
+    val extracted = plans.GraftFunctions.extractColumnar(raw)
+      .select(col("doc_id"), col("domain"), col("spans"))
+    val texts = CorpusPrep.textOf(extracted).localCheckpoint(eager = false)
+      .where(CorpusPrep.hasText)
+    val cleaned = CorpusPrep.cleanGate(texts).localCheckpoint(eager = false)
+    CorpusPrep.langGateEn(cleaned).localCheckpoint()
   }
 
   /** Pack every corpus row appended since the last pack into
@@ -136,20 +156,19 @@ object IncrementalCorpus {
 
     val buckets = Seq(ShardsBucket, SequencesBucket, OovBucket)
     val pre = buckets.map(b => b -> tm.listBucketFiles(b).toSet).toMap
-    val counts = scala.collection.mutable.Map.empty[Int, Long]
     if (n > 0) {
       // frozen tokenizer artifacts from the base run
       val merges = CorpusMain.readStage(spark, outDir, "bpe_merges")
         .orderBy($"rank").select($"l", $"r").as[(String, String)].collect().toSeq
       val vocab = CorpusMain.readStage(spark, outDir, "vocab")
 
+      // checkpoint before write: the shards feed their own write AND the
+      // sequences — without this the tokenization DAG (the expensive
+      // stage) would replay once per action
       val packed = ops.Sampling.packShards(fresh, "doc_id", "domain",
           ops.Bpe.bpeTokenCount($"text", merges).cast("bigint"), budget)
         .withColumn("pack_window", lit(cHead.id))
         .localCheckpoint()
-      // checkpoint before write: each frame feeds a write AND a count —
-      // without this the tokenization DAG (the expensive stage) would
-      // replay once per action
       val seqs = ops.Sampling.shuffleOrder(
         ops.Bpe.attachIds(
           ops.Sampling.packSequencesWithBounds(
@@ -167,20 +186,20 @@ object IncrementalCorpus {
         .parquet(s"${trainTableDir(outDir)}/data/bucket=$SequencesBucket")
       oov.coalesce(1).write.mode("append")
         .parquet(s"${trainTableDir(outDir)}/data/bucket=$OovBucket")
-      counts(ShardsBucket) = packed.count()
-      counts(SequencesBucket) = seqs.count()
-      counts(OovBucket) = oov.count()
     }
     // ONE commit: grown bucket states + the ratcheted consumed watermark.
     // A zero-row window still commits (watermark-only) so the consumer
-    // never rescans an empty window.
+    // never rescans an empty window. Row counts come from the fresh files'
+    // own footers — no count() job over the written frames.
+    val fconf = conf(spark)
     val prevStates = tm.head().map(_.buckets.map(b => b.bucket -> b).toMap)
       .getOrElse(Map.empty)
     val states = buckets.map { b =>
       val p = prevStates.get(b)
       val freshFiles = tm.listBucketFiles(b).filterNot(pre(b))
       Manifest.BucketState(b,
-        p.map(_.rows).getOrElse(0L) + counts.getOrElse(b, 0L), "",
+        p.map(_.rows).getOrElse(0L) +
+          freshFiles.map(f => Manifest.footerRowCount(fconf, f)).sum, "",
         p.map(_.files).getOrElse(Nil) ++ freshFiles)
     }
     tm.commit(s"pack-window-${cHead.id}", states,

@@ -150,8 +150,12 @@ object Cleaning {
     * HOF lambdas, so an expensive array expression referenced inside a
     * `filter`/`transform` lambda is otherwise RE-EVALUATED on every element
     * — turning the O(L²) n-gram statistics above into O(L³) per row. The
-    * lambda variable is a bound value; referencing it costs nothing. */
-  private[ops] def bindOnce(value: Column)(body: Column => Column): Column =
+    * lambda variable is a bound value; referencing it costs nothing. The
+    * same binding keeps a predicate from inlining an aliased column at
+    * every reference when the optimizer pushes it through the projection
+    * that defines the alias ([[graft.CorpusPrep.cleanGate]]), which is
+    * why it is visible outside `ops`. */
+  private[graft] def bindOnce(value: Column)(body: Column => Column): Column =
     element_at(transform(array(value), v => body(v)), 1)
 
   /** Count of the most frequent element of an array column — pure Column

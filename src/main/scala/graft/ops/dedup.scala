@@ -260,22 +260,35 @@ object Dedup {
     * to the corpus text. Select `band <= 0` for the one-row-per-doc hash
     * table, `band >= 0` for the banded signature table.
     *
-    * The index of newly admitted delta rows is `buildIndex(admitted, ...)`
-    * with the SAME (k, bands) — append it to keep the index in lockstep
-    * with the corpus. */
+    * ONE pass per document: a single posexplode over the band hashes, or
+    * over one null hash when the signature is too short (band hashes are
+    * md5 digests, never null, so a null hash marks exactly the short row).
+    * No filter sits above the signature projection, so none can be pushed
+    * into it and re-derive the signature per predicate.
+    *
+    * Rows are a per-document, deterministic function of (id, text), so the
+    * index of admitted delta rows is the delta's index semi-joined to the
+    * admitted ids ([[IncrementalOutcome.deltaIndex]]), built with the SAME
+    * (k, bands) — append it to keep the index in lockstep with the
+    * corpus. */
   def buildIndex(corpus: DataFrame, idCol: String, textCol: String,
       k: Int = 8, bands: Int = 4): DataFrame = {
     require(bands >= 1, s"bands must be >= 1, got $bands")
-    val sigs = minhashSignatures(corpus, textCol, k)
-      .select(col(idCol), md5(col(textCol)).as("h"), col("sig"))
-    val banded = sigs.where(size(col("sig")) >= bands)
+    val hashes = when(size(col("sig")) >= bands, expr(bandHashExpr(bands)))
+      .otherwise(array(lit(null).cast("string")))
+    minhashSignatures(corpus, textCol, k)
+      .select(col(idCol), md5(col(textCol)).as("h"),
+        posexplode(hashes).as(Seq("__pos", "bandhash")))
       .select(col(idCol), col("h"),
-        posexplode(expr(bandHashExpr(bands))).as(Seq("band", "bandhash")))
-    val short = sigs.where(size(col("sig")) < bands)
-      .select(col(idCol), col("h"),
-        lit(-1).as("band"), lit(null).cast("string").as("bandhash"))
-    banded.unionByName(short)
+        when(col("bandhash").isNull, lit(-1)).otherwise(col("__pos")).as("band"),
+        col("bandhash"))
   }
+
+  /** The banded rows of a [[buildIndex]] relation, keyed `__id` as the
+    * candidate joins expect. */
+  private def indexBands(index: DataFrame, idCol: String): DataFrame =
+    index.where(col("band") >= 0)
+      .select(col(idCol).as("__id"), col("band"), col("bandhash"))
 
   /** Incremental dedup — the daily-crawl-increment pattern: admit only the
     * delta rows that survive dedup against an ALREADY-DEDUPED, immutable
@@ -366,9 +379,15 @@ object Dedup {
     *    DIRECT near-dup reason (corpus Jaccard match, or within-delta
     *    cluster loser) — `count(exactSurvivors) − count(admitted) −
     *    count(directDrops)` is therefore the POISONED count (members
-    *    dropped only because a clustermate matched the corpus). */
+    *    dropped only because a clustermate matched the corpus);
+    *  - `deltaIndex`: the [[buildIndex]] rows of `exactSurvivors`, built
+    *    once for the LSH pass. `admitted` ⊆ `exactSurvivors` and the rows
+    *    are per-document, so this relation semi-joined to the admitted ids
+    *    IS `buildIndex(admitted)` — the commit appends it instead of
+    *    signaturing the admitted rows a second time. */
   private[graft] final case class IncrementalOutcome(
-      admitted: DataFrame, exactSurvivors: DataFrame, directDrops: DataFrame)
+      admitted: DataFrame, exactSurvivors: DataFrame, directDrops: DataFrame,
+      deltaIndex: DataFrame)
 
   private[graft] def incrementalDedupIndexedOutcome(delta: DataFrame,
       corpus: DataFrame, index: DataFrame, idCol: String, textCol: String,
@@ -385,12 +404,12 @@ object Dedup {
     val deltaE = mat(exactDedup(delta, idCol, textCol)
       .join(index.where(col("band") <= 0).select(col("h").as("__ch")),
         md5(col(textCol)) === col("__ch"), "left_anti"))
-    // 2. delta banded signatures; corpus side comes from the index; guard
-    // on the UNION bucket size
-    val dBand = mat(bandedSignatures(
-      minhashSignatures(deltaE, textCol, k).select(col(idCol), col("sig")), idCol, bands))
-    val cBand = index.where(col("band") >= 0)
-      .select(col(idCol).as("__id"), col("band"), col("bandhash"))
+    // 2. the delta's own index rows, built ONCE: its banded rows drive the
+    // LSH pass here and the admitted subset is what the commit appends;
+    // corpus side comes from the index; guard on the UNION bucket size
+    val deltaIndex = mat(buildIndex(deltaE, idCol, textCol, k, bands))
+    val dBand = indexBands(deltaIndex, idCol)
+    val cBand = indexBands(index, idCol)
     // the guard is DELTA-DRIVEN: only buckets the delta actually touches
     // can produce candidates (an untouched corpus bucket joins nothing in
     // `across` and nothing within-delta), so the union count is a LEFT
@@ -467,7 +486,7 @@ object Dedup {
       .distinct()
     IncrementalOutcome(
       deltaE.join(clusterDrops, deltaE(idCol) === col("__drop"), "left_anti"),
-      deltaE, directDrops)
+      deltaE, directDrops, deltaIndex)
   }
 
   /** 60-bit SimHash per row: explode words, md5→60-bit int, per-bit signed

@@ -573,12 +573,18 @@ object EventStream {
       _.buckets.filter(_.bucket < corpusBuckets).map(_.rows).sum == 0L)
     val outcome = admissionOutcome(spark, batch, table, bootstrap,
       idCol, textCol, threshold, k, bands, corpusBuckets)
-    // admitted feeds three consumers (corpus write, index build, stats) —
+    // admitted feeds three consumers (corpus write, index rows, stats) —
     // lazily checkpointed: compute-once caching, materialized by the
     // first consuming job below instead of an eager job of its own
     val admitted = outcome.admitted.localCheckpoint(eager = false)
-    val idxDelta = graft.ops.Dedup.buildIndex(admitted, idCol, textCol, k, bands)
-      .localCheckpoint(eager = false)
+    // the admitted rows' index rows were already built for the LSH pass:
+    // buildIndex is per-row and admitted ⊆ exactSurvivors, so the semi
+    // join IS buildIndex(admitted) without a second signature pass
+    // (null-safe: an admitted null id keeps its index rows, as before).
+    // The ids are batch-bounded: broadcast them so the join shuffles nothing
+    val idxDelta = outcome.deltaIndex.join(
+      broadcast(admitted.select(col(idCol).as("__aid"))),
+      outcome.deltaIndex(idCol) <=> col("__aid"), "left_semi")
 
     val ixBucket = indexBucketFor(corpusBuckets)
     val mBucket = metricsBucketFor(corpusBuckets)

@@ -605,4 +605,71 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("SortExec"),
       s"no global sort may survive beside the top-k:\n${p.take(800)}")
   }
+
+  private def occurrences(plan: String, term: String): Int =
+    plan.sliding(term.length).count(_ == term)
+
+  /** Optimized plans of the frames `body` pins with localCheckpoint, in
+    * pin order (a lazy pin plans its frame as it is called). */
+  private def pinnedPlans(body: => Unit): Seq[String] = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (f == "localCheckpoint") seen.add(qe.optimizedPlan.toString)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    org.apache.spark.TestBus.drain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      body
+      org.apache.spark.TestBus.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    scala.jdk.CollectionConverters.IteratorHasAsScala(seen.iterator()).asScala.toSeq
+  }
+
+  test("cleanGate carries one redaction in its filter over a texts table") {
+    // a filter over the redefined text/w columns was pushed through their
+    // projection with the alias inlined at every reference: 87 copies of
+    // the redaction's regexp_replace over a plain texts table
+    import spark.implicits._
+    val texts = spark.read.parquet(s"$dir/documents.parquet")
+      .where($"doc_id" < 40).select($"doc_id", $"text")
+    val p = CorpusPrep.cleanGate(texts).queryExecution.optimizedPlan.toString
+    val n = occurrences(p, "regexp_replace(")
+    assert(n >= 3 && n <= 6, s"$n copies of regexp_replace:\n${p.take(1500)}")
+  }
+
+  test("buildIndex derives each signature once (no filter pushed into the signature projection)") {
+    // the banded and short branches each filtered on size(sig); pushed
+    // through the signature projection, every predicate inlined its own
+    // copy of the shingle builder (19 in the executed plan)
+    import spark.implicits._
+    val docs = spark.read.parquet(s"$dir/documents.parquet")
+      .where($"doc_id" < 40).select($"doc_id", $"text")
+    val p = ops.Dedup.buildIndex(docs, "doc_id", "text").queryExecution.executedPlan.toString
+    val (shingle, salt0) = ("concat_ws( , ", "md5(cast(concat(0:, ")
+    assert(occurrences(p, shingle) == 1, s"shingle builder copies:\n${p.take(1500)}")
+    assert(occurrences(p, salt0) == 1, s"salt-0 signature term copies:\n${p.take(1500)}")
+  }
+
+  test("the admission front end pins the extracted texts with one extract_spans, parquet or local input") {
+    // with one pin over the whole gate chain, its filters were pushed into
+    // the extraction projection: 90 copies of extract_spans over parquet,
+    // 3 over a repartitioned local Dataset (pushed through the repartition
+    // onto the local relation, where the optimizer evaluates on the driver)
+    import spark.implicits._
+    val docs = (0L until 40L).map(DocGen.docFor)
+    val tmp = java.nio.file.Files.createTempDirectory("graft_front_").toString
+    spark.createDataset(docs).toDF().write.mode("overwrite").parquet(tmp)
+    val inputs = Seq(
+      "parquet" -> spark.read.parquet(tmp),
+      "local" -> spark.createDataset(docs).repartition(4).toDF())
+    val copies = inputs.map { case (kind, raw) =>
+      val pins = pinnedPlans { IncrementalCorpus.gateIncrement(raw) }
+      kind -> pins.headOption.map(occurrences(_, "extract_spans(")).getOrElse(0)
+    }
+    assert(copies.forall(_._2 == 1), s"extract_spans in the first pinned frame: $copies")
+  }
 }

@@ -1322,4 +1322,57 @@ class StreamingSpec extends AnyFunSuite {
     assert(metricsRows(2).length == 3)
     intercept[IllegalArgumentException](corpusIds(4))
   }
+
+  test("admission commits the delta's own index rows: equal to buildIndex over the admitted corpus rows") {
+    import org.apache.spark.sql.functions._
+    val base = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+      .select($"doc_id", $"text")
+    val tbl = Files.createTempDirectory("graft_ixrows_tbl_").toString + "/t"
+    streaming.EventStream.admitIndexedBatch(base.where($"doc_id" < 40), 0L,
+      tbl, "ixrows-stream", "doc_id", "text", 0.7, 8, 4, corpusBuckets = 2)
+    val before = streaming.EventStream.readCorpus(spark, tbl, 2)
+      .select($"doc_id").as[Long].collect().toSet
+    // fresh docs, exact re-crawls, near re-crawls and docs too short to band
+    val batch = base.where($"doc_id" >= 40 && $"doc_id" < 60)
+      .union(base.where($"doc_id" < 5).select(($"doc_id" + 5000).as("doc_id"), $"text"))
+      .union(base.where($"doc_id" >= 5 && $"doc_id" < 10)
+        .select(($"doc_id" + 9000).as("doc_id"), concat($"text", lit(" zz")).as("text")))
+      .union(Seq((8000L, "two words"), (8001L, "one")).toDF("doc_id", "text"))
+      .localCheckpoint()
+
+    // the same admission as plain lineage (no pins), evaluated before the
+    // commit: what the committed metrics and rows must agree with
+    val m = new Manifest(tbl, spark.sessionState.newHadoopConf())
+    val lineage = streaming.EventStream.admissionOutcome(spark, batch, m,
+      bootstrap = false, "doc_id", "text", 0.7, 8, 4, 2, materialize = false)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select($"doc_id", $"h", $"band", $"bandhash")
+        .as[(Long, String, Int, Option[String])].collect().toSeq.sorted
+    assert(rows(lineage.deltaIndex) ==
+      rows(ops.Dedup.buildIndex(lineage.exactSurvivors, "doc_id", "text")))
+    val expAdmitted = lineage.admitted.select($"doc_id").as[Long].collect().toSet
+    val (nInput, nExact, nDirect) =
+      (batch.count(), lineage.exactSurvivors.count(), lineage.directDrops.count())
+    assert(nInput > nExact && nDirect > 0, "the batch must exercise both passes")
+
+    streaming.EventStream.admitIndexedBatch(batch, 1L,
+      tbl, "ixrows-stream", "doc_id", "text", 0.7, 8, 4, corpusBuckets = 2)
+    val corpus = streaming.EventStream.readCorpus(spark, tbl, 2)
+    val index = streaming.EventStream.readIndex(spark, tbl, 2)
+    // every committed index row (bootstrap and increment) is exactly
+    // buildIndex of the committed corpus rows, duplicates included
+    assert(rows(index) == rows(ops.Dedup.buildIndex(corpus, "doc_id", "text")))
+    val admitted = corpus.select($"doc_id").as[Long].collect().toSet -- before
+    assert(admitted == expAdmitted)
+    assert(admitted.contains(8000L) &&
+      rows(index.where($"doc_id" === 8000L)).map(_._3) == Seq(-1),
+      "a doc too short to band keeps its one band -1 hash row")
+
+    val mx = streaming.EventStream.readAdmissionMetrics(spark, tbl, 2)
+      .where($"batch_id" === 1L)
+      .select($"input_rows", $"admitted", $"exact_dropped", $"near_dropped", $"poisoned")
+      .as[(Long, Long, Long, Long, Long)].collect().toSeq
+    assert(mx == Seq((nInput, expAdmitted.size.toLong, nInput - nExact, nDirect,
+      nExact - expAdmitted.size - nDirect)))
+  }
 }
