@@ -132,9 +132,10 @@ object CorpusMain {
             .coalesce(1).write.mode("append").parquet(s"$tdir/data/bucket=0")
           files = m.listBucketFiles(0).filterNot(pre)
         }
-        // row count from the WRITTEN files (parquet footers — no recompute
-        // of the stage lineage), recorded once in the commit
-        val n = spark.read.parquet(files: _*).count()
+        // row count from the WRITTEN files' footers (no recompute of the
+        // stage lineage, no Spark job), recorded once in the commit
+        val conf = spark.sessionState.newHadoopConf()
+        val n = files.map(f => Manifest.footerRowCount(conf, f)).sum
         m.commit(runIdOf(name), Seq(Manifest.BucketState(0, n, "", files)))
       }
       rows(name) = snap.buckets.headOption.map(_.rows).getOrElse(0L)

@@ -93,11 +93,13 @@ object IncrementalCorpus {
         "(an increment admitted before bootstrap would mute the seed batch)")
     val gated = gateIncrement(raw.toDF())
     val holdout = CorpusMain.readStage(spark, outDir, "eval_holdout")
+    // pinned lazily: the admission's input count and its exact pass both
+    // read it, and the first to run materializes it for the other
     val admissible = gated.join(
       ops.Cleaning.decontaminate(gated, holdout, "doc_id", "text",
           k = HoldoutDeconK)
         .where(col("keep") === 1).select(col("doc_id")),
-      "doc_id")
+      "doc_id").localCheckpoint(eager = false)
     streaming.EventStream.admitIndexedBatch(admissible, batchId,
       corpusTableDir(outDir), StreamId, "doc_id", "text", 0.8, 8, 4,
       layoutOf(spark, outDir))
@@ -176,9 +178,9 @@ object IncrementalCorpus {
             "doc_id", Seq("pack_window", "domain", "shard"), $"toks", seqLen),
           "toks", vocab),
         Seq($"pack_window", $"domain", $"shard", $"seq"),
-        salt = s"w${cHead.id}", nParts = nParts).localCheckpoint()
+        salt = s"w${cHead.id}", nParts = nParts)
       val oov = ops.Bpe.oovStats(fresh, "domain", "text", merges, vocab)
-        .withColumn("pack_window", lit(cHead.id)).localCheckpoint()
+        .withColumn("pack_window", lit(cHead.id))
 
       packed.write.mode("append")
         .parquet(s"${trainTableDir(outDir)}/data/bucket=$ShardsBucket")

@@ -5,6 +5,8 @@ import java.nio.charset.StandardCharsets
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.NullableSchema
+import org.apache.spark.sql.types.StructType
 import scala.jdk.CollectionConverters._
 
 /** Snapshot manifest — the Iceberg-emulation layer (SURVEY.md §7.4).
@@ -99,15 +101,10 @@ object Manifest {
     * stats to ASCII makes pruning safe for arbitrary ingested ids — a
     * non-ASCII-keyed file simply stays always-planned. An absent stat
     * only disables pruning for that file, never mis-prunes. */
-  def footerIdRange(conf: Configuration, file: String, idCol: String): Option[(String, String)] = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    import org.apache.parquet.io.api.Binary
-    val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(file), conf))
-    try {
-      val blocks = r.getFooter.getBlocks.asScala.toSeq
-      if (blocks.isEmpty) return None
-      val ranges = blocks.map { b =>
+  def footerIdRange(conf: Configuration, file: String, idCol: String): Option[(String, String)] =
+    withFooter(conf, file) { footer =>
+      import org.apache.parquet.io.api.Binary
+      val ranges = footer.getBlocks.asScala.toSeq.map { b =>
         b.getColumns.asScala.find(_.getPath.toDotString == idCol).flatMap { c =>
           val st = c.getStatistics
           if (st == null || st.isEmpty || !st.hasNonNullValue) None
@@ -122,21 +119,39 @@ object Manifest {
       }
       // one statless row group means the file may hold ids outside the
       // visible range — record nothing rather than an understated bound
-      if (ranges.exists(_.isEmpty)) None
+      if (ranges.isEmpty || ranges.exists(_.isEmpty)) None
       else Some((ranges.flatten.map(_._1).min, ranges.flatten.map(_._2).max))
-    } finally r.close()
-  }
+    }
 
   /** Exact row count of one parquet file from its footer — no data pages
     * are read. The metadata-plane replacement for a count() job over
     * freshly WRITTEN files: the writer's own footers already carry the
     * row counts. */
-  def footerRowCount(conf: Configuration, file: String): Long = {
+  def footerRowCount(conf: Configuration, file: String): Long =
+    withFooter(conf, file)(_.getBlocks.asScala.map(_.getRowCount).sum)
+
+  /** Spark schema of one parquet file, read from its footer on the driver
+    * — no Spark job. It is exactly what `spark.read.parquet(file).schema`
+    * infers: the same conversion Spark's inference task runs
+    * (`ParquetFileFormat.readSchemaFromFooter`, the writer's recorded
+    * Spark schema when present), in the all-nullable form a file source
+    * reports. */
+  def footerSchema(spark: SparkSession, file: String): StructType = {
+    import org.apache.parquet.hadoop.Footer
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetFileFormat, ParquetToSparkSchemaConverter}
+    val footer = withFooter(spark.sessionState.newHadoopConf(), file)(identity)
+    NullableSchema(ParquetFileFormat.readSchemaFromFooter(
+      new Footer(new Path(file), footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf)))
+  }
+
+  private def withFooter[T](conf: Configuration, file: String)(
+      f: org.apache.parquet.hadoop.metadata.ParquetMetadata => T): T = {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
     val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(file), conf))
-    try r.getFooter.getBlocks.asScala.map(_.getRowCount).sum
-    finally r.close()
+    try f(r.getFooter) finally r.close()
   }
 
   /** Per-file id zone maps for a commit, computed EXECUTOR-SIDE: one footer
@@ -284,7 +299,12 @@ final class Manifest(tableDir: String, conf: Configuration = new Configuration()
     * the scan may still return rows outside the range (a planned file
     * covers more than the range) and the CALLER applies its row-level
     * predicate as usual; what pruning guarantees is that no row INSIDE
-    * the range is lost. */
+    * the range is lost.
+    *
+    * PLANNING COST: building the frame starts no Spark job — the file
+    * list comes from the snapshot and the schema from one footer read on
+    * the driver ([[readFiles]]). A `mergeSchema = true` read keeps Spark's
+    * footer-merge job: it must read every planned file's footer. */
   def readData(spark: SparkSession, buckets: Option[Set[Int]] = None,
       asOf: Option[Int] = None, mergeSchema: Boolean = false,
       idRange: Option[(String, String)] = None): DataFrame = {
@@ -308,9 +328,8 @@ final class Manifest(tableDir: String, conf: Configuration = new Configuration()
         .flatMap(_.files)
       val cand = if (sel.nonEmpty) sel else snap.buckets.flatMap(_.files)
       require(cand.nonEmpty, s"snapshot ${snap.id} has no data files")
-      spark.read.option("basePath", dataDir.toString)
-        .option("mergeSchema", mergeSchema.toString)
-        .parquet(cand.head).where(org.apache.spark.sql.functions.lit(false))
+      readFiles(spark, Seq(cand.head), mergeSchema)
+        .where(org.apache.spark.sql.functions.lit(false))
     }
   }
 
@@ -318,12 +337,20 @@ final class Manifest(tableDir: String, conf: Configuration = new Configuration()
     * planned — zone-map pruned, bucket-selected, or hit-located). The
     * table's `basePath` is set so the `bucket` partition column
     * materializes exactly as in [[readData]]. The caller owns the claim
-    * that the files belong to a live snapshot. */
+    * that the files belong to a live snapshot.
+    *
+    * An unmerged read plans without a Spark job: its schema is
+    * [[Manifest.footerSchema]] of the first file in path order — the file
+    * Spark's own inference would open (it sorts the listed files by path
+    * and reads the first footer, in a one-task job). `mergeSchema = true`
+    * leaves inference to Spark, whose merge job reads every file's
+    * footer. */
   def readFiles(spark: SparkSession, files: Seq[String],
       mergeSchema: Boolean = false): DataFrame = {
     require(files.nonEmpty, "readFiles needs at least one file")
-    spark.read.option("basePath", dataDir.toString)
+    val reader = spark.read.option("basePath", dataDir.toString)
       .option("mergeSchema", mergeSchema.toString)
+    (if (mergeSchema) reader else reader.schema(footerSchema(spark, files.min)))
       .parquet(files: _*)
   }
 

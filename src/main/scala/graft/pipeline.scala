@@ -322,7 +322,7 @@ object ExtractJob {
       files: Seq[String]): Map[Int, BucketStat] = {
     import spark.implicits._
     if (files.isEmpty) Map.empty
-    else spark.read.option("basePath", s"$tableDir/data").parquet(files: _*)
+    else new Manifest(tableDir, spark.sessionState.newHadoopConf()).readFiles(spark, files)
       .groupBy($"bucket")
       .agg(count("*").as("docs"),
         sum($"spans_in").as("spans_in"),
@@ -410,8 +410,8 @@ object ExtractJob {
     // fail FAST on mixed schemas: one combined scan over buckets that
     // namespace different relations would silently null-fill one side and
     // commit the corruption (then GC deletes the originals). One footer
-    // read per fat bucket; a doc comment is not a guard.
-    val schemas = fat.map(b => b.bucket -> spark.read.parquet(b.files.head).schema)
+    // read per fat bucket, on the driver; a doc comment is not a guard.
+    val schemas = fat.map(b => b.bucket -> Manifest.footerSchema(spark, b.files.head))
     require(schemas.map(_._2).distinct.size <= 1,
       s"compact: buckets ${schemas.map(_._1).mkString(",")} carry different " +
         "schemas — compact each namespace separately via only=Some(...)")
@@ -525,10 +525,10 @@ object ExtractJob {
     // materializes it, later ones hit the cache)
     val keySet = keys.select(col(keyCol)).distinct().localCheckpoint(eager = false)
 
-    // one footer read per bucket; buckets without keyCol hold no
-    // per-document rows and are skipped, the rest group by schema so each
-    // group is one homogeneous scan (same guard rationale as compact)
-    val schemas = sel.map(b => b -> spark.read.parquet(b.files.head).schema)
+    // one footer read per bucket, on the driver; buckets without keyCol
+    // hold no per-document rows and are skipped, the rest group by schema
+    // so each group is one homogeneous scan (same guard rationale as compact)
+    val schemas = sel.map(b => b -> Manifest.footerSchema(spark, b.files.head))
     val keyed = schemas.filter(_._2.fieldNames.contains(keyCol))
     val groups = keyed.groupBy(_._2).values.map(_.map(_._1)).toSeq
 

@@ -23,6 +23,7 @@ It only reads the files; nothing under perfbench/ changes.
 """
 import json
 import re
+import signal
 import sys
 
 SITE_FILE = re.compile(r" at ([A-Za-z0-9_$]+)\.(scala|java):\d+")
@@ -94,4 +95,7 @@ def main():
 
 
 if __name__ == "__main__":
+    # a closed pipe (`| head`) ends the output quietly, as for other
+    # command-line tools, instead of a BrokenPipeError traceback
+    signal.signal(signal.SIGPIPE, signal.SIG_DFL)
     main()
