@@ -25,11 +25,11 @@ class ManifestReadSpec extends AnyFunSuite {
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
     }
-    org.apache.spark.TestBus.drain(spark.sparkContext)
+    org.apache.spark.GraftBus.drain(spark.sparkContext)
     spark.sparkContext.addSparkListener(listener)
     try {
       val out = body
-      org.apache.spark.TestBus.drain(spark.sparkContext)
+      org.apache.spark.GraftBus.drain(spark.sparkContext)
       (out, jobs.get())
     } finally spark.sparkContext.removeSparkListener(listener)
   }

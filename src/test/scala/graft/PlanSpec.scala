@@ -620,11 +620,11 @@ class PlanSpec extends AnyFunSuite {
         if (f == "localCheckpoint") seen.add(qe.optimizedPlan.toString)
       def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
-    org.apache.spark.TestBus.drain(spark.sparkContext)
+    org.apache.spark.GraftBus.drain(spark.sparkContext)
     spark.listenerManager.register(listener)
     try {
       body
-      org.apache.spark.TestBus.drain(spark.sparkContext)
+      org.apache.spark.GraftBus.drain(spark.sparkContext)
     } finally spark.listenerManager.unregister(listener)
     scala.jdk.CollectionConverters.IteratorHasAsScala(seen.iterator()).asScala.toSeq
   }
