@@ -119,24 +119,22 @@ object CorpusMain {
       val snap = m.head().filter(_.runId == runIdOf(name)).getOrElse {
         computed += name
         val df = compute
-        val pre = m.listBucketFiles(0).toSet
-        df.write.mode("append").parquet(s"$tdir/data/bucket=0")
+        def written(out: DataFrame): Manifest.Txn = {
+          val tx = m.txn(spark, Seq(0))
+          out.write.mode("append").parquet(s"$tdir/data/bucket=0")
+          tx
+        }
+        val first = written(df)
         if (failAt.contains(name))
           throw new IllegalStateException(s"injected crash at stage $name")
-        var files = m.listBucketFiles(0).filterNot(pre)
-        if (files.isEmpty) {
-          // an empty result can write zero part files; the manifest read
-          // needs at least one file to carry the schema
-          spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], df.schema)
-            .coalesce(1).write.mode("append").parquet(s"$tdir/data/bucket=0")
-          files = m.listBucketFiles(0).filterNot(pre)
-        }
-        // row count from the WRITTEN files' footers (no recompute of the
-        // stage lineage, no Spark job), recorded once in the commit
-        val conf = spark.sessionState.newHadoopConf()
-        val n = files.map(f => Manifest.footerRowCount(conf, f)).sum
-        m.commit(runIdOf(name), Seq(Manifest.BucketState(0, n, "", files)))
+        // an empty result can write zero part files; the manifest read
+        // needs at least one file to carry the schema
+        val tx = if (first.fresh(0).nonEmpty) first else written(spark.createDataFrame(
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], df.schema).coalesce(1))
+        // the row count comes from the WRITTEN files' footers (no
+        // recompute of the stage lineage, no Spark job)
+        tx.replace(0, "")
+        tx.commit(runIdOf(name))
       }
       rows(name) = snap.buckets.headOption.map(_.rows).getOrElse(0L)
       m.readData(spark, Some(Set(0))).drop("bucket")

@@ -157,7 +157,7 @@ object IncrementalCorpus {
     val n = fresh.count()
 
     val buckets = Seq(ShardsBucket, SequencesBucket, OovBucket)
-    val pre = buckets.map(b => b -> tm.listBucketFiles(b).toSet).toMap
+    val tx = tm.txn(spark, buckets)
     if (n > 0) {
       // frozen tokenizer artifacts from the base run
       val merges = CorpusMain.readStage(spark, outDir, "bpe_merges")
@@ -193,18 +193,8 @@ object IncrementalCorpus {
     // A zero-row window still commits (watermark-only) so the consumer
     // never rescans an empty window. Row counts come from the fresh files'
     // own footers — no count() job over the written frames.
-    val fconf = conf(spark)
-    val prevStates = tm.head().map(_.buckets.map(b => b.bucket -> b).toMap)
-      .getOrElse(Map.empty)
-    val states = buckets.map { b =>
-      val p = prevStates.get(b)
-      val freshFiles = tm.listBucketFiles(b).filterNot(pre(b))
-      Manifest.BucketState(b,
-        p.map(_.rows).getOrElse(0L) +
-          freshFiles.map(f => Manifest.footerRowCount(fconf, f)).sum, "",
-        p.map(_.files).getOrElse(Nil) ++ freshFiles)
-    }
-    tm.commit(s"pack-window-${cHead.id}", states,
+    buckets.foreach(tx.append(_, ""))
+    tx.commit(s"pack-window-${cHead.id}",
       streamWatermark = Some((ConsumedKey, cHead.id.toLong)))
     n
   }

@@ -7,6 +7,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.graft.NullableSchema
 import org.apache.spark.sql.types.StructType
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 /** Snapshot manifest — the Iceberg-emulation layer (SURVEY.md §7.4).
@@ -26,6 +27,12 @@ import scala.jdk.CollectionConverters._
   * from `tableDir`, so the same code works on file://, hdfs:// and s3a://
   * (the spark-submit multi-executor deployment this targets) — never
   * java.nio against the driver's local disk.
+  *
+  * Writers: every write-then-commit goes through one [[Manifest.Txn]] —
+  * open it over the buckets about to be written (one listing), write,
+  * stage each bucket as an `append` or a `replace`, commit. The Txn is the
+  * only place that diffs listings, reads the fresh files' footers (row
+  * counts + doc_id zone maps) and calls [[Manifest.commit]].
   *
   * Commit protocol: write `snap-<n+1>.json`, write `.HEAD.tmp.<n+1>`, then
   * swap it over HEAD via rename. HDFS rename is atomic but refuses an
@@ -102,33 +109,38 @@ object Manifest {
     * non-ASCII-keyed file simply stays always-planned. An absent stat
     * only disables pruning for that file, never mis-prunes. */
   def footerIdRange(conf: Configuration, file: String, idCol: String): Option[(String, String)] =
-    withFooter(conf, file) { footer =>
-      import org.apache.parquet.io.api.Binary
-      val ranges = footer.getBlocks.asScala.toSeq.map { b =>
-        b.getColumns.asScala.find(_.getPath.toDotString == idCol).flatMap { c =>
-          val st = c.getStatistics
-          if (st == null || st.isEmpty || !st.hasNonNullValue) None
-          else (st.genericGetMin, st.genericGetMax) match {
-            case (mn: Binary, mx: Binary) =>
-              val (lo, hi) = (mn.toStringUsingUTF8, mx.toStringUsingUTF8)
-              if (lo.forall(_ < 0x80) && hi.forall(_ < 0x80)) Some((lo, hi))
-              else None // non-ASCII bound: String vs UTF-8 order may diverge
-            case _ => None
-          }
+    withFooter(conf, file)(idRange(_, idCol))
+
+  private def idRange(footer: org.apache.parquet.hadoop.metadata.ParquetMetadata,
+      idCol: String): Option[(String, String)] = {
+    import org.apache.parquet.io.api.Binary
+    val ranges = footer.getBlocks.asScala.toSeq.map { b =>
+      b.getColumns.asScala.find(_.getPath.toDotString == idCol).flatMap { c =>
+        val st = c.getStatistics
+        if (st == null || st.isEmpty || !st.hasNonNullValue) None
+        else (st.genericGetMin, st.genericGetMax) match {
+          case (mn: Binary, mx: Binary) =>
+            val (lo, hi) = (mn.toStringUsingUTF8, mx.toStringUsingUTF8)
+            if (lo.forall(_ < 0x80) && hi.forall(_ < 0x80)) Some((lo, hi))
+            else None // non-ASCII bound: String vs UTF-8 order may diverge
+          case _ => None
         }
       }
-      // one statless row group means the file may hold ids outside the
-      // visible range — record nothing rather than an understated bound
-      if (ranges.isEmpty || ranges.exists(_.isEmpty)) None
-      else Some((ranges.flatten.map(_._1).min, ranges.flatten.map(_._2).max))
     }
+    // one statless row group means the file may hold ids outside the
+    // visible range — record nothing rather than an understated bound
+    if (ranges.isEmpty || ranges.exists(_.isEmpty)) None
+    else Some((ranges.flatten.map(_._1).min, ranges.flatten.map(_._2).max))
+  }
 
-  /** Exact row count of one parquet file from its footer — no data pages
-    * are read. The metadata-plane replacement for a count() job over
-    * freshly WRITTEN files: the writer's own footers already carry the
-    * row counts. */
-  def footerRowCount(conf: Configuration, file: String): Long =
-    withFooter(conf, file)(_.getBlocks.asScala.map(_.getRowCount).sum)
+  /** Exact row count and [[ZoneMapCol]] zone map of one parquet file, from
+    * ONE footer read — no data pages are read. The writer's own footers
+    * already carry both, so a commit needs no count() job. */
+  private def footerFacts(conf: Configuration, file: String): (Long, Option[FileStat]) =
+    withFooter(conf, file) { f =>
+      (f.getBlocks.asScala.map(_.getRowCount).sum,
+        idRange(f, ZoneMapCol).map { case (lo, hi) => FileStat(file, lo, hi) })
+    }
 
   /** Spark schema of one parquet file, read from its footer on the driver
     * — no Spark job. It is exactly what `spark.read.parquet(file).schema`
@@ -154,33 +166,106 @@ object Manifest {
     try f(r.getFooter) finally r.close()
   }
 
-  /** Per-file id zone maps for a commit, computed EXECUTOR-SIDE: one footer
-    * read per file, fanned out as a metadata-plane Spark job (at a 100 TB
-    * commit the file list is tens of thousands of entries — a driver-side
-    * loop would serialize on remote-footer latency). The collected result
-    * is one small tuple per file: manifest-sized by construction. */
-  def fileIdStats(spark: SparkSession, files: Seq[String], idCol: String): Seq[FileStat] = {
-    if (files.isEmpty) return Nil
+  /** [[footerFacts]] of every file of a commit. The collected result is
+    * one small tuple per file: manifest-sized by construction. */
+  private def fileFooters(spark: SparkSession,
+      files: Seq[String]): Map[String, (Long, Option[FileStat])] = {
+    if (files.isEmpty) return Map.empty
     // SMALL commits (the common steady-state micro-batch / compaction of a
     // few buckets) read their footers straight from the driver over a
     // small thread pool — a Spark job would cost a scheduling round trip
     // per commit for a handful of metadata reads. Large commits (tens of
-    // thousands of files at a 100 TB backfill) still fan out as a
-    // metadata-plane job so remote-footer latency is paid in parallel
-    // across executors, not serialized on the driver.
+    // thousands of files at a 100 TB backfill) fan out as a metadata-plane
+    // job so remote-footer latency is paid in parallel across executors,
+    // not serialized on the driver.
     if (files.length <= 32) {
       val conf = spark.sessionState.newHadoopConf()
-      Par.par(files.map(f => () => f -> footerIdRange(conf, f, idCol)))
-        .collect { case (f, Some((mn, mx))) => FileStat(f, mn, mx) }
-        .sortBy(_.file)
+      Par.par(files.map(f => () => f -> footerFacts(conf, f))).toMap
     } else {
       val bc = spark.sparkContext.broadcast(
         new SerConf(spark.sessionState.newHadoopConf()))
       spark.sparkContext.parallelize(files, math.max(1, math.min(files.length, 64)))
-        .map(f => f -> footerIdRange(bc.value.value, f, idCol))
-        .collect().toSeq
-        .collect { case (f, Some((mn, mx))) => FileStat(f, mn, mx) }
-        .sortBy(_.file)
+        .map(f => f -> footerFacts(bc.value.value, f))
+        .collect().toMap
+    }
+  }
+
+  /** One write-then-commit of a [[Manifest]] table (Iceberg's transaction
+    * API: stage appends and rewrites, then one commit). Opened by
+    * [[Manifest.txn]] BEFORE the write, it lists the named buckets once;
+    * the caller then writes into their directories, concurrently if it
+    * likes, and stages each bucket's new state:
+    *  - [[append]] grows the parent state by the fresh files (rows add,
+    *    the watermark takes the max, files and stats extend);
+    *  - [[replace]] sets it to the kept parent files plus the fresh files.
+    *
+    * `fresh(b)` is one listing diff per bucket, taken on first use: the
+    * files this transaction wrote, never a stale leftover of a crashed
+    * run. [[commit]] reads every staged fresh file's footer once — its
+    * row count and its [[ZoneMapCol]] zone map — and commits one
+    * snapshot. Nothing is visible before the commit: a writer that
+    * throws leaves HEAD untouched and its files as orphans
+    * [[Manifest.removeOrphans]] collects. Stage from one thread. */
+  final class Txn private[Manifest] (table: Manifest, spark: SparkSession,
+      buckets: Seq[Int]) {
+    private val parent: Map[Int, BucketState] =
+      table.head().map(_.buckets.map(b => b.bucket -> b).toMap).getOrElse(Map.empty)
+    private val before: Map[Int, Set[String]] =
+      buckets.map(b => b -> table.listBucketFiles(b).toSet).toMap
+    private val listed = mutable.Map.empty[Int, Seq[String]]
+    private val footers = mutable.Map.empty[String, (Long, Option[FileStat])]
+    private val staged = mutable.LinkedHashMap.empty[Int, () => BucketState]
+
+    /** Files this transaction wrote to `bucket` (a bucket named at open). */
+    def fresh(bucket: Int): Seq[String] = {
+      require(before.contains(bucket),
+        s"bucket $bucket was not named when the transaction opened")
+      listed.getOrElseUpdate(bucket, table.listBucketFiles(bucket).filterNot(before(bucket)))
+    }
+
+    /** Rows this transaction wrote to `bs`, from their files' footers (one
+      * read per file, shared with the commit's zone maps). */
+    def rows(bs: Seq[Int]): Long = {
+      val files = bs.flatMap(fresh)
+      footers ++= fileFooters(spark, files.filterNot(footers.contains))
+      files.map(footers(_)._1).sum
+    }
+
+    private def freshStats(bucket: Int): Seq[FileStat] = fresh(bucket).flatMap(footers(_)._2)
+
+    /** Stage `bucket` as its parent state grown by the fresh files. */
+    def append(bucket: Int, watermark: String): Unit = staged(bucket) = { () =>
+      val p = parent.getOrElse(bucket, BucketState(bucket, 0L, ""))
+      BucketState(bucket, p.rows + rows(Seq(bucket)), Seq(p.watermarkDocId, watermark).max,
+        p.files ++ fresh(bucket), p.stats ++ freshStats(bucket))
+    }
+
+    /** Stage `bucket` as exactly its fresh files (a full rewrite). */
+    def replace(bucket: Int, watermark: String): Unit =
+      staged(bucket) = () => replaced(bucket, watermark, Nil, rows(Seq(bucket)))
+
+    /** Stage `bucket` as the `kept` parent files plus the fresh files, of
+      * `rows` rows in all — a partial rewrite, whose row count only the
+      * caller knows. Kept files keep their stats verbatim. */
+    def replace(bucket: Int, watermark: String, kept: Seq[String], rows: Long): Unit =
+      staged(bucket) = () => replaced(bucket, watermark, kept, rows)
+
+    private def replaced(bucket: Int, watermark: String, kept: Seq[String],
+        rows: Long): BucketState = {
+      val keep = kept.toSet
+      val keptStats = parent.get(bucket).toSeq.flatMap(_.stats).filter(s => keep(s.file))
+      BucketState(bucket, rows, watermark, kept ++ fresh(bucket),
+        keptStats ++ freshStats(bucket))
+    }
+
+    /** Read the staged buckets' footers in one pass and commit them in one
+      * snapshot ([[Manifest.commit]]). */
+    def commit(runId: String, streamWatermark: Option[(String, Long)] = None,
+        extraWatermarks: Map[String, Long] = Map.empty,
+        overwriteWatermarks: Map[String, Long] = Map.empty): Snapshot = {
+      rows(staged.keys.toSeq) // one footer pass over every staged bucket
+      table.commit(runId, staged.values.map(_()).toSeq, streamWatermark,
+        extraWatermarks, overwriteWatermarks)
     }
   }
 
@@ -264,17 +349,6 @@ final class Manifest(tableDir: String, conf: Configuration = new Configuration()
   }
 
   /** Buckets already completed per the current snapshot (resume set). */
-  /** Run ids of every snapshot still present in meta/ — an audit surface
-    * (NOT an exactly-once guard: expireSnapshots deletes old snap files,
-    * so absence here proves nothing; the streaming guard uses the
-    * [[Snapshot.streamWatermarks]] carried forward in HEAD instead). */
-  def committedRunIds(): Set[String] = {
-    if (!fs.exists(meta)) return Set.empty
-    fs.listStatus(meta).toSeq
-      .filter(st => st.isFile && st.getPath.getName.matches("snap-\\d+\\.json"))
-      .map(st => readSnap(st.getPath).runId).toSet
-  }
-
   def completedBuckets(): Set[Int] = head().map(_.buckets.map(_.bucket).toSet).getOrElse(Set.empty)
 
   /** Manifest-planned read of the committed table: the scan's file list
@@ -380,8 +454,8 @@ final class Manifest(tableDir: String, conf: Configuration = new Configuration()
     }
   }
 
-  /** List the current parquet files of one bucket directory (used by the
-    * writer right after a bucket overwrite to record lineage). */
+  /** List the current parquet files of one bucket directory (the
+    * [[Manifest.Txn]]'s before/after listing). */
   def listBucketFiles(bucket: Int): Seq[String] = {
     val d = new Path(dataDir, s"bucket=$bucket")
     if (!fs.exists(d)) Nil
@@ -389,6 +463,9 @@ final class Manifest(tableDir: String, conf: Configuration = new Configuration()
       .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
       .map(_.getPath.toString).sorted
   }
+
+  /** Open a write-then-commit [[Manifest.Txn]] over `buckets`. */
+  def txn(spark: SparkSession, buckets: Seq[Int]): Txn = new Txn(this, spark, buckets)
 
   /** Snapshot by id (must exist on disk). */
   def snapshotById(id: Int): Snapshot = readSnap(new Path(meta, s"snap-$id.json"))
@@ -467,16 +544,6 @@ final class Manifest(tableDir: String, conf: Configuration = new Configuration()
       case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
     } + "\""
 
-  /** Commit: union the parent's completed buckets with `newBuckets` (new
-    * state wins on conflict), write snap-(n+1), advance HEAD.
-    * `extraWatermarks` ride the same carried-forward-verbatim map as the
-    * streaming watermark — the durable home for table-level metadata such
-    * as the indexed-corpus layout stamp (reserved `__`-prefixed keys;
-    * monotone max-merge like every watermark entry).
-    * `overwriteWatermarks` entries are set VERBATIM after the merge — the
-    * escape hatch for metadata that legitimately moves DOWN (resharding
-    * restamps the layout key to a smaller bucket count; a max-merge could
-    * never record it). Stream batch watermarks must never use this. */
   /** INCREMENTAL READ (Iceberg's incremental append scan): the rows
     * ADDED after snapshot `fromId` (exclusive), up to `toId` (inclusive;
     * default HEAD) — planned as the FILE-SET difference of the two
@@ -554,6 +621,16 @@ final class Manifest(tableDir: String, conf: Configuration = new Configuration()
     commit(s"rollback-to-$toId", target.buckets)
   }
 
+  /** Commit: union the parent's completed buckets with `newBuckets` (new
+    * state wins on conflict), write snap-(n+1), advance HEAD.
+    * `extraWatermarks` ride the same carried-forward-verbatim map as the
+    * streaming watermark — the durable home for table-level metadata such
+    * as the indexed-corpus layout stamp (reserved `__`-prefixed keys;
+    * monotone max-merge like every watermark entry).
+    * `overwriteWatermarks` entries are set VERBATIM after the merge — the
+    * escape hatch for metadata that legitimately moves DOWN (resharding
+    * restamps the layout key to a smaller bucket count; a max-merge could
+    * never record it). Stream batch watermarks must never use this. */
   def commit(runId: String, newBuckets: Seq[BucketState],
       streamWatermark: Option[(String, Long)] = None,
       extraWatermarks: Map[String, Long] = Map.empty,

@@ -119,15 +119,14 @@ object ExtractJob {
       else math.max(1, math.min(pending.length, pendingDocs.rdd.getNumPartitions))
     val extracted = transform(pendingDocs, numPartitions = parts).toDF()
 
-    // pre-write listing: dynamic overwrite only replaces directories of
-    // partitions PRESENT in the output, so a pending bucket that receives
-    // zero rows keeps whatever stale files an earlier (crashed/abandoned)
-    // run left there. Lineage must record only files THIS run produced —
-    // the post-write diff below excludes stale leftovers (they become
-    // unreferenced orphans, removable via Manifest.removeOrphans).
-    val preFiles: Map[Int, Set[String]] =
-      pending.map(b => b -> table.listBucketFiles(b).toSet).toMap
-
+    // the Txn lists the pending buckets before the write: dynamic
+    // overwrite only replaces directories of partitions PRESENT in the
+    // output, so a pending bucket that receives zero rows keeps whatever
+    // stale files an earlier (crashed/abandoned) run left there. Lineage
+    // must record only files THIS run produced — the Txn's fresh-file diff
+    // excludes stale leftovers (they become unreferenced orphans,
+    // removable via Manifest.removeOrphans).
+    val tx = table.txn(spark, pending)
     extracted
       .write.mode("overwrite")
       // per-write option, NOT session config: a session-wide setting would
@@ -139,9 +138,7 @@ object ExtractJob {
     // lineage: exactly the files this run wrote per pending bucket —
     // recorded in the snapshot and used to PLAN the post-write scan,
     // Iceberg-style, instead of listing the table directory again.
-    val bucketFiles: Map[Int, Seq[String]] =
-      pending.map(b => b -> table.listBucketFiles(b).filterNot(preFiles(b))).toMap
-    val newFiles = pending.flatMap(bucketFiles)
+    val newFiles = pending.flatMap(tx.fresh)
 
     // AUDIT GATE: the uncommitted output, planned from this run's files
     // only — on false, return before ANY manifest/metrics mutation (the
@@ -150,26 +147,14 @@ object ExtractJob {
       return None
 
     // ONE scan of the data at rest → metrics side table + watermark — run
-    // CONCURRENTLY with the zone-map footer pass (guide §2.6): the two
-    // post-write jobs read disjoint byte ranges of the same fresh files
-    // (data pages vs footers) and neither depends on the other
-    val (stats, zoneMapStats) = Par.par2(
-      () => scanStats(spark, tableDir, newFiles),
-      () => Manifest.fileIdStats(spark, newFiles, Manifest.ZoneMapCol))
-
-    // per-file id zone maps from the freshly-written footers (metadata
-    // plane: no data pages are read) — recorded in the snapshot so readers
-    // can stats-prune doc_id-ranged scans, Iceberg-style
-    val zoneMaps = zoneMapStats
-      .groupBy(s => bucketFiles.collectFirst {
-        case (b, fs) if fs.contains(s.file) => b }.get)
-
-    val states = pending.map { b =>
-      val s = stats.getOrElse(b, BucketStat(0L, 0L, 0L, Nil, ""))
-      Manifest.BucketState(b, s.docs, s.wm, bucketFiles(b),
-        zoneMaps.getOrElse(b, Nil))
-    }
-    val snap = table.commit(runId, states)
+    // CONCURRENTLY with the Txn's footer pass (row counts + the per-file
+    // id zone maps readers stats-prune by; guide §2.6): the two post-write
+    // passes read disjoint byte ranges of the same fresh files (data pages
+    // vs footers) and neither depends on the other
+    val (stats, _) = Par.par2(
+      () => scanStats(spark, tableDir, newFiles), () => tx.rows(pending))
+    pending.foreach(b => tx.replace(b, stats.get(b).fold("")(_.wm)))
+    val snap = tx.commit(runId)
 
     // metrics AFTER the commit: a crash before the commit then reruns the
     // buckets — metrics written pre-commit would be appended twice (orphan
@@ -271,22 +256,14 @@ object ExtractJob {
       else math.max(1, math.min(pending.length, pendingDocs.rdd.getNumPartitions))
     val extracted = transform(pendingDocs, numPartitions = parts, rules = newRules)
 
-    val before: Map[Int, Set[String]] =
-      pending.map(b => b -> table.listBucketFiles(b).toSet).toMap
+    val tx = table.txn(spark, pending)
     extracted.toDF()
       .write.mode("append")
       .partitionBy("bucket")
       .parquet(s"$tableDir/data")
-    val bucketFiles: Map[Int, Seq[String]] =
-      pending.map(b => b -> table.listBucketFiles(b).filterNot(before(b))).toMap
-    val newFiles = pending.flatMap(bucketFiles)
-
-    val stats = scanStats(spark, tableDir, newFiles)
-    val states = pending.map { b =>
-      val s = stats.getOrElse(b, BucketStat(0L, 0L, 0L, Nil, ""))
-      Manifest.BucketState(b, s.docs, s.wm, bucketFiles(b))
-    }
-    val out = table.commit(runId, states)
+    val stats = scanStats(spark, tableDir, pending.flatMap(tx.fresh))
+    pending.foreach(b => tx.replace(b, stats.get(b).fold("")(_.wm)))
+    val out = tx.commit(runId)
     writeMetrics(spark, tableDir, runId, System.nanoTime() - t0, pending, stats)
     out
   }
@@ -417,7 +394,7 @@ object ExtractJob {
         "schemas — compact each namespace separately via only=Some(...)")
 
     val fatIds = fat.map(_.bucket)
-    val before = fatIds.map(b => b -> table.listBucketFiles(b).toSet).toMap
+    val tx = table.txn(spark, fatIds)
     // (bucket, row-hash mod target) partitioning → exactly ≤ target output
     // files per bucket; with target=1 each bucket lands in one task. At
     // 100 TB pick target so bucket/target ≈ one task's worth of rows.
@@ -439,23 +416,11 @@ object ExtractJob {
       .write.mode("append")
       .partitionBy("bucket")
       .parquet(s"$tableDir/data")
-    // re-derive zone maps for the rewritten files so compaction never
-    // DEGRADES a stats-pruned table (namespaces without a doc_id column
-    // simply record none — footerIdRange finds no such chunk). ONE
-    // metadata job over every rewritten file, then grouped per bucket —
-    // a per-bucket job inside the map would serialize hundreds of tiny
-    // driver-launched jobs at scale
-    val freshByBucket: Map[Int, Seq[String]] = fat.map(b =>
-      b.bucket -> table.listBucketFiles(b.bucket).filterNot(before(b.bucket))).toMap
-    val statsByBucket = Manifest
-      .fileIdStats(spark, freshByBucket.values.flatten.toSeq, Manifest.ZoneMapCol)
-      .groupBy(s => freshByBucket.collectFirst {
-        case (b, fs) if fs.contains(s.file) => b }.get)
-    val states = fat.map { b =>
-      Manifest.BucketState(b.bucket, b.rows, b.watermarkDocId,
-        freshByBucket(b.bucket), statsByBucket.getOrElse(b.bucket, Nil))
-    }
-    table.commit(s"compact-of-${snap.id}", states)
+    // the commit re-derives zone maps for the rewritten files, so
+    // compaction never DEGRADES a stats-pruned table (namespaces without a
+    // doc_id column simply record none)
+    fat.foreach(b => tx.replace(b.bucket, b.watermarkDocId))
+    tx.commit(s"compact-of-${snap.id}")
   }
 
   /** Copy-on-write DELETE by key — the right-to-be-forgotten primitive a
@@ -536,7 +501,8 @@ object ExtractJob {
     // scheme-normalized; compare every spelling through the URI path
     def norm(f: String): String = new org.apache.hadoop.fs.Path(f).toUri.getPath
 
-    val rewrittenStates = groups.flatMap { bs =>
+    // passes 1 and 2 per schema group: the files with actual hits
+    val located = groups.flatMap { bs =>
       // pass 1: plan — zone-map overlap prunes candidate files when the
       // delete keys on the stats column (a stat for doc_id proves nothing
       // about any other key; statless files are always candidates)
@@ -560,62 +526,41 @@ object ExtractJob {
             }
           statless ++ overlapping
         }
+      // pass 2: locate — per-FILE hit counts over the candidates only;
+      // partial-agg, output manifest-sized. mergeSchema on both passes:
+      // a bucket whose row schema legitimately WIDENED across commits
+      // holds files of different widths, and an unmerged read would take
+      // one arbitrary file's schema — the rewritten survivors would
+      // silently lose the added columns (collateral loss during a
+      // takedown). Merged, old rows surface NULL in added columns and
+      // every recorded column survives the rewrite.
       if (candidates.isEmpty) Nil
-      else {
-        // pass 2: locate — per-FILE hit counts over the candidates only;
-        // partial-agg, output manifest-sized. mergeSchema on both passes:
-        // a bucket whose row schema legitimately WIDENED across commits
-        // holds files of different widths, and an unmerged read would take
-        // one arbitrary file's schema — the rewritten survivors would
-        // silently lose the added columns (collateral loss during a
-        // takedown). Merged, old rows surface NULL in added columns and
-        // every recorded column survives the rewrite.
-        val hitRows = table.readFiles(spark, candidates, mergeSchema = true)
-          .select(col("bucket"), col(keyCol), input_file_name().as("f"))
-          .join(keySet, Seq(keyCol), "left_semi")
-          .groupBy(col("bucket"), col("f")).agg(count(lit(1)).as("doomed"))
-          .collect()
-        val hitFilesByBucket = hitRows.groupBy(_.getInt(0))
-          .map { case (b, rs) => b -> rs.map(r => norm(r.getString(1))).toSet }
-        val hitsByBucket = hitRows.groupBy(_.getInt(0))
-          .map { case (b, rs) => b -> rs.map(_.getLong(2)).sum }
-        if (hitsByBucket.isEmpty) Nil
-        else {
-          val hit = bs.filter(b => hitsByBucket.contains(b.bucket))
-          val hitFiles = hit.flatMap(b =>
-            b.files.filter(f => hitFilesByBucket(b.bucket).contains(norm(f))))
-          val before = hit.map(b =>
-            b.bucket -> table.listBucketFiles(b.bucket).toSet).toMap
-          // pass 3: rewrite ONLY the files with actual hits (merged read —
-          // see the pass-2 note on widened bucket schemas)
-          table.readFiles(spark, hitFiles, mergeSchema = true)
-            .join(keySet, Seq(keyCol), "left_anti")
-            .repartition($"bucket")
-            .write.mode("append").partitionBy("bucket")
-            .parquet(s"$tableDir/data")
-          // untouched files keep their zone maps verbatim; only the
-          // replacement files need fresh footer stats — ONE metadata job
-          // over all of them, grouped per bucket (not a job per bucket)
-          val freshByBucket: Map[Int, Seq[String]] = hit.map(b =>
-            b.bucket -> table.listBucketFiles(b.bucket)
-              .filterNot(before(b.bucket))).toMap
-          val statsByBucket = Manifest
-            .fileIdStats(spark, freshByBucket.values.flatten.toSeq,
-              Manifest.ZoneMapCol)
-            .groupBy(s => freshByBucket.collectFirst {
-              case (b, fs) if fs.contains(s.file) => b }.get)
-          hit.map { b =>
-            val doomedHere = hitFilesByBucket(b.bucket)
-            val kept = b.files.filterNot(f => doomedHere.contains(norm(f)))
-            Manifest.BucketState(b.bucket, b.rows - hitsByBucket(b.bucket),
-              b.watermarkDocId, kept ++ freshByBucket(b.bucket),
-              b.stats.filterNot(s => doomedHere.contains(norm(s.file))) ++
-                statsByBucket.getOrElse(b.bucket, Nil))
-          }
-        }
-      }
+      else table.readFiles(spark, candidates, mergeSchema = true)
+        .select(col("bucket"), col(keyCol), input_file_name().as("f"))
+        .join(keySet, Seq(keyCol), "left_semi")
+        .groupBy(col("bucket"), col("f")).agg(count(lit(1)).as("doomed"))
+        .collect().toSeq.map(r => (r.getInt(0), norm(r.getString(1)), r.getLong(2)))
     }
-    if (rewrittenStates.isEmpty) snap
-    else table.commit(s"delete-of-${snap.id}", rewrittenStates)
+    if (located.isEmpty) return snap
+    val hitFiles = located.groupBy(_._1).map { case (b, rs) => b -> rs.map(_._2).toSet }
+    val hits = located.groupBy(_._1).map { case (b, rs) => b -> rs.map(_._3).sum }
+    def doomed(b: Manifest.BucketState): Seq[String] =
+      b.files.filter(f => hitFiles.get(b.bucket).exists(_.contains(norm(f))))
+
+    // pass 3: rewrite ONLY the files with actual hits, one merged read per
+    // schema group (see the pass-2 note on widened bucket schemas)
+    val tx = table.txn(spark, hits.keys.toSeq.sorted)
+    groups.map(_.flatMap(doomed)).filter(_.nonEmpty).foreach { files =>
+      table.readFiles(spark, files, mergeSchema = true)
+        .join(keySet, Seq(keyCol), "left_anti")
+        .repartition($"bucket")
+        .write.mode("append").partitionBy("bucket")
+        .parquet(s"$tableDir/data")
+    }
+    // untouched files keep their lineage and zone maps verbatim; only the
+    // replacement files get fresh footer stats
+    sel.filter(b => hits.contains(b.bucket)).foreach(b => tx.replace(b.bucket,
+      b.watermarkDocId, b.files.filterNot(doomed(b).contains), b.rows - hits(b.bucket)))
+    tx.commit(s"delete-of-${snap.id}")
   }
 }

@@ -134,8 +134,7 @@ object EventStream {
       return // re-delivered
     val t0 = System.nanoTime()
     val buckets = 0 until graft.DocGen.NumBuckets
-    val pre: Map[Int, Set[String]] =
-      buckets.map(b => b -> table.listBucketFiles(b).toSet).toMap
+    val tx = table.txn(spark, buckets)
 
     // one shuffle by bucket first: otherwise every task holds rows of every
     // bucket and a micro-batch writes O(tasks × buckets) small files — the
@@ -143,24 +142,12 @@ object EventStream {
     batch.repartition(col("bucket"))
       .write.mode("append").partitionBy("bucket").parquet(s"$tableDir/data")
 
-    val newFiles: Map[Int, Seq[String]] =
-      buckets.map(b => b -> table.listBucketFiles(b).filterNot(pre(b))).toMap
-    val written = buckets.flatMap(newFiles)
+    val written = buckets.flatMap(tx.fresh)
     if (written.isEmpty) return // empty batch: nothing to commit
 
     val stats = graft.ExtractJob.scanStats(spark, tableDir, written)
-
-    val prevStates: Map[Int, graft.Manifest.BucketState] =
-      prev.map(_.buckets.map(b => b.bucket -> b).toMap).getOrElse(Map.empty)
-    val touched = stats.keys.toSeq.sorted.map { b =>
-      val st = stats(b)
-      val p = prevStates.get(b)
-      graft.Manifest.BucketState(b,
-        p.map(_.rows).getOrElse(0L) + st.docs,
-        Seq(p.map(_.watermarkDocId).getOrElse(""), st.wm).max,
-        p.map(_.files).getOrElse(Nil) ++ newFiles(b))
-    }
-    table.commit(runId, touched, streamWatermark = Some(streamId -> batchId))
+    stats.foreach { case (b, st) => tx.append(b, st.wm) }
+    tx.commit(runId, streamWatermark = Some(streamId -> batchId))
 
     // metrics AFTER the commit (same crash contract as the batch job:
     // a missing batch is re-derivable, a duplicated batch is not)
@@ -591,9 +578,8 @@ object EventStream {
     val cBuckets = 0 until corpusBuckets
 
     val hBucket = heatBucketFor(corpusBuckets)
-    val pre: Map[Int, Set[String]] =
-      ((cBuckets :+ ixBucket :+ mBucket) ++ heatCol.map(_ => hBucket))
-        .map(b => b -> table.listBucketFiles(b).toSet).toMap
+    val touched = (cBuckets :+ ixBucket :+ mBucket) ++ heatCol.map(_ => hBucket)
+    val tx = table.txn(spark, touched)
 
     // INDEPENDENT actions overlap (optimization guide §2.6): the corpus /
     // index / heat writes target disjoint directories of the table, and
@@ -641,26 +627,14 @@ object EventStream {
     val nExactSurv = Await.result(fExact, Duration.Inf)
     val nDirect = Await.result(fDirect, Duration.Inf)
     val wm = Await.result(fWm, Duration.Inf)
-    // every write must land before the post-write listing diff below
+    // every write must land before the Txn's post-write listing diff
     Await.result(fCorpusW, Duration.Inf)
     Await.result(fIdxW, Duration.Inf)
     fHeatW.foreach(Await.result(_, Duration.Inf))
 
-    def newFiles(b: Int) = table.listBucketFiles(b).filterNot(pre(b))
-
-    // row counts of everything just written come from the fresh files' own
-    // FOOTERS (metadata plane, exact by construction) — no count() jobs
-    val conf = spark.sessionState.newHadoopConf()
-    def rowsOf(files: Seq[String]): Long =
-      files.map(f => graft.Manifest.footerRowCount(conf, f)).sum
-    val newCorpusFiles: Map[Int, Seq[String]] =
-      cBuckets.map(b => b -> newFiles(b)).toMap
-    val admPerBucket: Map[Int, Long] =
-      newCorpusFiles.map { case (b, fl) => b -> rowsOf(fl) }
-    val nAdm = admPerBucket.values.sum
-    val ixFiles = newFiles(ixBucket)
-    val nIdx = rowsOf(ixFiles)
-    val nHeat = heatCol.map(_ => rowsOf(newFiles(hBucket)))
+    // the admitted count comes from the fresh corpus files' own FOOTERS
+    // (metadata plane, exact by construction) — no count() job
+    val nAdm = tx.rows(cBuckets)
 
     val metricsRow = {
       import spark.implicits._
@@ -671,26 +645,14 @@ object EventStream {
     }
     metricsRow.coalesce(1).write.mode("append")
       .parquet(s"$tableDir/data/bucket=$mBucket")
-    val prevStates: Map[Int, graft.Manifest.BucketState] =
-      prev.map(_.buckets.map(b => b.bucket -> b).toMap).getOrElse(Map.empty)
-    def grown(bucket: Int, rows: Long, files: Seq[String]) = {
-      val p = prevStates.get(bucket)
-      graft.Manifest.BucketState(bucket,
-        p.map(_.rows).getOrElse(0L) + rows,
-        Seq(p.map(_.watermarkDocId).getOrElse(""), wm).max,
-        p.map(_.files).getOrElse(Nil) ++ files)
-    }
     // ONE commit covers corpus sub-buckets + index + metrics + the
     // exactly-once watermark; even an all-duplicates batch commits (the
     // watermark must advance or the re-delivery guard would replay it
     // forever — and its metrics row records the all-dropped decision).
     // Untouched corpus sub-buckets are still committed (rows += 0, no new
     // files) so bucket states never go stale relative to the watermark.
-    table.commit(f"corpus-batch-$batchId%06d",
-      cBuckets.map(b => grown(b, admPerBucket.getOrElse(b, 0L), newCorpusFiles(b))) ++
-        Seq(grown(ixBucket, nIdx, ixFiles),
-          grown(mBucket, 1L, newFiles(mBucket))) ++
-        nHeat.map(n => grown(hBucket, n, newFiles(hBucket))).toSeq,
+    touched.foreach(tx.append(_, wm))
+    tx.commit(f"corpus-batch-$batchId%06d",
       streamWatermark = Some(streamId -> batchId),
       extraWatermarks = Map(LayoutKey -> corpusBuckets.toLong) ++
         (if (heatCol.isDefined)
@@ -761,80 +723,54 @@ object EventStream {
     val corpusWm = (0 until from)
       .flatMap(states.get).map(_.watermarkDocId).foldLeft("")((a, b) => Seq(a, b).max)
 
+    // index / metrics / heat move verbatim to their shifted ids; old ids
+    // not reused by the new layout zero out (rows=0, no files) so a reader
+    // of the new snapshot can never resolve stale namespaces
+    val moves = Seq[Int => Int](indexBucketFor, metricsBucketFor, heatBucketFor)
+      .map(f => (f(from), f(to))).filter(m => states.contains(m._1))
+    val newCorpus = 0 until to
+    val stale = states.keySet.diff(newCorpus.toSet ++ moves.map(_._2)).toSeq.sorted
+    val tx = table.txn(spark, newCorpus ++ moves.map(_._2) ++ stale)
+
     // corpus rows: re-hash into the new sub-buckets (one shuffle by the
     // new bucket, exactly the admit path's write shape)
     val oldCorpus = (0 until from).filter(b => states.get(b).exists(_.files.nonEmpty))
     val corpusRows = (0 until from).flatMap(states.get).map(_.rows).sum
-    val newCorpusStates: Seq[graft.Manifest.BucketState] =
-      if (oldCorpus.isEmpty)
-        (0 until to).map(b => graft.Manifest.BucketState(b, 0L, corpusWm, Nil))
-      else {
-        val before = (0 until to).map(b => b -> table.listBucketFiles(b).toSet).toMap
-        // merged read: a corpus whose row schema WIDENED across commits
-        // must not be resharded through one arbitrary file's schema —
-        // added columns would silently vanish from the whole table
-        val rows = table.readData(spark, Some(oldCorpus.toSet), mergeSchema = true)
-          .drop("bucket")
-          .withColumn("bucket", corpusBucketOf(to)(col(idCol)))
-          .repartition(col("bucket"))
-        rows.write.mode("append").partitionBy("bucket").parquet(s"$tableDir/data")
-        // per-new-bucket rows from the FRESH files' own footers (pure
-        // metadata reads — the writer's footers already carry the counts,
-        // so no scan job runs at all)
-        val conf = spark.sessionState.newHadoopConf()
-        val fresh = (0 until to).map(b =>
-          b -> table.listBucketFiles(b).filterNot(before(b)))
-        // re-derive id zone maps for the rewritten corpus files so a
-        // reshard never DEGRADES a stats-pruned table (the compact /
-        // deleteByKey contract); namespaces without the stat column
-        // simply record none
-        val statsByFile = graft.Manifest
-          .fileIdStats(spark, fresh.flatMap(_._2), graft.Manifest.ZoneMapCol)
-          .map(s => s.file -> s).toMap
-        fresh.map { case (b, fl) =>
-          graft.Manifest.BucketState(b,
-            fl.map(f => graft.Manifest.footerRowCount(conf, f)).sum, corpusWm, fl,
-            fl.flatMap(statsByFile.get))
-        }
-      }
-    require(newCorpusStates.map(_.rows).sum == corpusRows,
-      s"reshard row conservation failed: $corpusRows in, " +
-        s"${newCorpusStates.map(_.rows).sum} out")
+    if (oldCorpus.nonEmpty)
+      // merged read: a corpus whose row schema WIDENED across commits
+      // must not be resharded through one arbitrary file's schema —
+      // added columns would silently vanish from the whole table
+      table.readData(spark, Some(oldCorpus.toSet), mergeSchema = true)
+        .drop("bucket")
+        .withColumn("bucket", corpusBucketOf(to)(col(idCol)))
+        .repartition(col("bucket"))
+        .write.mode("append").partitionBy("bucket").parquet(s"$tableDir/data")
+    // per-new-bucket rows from the FRESH files' own footers (pure metadata
+    // reads — the writer's footers already carry the counts, so no scan
+    // job runs at all)
+    val resharded = tx.rows(newCorpus)
+    require(resharded == corpusRows,
+      s"reshard row conservation failed: $corpusRows in, $resharded out")
 
-    // index / metrics / heat: move each namespace verbatim to its shifted
-    // id — physically rewritten so the snapshot bucket id always equals
-    // the directory partition value (compaction's fresh-file diff and the
-    // pruning contract both rely on that invariant)
-    def move(oldId: Int, newId: Int): Option[graft.Manifest.BucketState] =
-      states.get(oldId).map { st =>
-        if (st.files.isEmpty)
-          graft.Manifest.BucketState(newId, st.rows, st.watermarkDocId, Nil)
-        else {
-          val before = table.listBucketFiles(newId).toSet
-          // merged read — same widened-schema rationale as the corpus move
-          table.readData(spark, Some(Set(oldId)), mergeSchema = true).drop("bucket")
-            .coalesce(math.max(1, st.files.length))
-            .write.mode("append").parquet(s"$tableDir/data/bucket=$newId")
-          val moved = table.listBucketFiles(newId).filterNot(before)
-          graft.Manifest.BucketState(newId, st.rows, st.watermarkDocId, moved,
-            graft.Manifest.fileIdStats(spark, moved, graft.Manifest.ZoneMapCol))
-        }
-      }
-    // the three namespace moves are independent rewrites of disjoint
-    // bucket directories — overlap them (guide §2.6)
-    val moved = graft.Par.par(Seq(
-      () => move(indexBucketFor(from), indexBucketFor(to)),
-      () => move(metricsBucketFor(from), metricsBucketFor(to)),
-      () => move(heatBucketFor(from), heatBucketFor(to)))).flatten
+    // each namespace is physically rewritten so the snapshot bucket id
+    // always equals the directory partition value (compaction's fresh-file
+    // diff and the pruning contract both rely on that invariant); the
+    // three moves are independent rewrites of disjoint bucket directories
+    // — overlap them (guide §2.6). Merged read — same widened-schema
+    // rationale as the corpus move
+    graft.Par.par(moves.filter(m => states(m._1).files.nonEmpty).map { case (o, n) => () =>
+      table.readData(spark, Some(Set(o)), mergeSchema = true).drop("bucket")
+        .coalesce(states(o).files.length)
+        .write.mode("append").parquet(s"$tableDir/data/bucket=$n")
+    })
 
-    // old ids not reused by the new layout zero out (rows=0, no files) so
-    // a reader of the new snapshot can never resolve stale namespaces
-    val newIds = (0 until to).toSet ++ moved.map(_.bucket)
-    val stale = states.keySet.diff(newIds).toSeq.sorted.map(b =>
-      graft.Manifest.BucketState(b, 0L, states(b).watermarkDocId, Nil))
-
-    table.commit(s"reshard-$from-to-$to",
-      newCorpusStates ++ moved ++ stale,
+    // the commit re-derives id zone maps for every rewritten file, so a
+    // reshard never DEGRADES a stats-pruned table (the compact /
+    // deleteByKey contract); namespaces without the stat column record none
+    newCorpus.foreach(tx.replace(_, corpusWm))
+    moves.foreach { case (o, n) => tx.replace(n, states(o).watermarkDocId) }
+    stale.foreach(b => tx.replace(b, states(b).watermarkDocId))
+    tx.commit(s"reshard-$from-to-$to",
       overwriteWatermarks = Map(LayoutKey -> to.toLong))
   }
 

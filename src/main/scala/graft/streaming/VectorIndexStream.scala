@@ -306,17 +306,16 @@ object VectorIndexStream {
         case _ => (assigned, 0L, 0L)
       }
 
-    // ONE pass over the admitted batch: per-cell counts + per-cell id
-    // watermarks (the commit's bookkeeping) — not one driver action each.
-    // The drift aggregate below is independent of it, so the two actions
-    // overlap (guide §2.6); concurrent first-touch of the lazily-
-    // checkpointed frame is block-manager-safe.
-    val fPerCell = scala.concurrent.Future {
+    // ONE pass over the admitted batch: the touched cells and their id
+    // watermarks (the commit's bookkeeping; row counts come from the
+    // written footers). The drift aggregate below is independent of it, so
+    // the two actions overlap (guide §2.6); concurrent first-touch of the
+    // lazily-checkpointed frame is block-manager-safe.
+    val fCellWm = scala.concurrent.Future {
       admitted.map(
-        _.groupBy(col("bucket"))
-          .agg(count(lit(1)).as("__n"), max(col(idCol).cast("string")).as("__w"))
-          .collect().map(r => (r.getInt(0), r.getLong(1), r.getString(2))).toSeq)
-        .getOrElse(Seq.empty)
+        _.groupBy(col("bucket")).agg(max(col(idCol).cast("string")))
+          .collect().map(r => r.getInt(0) -> r.getString(1)).toMap)
+        .getOrElse(Map.empty[Int, String])
     }(graft.Par.ec)
     // drift signal: mean squared distance of this batch's rows to their
     // assigned centroids, floored to integer micro-units (−1 = no rows).
@@ -334,24 +333,20 @@ object VectorIndexStream {
           .agg(avg(sqd)).head().getDouble(0) * 1e6).toLong
       }.getOrElse(-1L)
     }(graft.Par.ec)
-    val perCellRows: Seq[(Int, Long, String)] =
-      scala.concurrent.Await.result(fPerCell, scala.concurrent.duration.Duration.Inf)
+    val cellWm: Map[Int, String] =
+      scala.concurrent.Await.result(fCellWm, scala.concurrent.duration.Duration.Inf)
     val msdQ: Long =
       scala.concurrent.Await.result(fMsdQ, scala.concurrent.duration.Duration.Inf)
-    val perCell: Map[Int, Long] = perCellRows.map(r => r._1 -> r._2).toMap
-    val cellWm: Map[Int, String] = perCellRows.map(r => r._1 -> r._3).toMap
 
-    // only TOUCHED buckets are listed and committed — Manifest.commit
+    // only TOUCHED buckets are listed and committed — the commit
     // carries every untouched bucket's state forward, so at nCells=1024 a
     // 3-cell batch issues ~10 listStatus calls, not ~2050 (on object
     // storage the listing would otherwise dominate the "commit is
     // metadata" claim)
     val trained = !committed && cents.nonEmpty
-    val touchedCells = perCell.keys.toSeq.sorted
-    val touched = touchedCells ++
+    val touched = cellWm.keys.toSeq.sorted ++
       (if (trained) Seq(cbBucket) else Nil) :+ mBucket
-    val pre: Map[Int, Set[String]] =
-      touched.map(b => b -> table.listBucketFiles(b).toSet).toMap
+    val tx = table.txn(spark, touched)
     // the three writes target disjoint directories — overlap them
     graft.Par.par(Seq(
       () => admitted.foreach(_.select(batch.columns.map(col) :+ col("bucket"): _*)
@@ -362,30 +357,18 @@ object VectorIndexStream {
           .coalesce(1).write.mode("append")
           .parquet(s"$tableDir/data/bucket=$cbBucket"),
       () => Seq((batchId, nInput, nRows - nNearDropped, nInput - nRows,
-          perCell.size.toLong, trained, msdQ, nNearDropped, nGateSkipped))
+          cellWm.size.toLong, trained, msdQ, nNearDropped, nGateSkipped))
         .toDF("batch_id", "input_rows", "indexed", "dropped_null",
           "cells_touched", "trained", "assign_msd_q", "near_dropped",
           "gate_skipped_cells")
         .coalesce(1).write.mode("append").parquet(s"$tableDir/data/bucket=$mBucket")))
 
-    def newFiles(b: Int) = table.listBucketFiles(b).filterNot(pre(b))
-    val prevStates: Map[Int, graft.Manifest.BucketState] =
-      prev.map(_.buckets.map(b => b.bucket -> b).toMap).getOrElse(Map.empty)
-    def grown(bucket: Int, nRowsAdded: Long, w: String) = {
-      val p = prevStates.get(bucket)
-      graft.Manifest.BucketState(bucket,
-        p.map(_.rows).getOrElse(0L) + nRowsAdded,
-        Seq(p.map(_.watermarkDocId).getOrElse(""), w).max,
-        p.map(_.files).getOrElse(Nil) ++ newFiles(bucket))
-    }
     // ONE commit covers the touched cells + codebook + metrics + the
     // exactly-once watermark. Even an all-null batch commits — the
     // watermark must advance or re-delivery would replay it forever, and
     // its metrics row records the decision.
-    table.commit(f"vecidx-batch-$batchId%06d",
-      touchedCells.map(b => grown(b, perCell(b), cellWm(b))) ++
-        (if (trained) Seq(grown(cbBucket, cents.length.toLong, "")) else Nil) :+
-        grown(mBucket, 1L, ""),
+    touched.foreach(b => tx.append(b, cellWm.getOrElse(b, "")))
+    tx.commit(f"vecidx-batch-$batchId%06d",
       streamWatermark = Some(streamId -> batchId),
       extraWatermarks = Map(LayoutKey -> nCells.toLong))
   }

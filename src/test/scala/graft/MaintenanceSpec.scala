@@ -514,5 +514,20 @@ class MaintenanceSpec extends AnyFunSuite {
       assert(b.stats.map(_.file).toSet == b.files.toSet, s"post-compact bucket ${b.bucket}")
     }
     assert(rows(m.readData(spark, idRange = Some((lo, hi)))) == viaPruned)
+
+    // a rule-change backfill rewrites whole buckets through the same
+    // commit path, so its fresh files get zone maps too
+    val s2 = ExtractJob.backfill(spark, DocGen.generate(spark, 1200, 24), dir, "zm-bf",
+      newRules = Registry.rules.filterNot(_.name == "albumhost"))
+    assert(s2.id == s1.id + 1)
+    assert(s2.buckets.exists(b => b.files.toSet != s1.buckets.find(_.bucket == b.bucket)
+      .get.files.toSet), "the backfill must rewrite at least one bucket")
+    new Manifest(dir).head().get.buckets.filter(_.rows > 0).foreach { b =>
+      assert(b.stats.map(_.file).toSet == b.files.toSet, s"post-backfill bucket ${b.bucket}")
+    }
+    // the rule change may rewrite refs inside the range, never which docs it holds
+    val viaPrunedBf = rows(m.readData(spark, idRange = Some((lo, hi))))
+    assert(viaPrunedBf == rows(m.readData(spark)))
+    assert(viaPrunedBf.keySet == viaPruned.keySet)
   }
 }
