@@ -238,8 +238,8 @@ object CorpusMain {
       ops.Dedup.normalizedDedup(cleaned, "doc_id", "text")
     }
     val deduped = stage("deduped") {
-      val pairs = ops.Dedup.nearDupPairs(exact, "doc_id", "text", threshold = 0.8)
-        .select($"id_a", $"id_b").localCheckpoint()
+      val pairs = Pin.now(ops.Dedup.nearDupPairs(exact, "doc_id", "text", threshold = 0.8)
+        .select($"id_a", $"id_b"))
       ops.Dedup.dedupCorpus(exact, "doc_id", pairs)
     }
 
@@ -270,8 +270,7 @@ object CorpusMain {
         "text")
     }
     val gated = stage("lm_kept") {
-      val scored = ops.Lm.lmScore(scrubbed, "doc_id", "text", lmModel)
-        .localCheckpoint()
+      val scored = Pin.now(ops.Lm.lmScore(scrubbed, "doc_id", "text", lmModel))
       val thr = scored.agg(
         expr("percentile_approx(score_q, 0.1, 1000000)")).head().getLong(0)
       // CCNet head/middle/tail tiers over the kept mass (P30/P30 cuts on

@@ -95,11 +95,11 @@ object IncrementalCorpus {
     val holdout = CorpusMain.readStage(spark, outDir, "eval_holdout")
     // pinned lazily: the admission's input count and its exact pass both
     // read it, and the first to run materializes it for the other
-    val admissible = gated.join(
+    val admissible = Pin(gated.join(
       ops.Cleaning.decontaminate(gated, holdout, "doc_id", "text",
           k = HoldoutDeconK)
         .where(col("keep") === 1).select(col("doc_id")),
-      "doc_id").localCheckpoint(eager = false)
+      "doc_id"))
     streaming.EventStream.admitIndexedBatch(admissible, batchId,
       corpusTableDir(outDir), StreamId, "doc_id", "text", 0.8, 8, 4,
       layoutOf(spark, outDir))
@@ -120,15 +120,14 @@ object IncrementalCorpus {
     *    self-join and two reads inside langIdBulk);
     *  - `lang_en`, pinned eagerly: admission runs several actions over
     *    it (input count, admission joins, outcome counts).
-    * The first two pins are lazy (like [[ops.Dedup]]'s `mat`): they
-    * materialize inside the final pin's job. */
+    * The first two pins are lazy: they materialize inside the final
+    * pin's job. */
   private[graft] def gateIncrement(raw: DataFrame): DataFrame = {
     val extracted = plans.GraftFunctions.extractColumnar(raw)
       .select(col("doc_id"), col("domain"), col("spans"))
-    val texts = CorpusPrep.textOf(extracted).localCheckpoint(eager = false)
-      .where(CorpusPrep.hasText)
-    val cleaned = CorpusPrep.cleanGate(texts).localCheckpoint(eager = false)
-    CorpusPrep.langGateEn(cleaned).localCheckpoint()
+    val texts = Pin(CorpusPrep.textOf(extracted)).where(CorpusPrep.hasText)
+    val cleaned = Pin(CorpusPrep.cleanGate(texts))
+    Pin.now(CorpusPrep.langGateEn(cleaned))
   }
 
   /** Pack every corpus row appended since the last pack into
@@ -151,9 +150,8 @@ object IncrementalCorpus {
       .flatMap(_.streamWatermarks.get(ConsumedKey)).getOrElse(-1L).toInt
     if (consumed >= cHead.id) return 0L
 
-    val fresh = cm.readAppended(spark, consumed, Some(cHead.id),
-        buckets = Some((0 until cb).toSet))
-      .drop("bucket").localCheckpoint()
+    val fresh = Pin.now(cm.readAppended(spark, consumed, Some(cHead.id),
+        buckets = Some((0 until cb).toSet)).drop("bucket"))
     val n = fresh.count()
 
     val buckets = Seq(ShardsBucket, SequencesBucket, OovBucket)
@@ -167,10 +165,9 @@ object IncrementalCorpus {
       // checkpoint before write: the shards feed their own write AND the
       // sequences — without this the tokenization DAG (the expensive
       // stage) would replay once per action
-      val packed = ops.Sampling.packShards(fresh, "doc_id", "domain",
+      val packed = Pin.now(ops.Sampling.packShards(fresh, "doc_id", "domain",
           ops.Bpe.bpeTokenCount($"text", merges).cast("bigint"), budget)
-        .withColumn("pack_window", lit(cHead.id))
-        .localCheckpoint()
+        .withColumn("pack_window", lit(cHead.id)))
       val seqs = ops.Sampling.shuffleOrder(
         ops.Bpe.attachIds(
           ops.Sampling.packSequencesWithBounds(

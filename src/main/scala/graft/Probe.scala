@@ -368,11 +368,10 @@ object Probe {
          |  (pmod(xxhash64(concat('c', cast(id div 10 as string), ':', d)), 1000) / 1000.0 - 0.5)
          |  + 0.1 * (pmod(xxhash64(concat('n', cast(id as string), ':', d)), 1000) / 1000.0 - 0.5))"""
         .stripMargin).as("v0"))
-    val corpus = raw.select($"vec_id", expr(
+    val corpus = Pin.now(raw.select($"vec_id", expr(
         s"""transform(v0, x -> x / sqrt(aggregate(v0, 0D, (a, y) -> a + y * y)))""")
-      .as("vec")).localCheckpoint()
-    corpus.count() // materialize outside timing
-    val probes = corpus.where($"vec_id" < nProbes).localCheckpoint()
+      .as("vec"))) // eager: materialized outside timing
+    val probes = Pin.now(corpus.where($"vec_id" < nProbes))
 
     def pairs(df: DataFrame): Set[(Long, Long)] =
       df.select($"probe_id", $"cand_id").collect()
@@ -417,9 +416,8 @@ object Probe {
     val (pq, tPq) = clock {
       val cb = ops.Pq.trainPq(corpus, "vec",
         ops.Pq.seedCodebook(corpus, "vec_id", "vec", m = 8, k = 64), iters = 2)
-      val codes = ops.Pq.encode(corpus, "vec_id", "vec", cb).localCheckpoint()
-      val shortlist = ops.Pq.adcTopK(codes, probes, "vec_id", "vec", cb, 100)
-        .localCheckpoint()
+      val codes = Pin.now(ops.Pq.encode(corpus, "vec_id", "vec", cb))
+      val shortlist = Pin.now(ops.Pq.adcTopK(codes, probes, "vec_id", "vec", cb, 100))
       pqR = pairs(ops.Pq.rerankExact(shortlist, corpus, probes, "vec_id", "vec", k))
       pairs(shortlist.where($"rn" <= k))
     }
@@ -428,9 +426,9 @@ object Probe {
     val (ivfpq, tIvfPq) = clock {
       val (index, model) = ops.Pq.ivfPqIndex(corpus, "vec_id", "vec",
         nCells = 64, m = 8, k = 64)
-      val idx = index.localCheckpoint()
-      val shortlist = ops.Pq.ivfPqTopK(idx, model, probes, "vec_id", "vec", 100, nProbe = 8)
-        .localCheckpoint()
+      val idx = Pin.now(index)
+      val shortlist = Pin.now(
+        ops.Pq.ivfPqTopK(idx, model, probes, "vec_id", "vec", 100, nProbe = 8))
       ivfpqR = pairs(ops.Pq.rerankExact(shortlist, corpus, probes, "vec_id", "vec", k))
       pairs(shortlist.where($"rn" <= k))
     }
@@ -912,7 +910,7 @@ object Probe {
       }
       here + p.children.map(walkCorpusScan).sum + p.subqueries.map(walkCorpusScan).sum
     }
-    // the operator materializes its stage outputs (localCheckpoint), so
+    // the operator materializes its stage outputs (pins), so
     // the corpus scan lives in an INTERMEDIATE execution, not the final
     // count's plan — accumulate across every execution via the listener;
     // its events ride the listener bus, drained on both sides of a run
@@ -967,10 +965,8 @@ object Probe {
       // fresh, disjoint doc range per round (all pass dedup as new)
       val lo = f"d${nBase.toLong + (r - 1).toLong * nInc}%010d"
       val hi = f"d${nBase.toLong + r.toLong * nInc}%010d"
-      val delta = DocGen.generate(spark, nBase.toLong + r.toLong * nInc, cores)
-        .where($"doc_id" >= lo && $"doc_id" < hi).as[RawDoc]
-        .localCheckpoint()
-      delta.count() // materialize the input outside the timed region
+      val delta = Pin.now(DocGen.generate(spark, nBase.toLong + r.toLong * nInc, cores)
+        .where($"doc_id" >= lo && $"doc_id" < hi).toDF()).as[RawDoc] // outside the timed region
       val (packed, sec) = clock {
         IncrementalCorpus.admitIncrement(spark, delta, out, r.toLong)
         IncrementalCorpus.packIncrements(spark, out)

@@ -65,7 +65,7 @@ object Bm25 {
     // aggregate. Callers serving queries should likewise persist the
     // postings (write to parquet, bucketed by word) rather than re-derive
     // them per search — the index is built once, probed many times.
-    val p = post.localCheckpoint(eager = false)
+    val p = graft.Pin(post)
     val docStats = p.select(col(idCol), col("dl")).distinct()
       .agg(count(lit(1)).as("n"), sum(col("dl")).as("sumdl")).head()
     val n = docStats.getLong(0)

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Pin
 import scala.collection.mutable.ArrayBuffer
 
 /** Byte-pair-encoding subword tokenizer: a Spark-first TRAINER (iterative
@@ -370,7 +371,7 @@ object Bpe {
     *  2. each round is a pair-count aggregation over the vocab (map-side
     *     partial agg) + a 1-row argmax collect; the winning pair is folded
     *     into the vocab symbolization via `replace` and lineage is
-    *     truncated with localCheckpoint — the driver never holds more than
+    *     truncated by a round pin — the driver never holds more than
     *     the merge table itself.
     * Ties break deterministically: highest weight, then lexicographic
     * (left, right). Stops early when no pair occurs at least twice. */
@@ -409,22 +410,18 @@ object Bpe {
       minCount: Long = 1L, batch: Int = 100): Seq[(String, String)] = {
     require(nMerges >= 1, s"nMerges must be >= 1, got $nMerges")
     require(batch >= 1, s"batch must be >= 1, got $batch")
-    var vocab = docs
+    // LAZY round pins: each round's candidate collect materializes the
+    // current vocab, and the superseded copy is released right after it
+    val rounds = new Pin.Rounds
+    var vocab = rounds.next(docs
       .select(explode(split(col(textCol), " ")).as("w"))
       .where(length(col("w")) > 0)
       .groupBy("w").agg(count(lit(1)).as("n"))
       .where(col("n") >= minCount)
-      .select(regexp_replace(col("w"), lit("([\\s\\S])"), lit(" $1")).as("sym"), col("n"))
-      .localCheckpoint(eager = false)
+      .select(regexp_replace(col("w"), lit("([\\s\\S])"), lit(" $1")).as("sym"), col("n")))
 
     val merges = ArrayBuffer.empty[(String, String)]
     var done = false
-    // LAZY round checkpoints: each round's candidate collect materializes
-    // the current vocab, so the SUPERSEDED copy is released only after
-    // that collect has run (never before — a lazy checkpoint's lineage is
-    // truncated, so unpersisting its input before materialization would
-    // lose the data). One pinned copy at a time, exactly as before.
-    var superseded: Option[DataFrame] = None
     while (merges.length < nMerges && !done) {
       // over-collect 4× the batch: disjointness filtering skips candidates,
       // and the skipped ones resurface next round (no recall loss)
@@ -442,8 +439,7 @@ object Bpe {
         .where(col("cnt") >= 2)
         .orderBy(col("cnt").desc, col("l"), col("r"))
         .limit(want * 4).collect()
-      superseded.foreach(_.unpersist())
-      superseded = None
+      rounds.read()
       val used = scala.collection.mutable.Set.empty[String]
       val sel = ArrayBuffer.empty[(String, String)]
       cands.iterator.takeWhile(_ => sel.length < want).foreach { row =>
@@ -456,16 +452,10 @@ object Bpe {
       if (sel.isEmpty) done = true
       else {
         merges ++= sel
-        val prev = vocab
-        vocab = vocab
+        // the last round's vocab is never read: no pin for it
+        if (merges.length < nMerges) vocab = rounds.next(vocab
           .withColumn("sym", sel.foldLeft(col("sym")) { case (acc, (l, r)) =>
-            replace(acc, lit(s" $l $r"), lit(s" $l$r")) })
-          .localCheckpoint(eager = false)
-        // release of the superseded checkpoint is DEFERRED to after the
-        // next round's collect (see the note above): BPE tables run to
-        // 10k+ merges, and one pinned vocab copy per round would be a
-        // linear storage leak
-        superseded = Some(prev)
+            replace(acc, lit(s" $l $r"), lit(s" $l$r")) }))
       }
     }
     merges.toSeq

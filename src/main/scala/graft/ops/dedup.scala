@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Pin
 
 /** Deduplication operators for training-data pipelines.
   *
@@ -117,7 +118,7 @@ object Dedup {
     // doc; banding over the cached rows is bands×md5 per doc — noise.
     // Projected first: a caller may pass the full minhashSignatures output,
     // and pinning its text column would cache the corpus itself.
-    val sigs = sigDf.select(col(idCol), col("sig")).localCheckpoint(eager = false)
+    val sigs = Pin(sigDf.select(col(idCol), col("sig")))
     val banded = bandedSignatures(sigs, idCol, bands)
     // The guard itself must not buffer the hot bucket: a windowed count
     // would pull every banded row of the hot bucket into one task, so the
@@ -163,7 +164,7 @@ object Dedup {
 
   /** Exact word-set Jaccard for candidate pairs — the verify stage after
     * LSH banding. `pairs` has (id_a, id_b); returns pairs + jaccard ≥
-    * threshold. */
+    * threshold. Pass `pairs` pinned: it is read three times. */
   def jaccardVerify(docs: DataFrame, idCol: String, textCol: String,
       pairs: DataFrame, threshold: Double): DataFrame =
     jaccardVerifyAcross(docs, docs, idCol, textCol, pairs, threshold)
@@ -171,7 +172,9 @@ object Dedup {
   /** [[jaccardVerify]] over two doc tables: id_a resolves against `docsA`,
     * id_b against `docsB` — ONE copy of the Jaccard formula serves the
     * self-join and cross-corpus cases, and an id present in both tables
-    * can never be matched against the wrong side's text. */
+    * can never be matched against the wrong side's text. `pairs` is read
+    * three times (the pair join and the two semi pre-filters), so pass it
+    * pinned ([[graft.Pin]]) unless it is a trivial relation. */
   def jaccardVerifyAcross(docsA: DataFrame, docsB: DataFrame, idCol: String,
       textCol: String, pairs: DataFrame, threshold: Double): DataFrame = {
     // word sets are computed ONLY for ids that appear in a candidate pair:
@@ -180,8 +183,7 @@ object Dedup {
     // bytes entering the verify joins' exchanges cost O(candidates), never
     // O(corpus) (the guide's project-early / semi-join pre-filter moves).
     // Results identical — the inner joins below keep exactly the pair ids
-    // anyway. Callers whose `pairs` subtree is non-trivial should pass it
-    // materialized (it is consumed three times here).
+    // anyway.
     def words(d: DataFrame, ids: DataFrame) = d
       .join(ids, d(idCol) === ids("__pid"), "left_semi")
       .select(col(idCol).as("__id"),
@@ -206,8 +208,7 @@ object Dedup {
     val sigs = minhashSignatures(docs, textCol, k).select(col(idCol), col("sig"))
     // the verify consumes the candidate pairs three times (pair join + two
     // semi pre-filters) — materialize them once, lazily
-    val cands = lshCandidatePairs(sigs, idCol, bands, maxBucket)
-      .localCheckpoint(eager = false)
+    val cands = Pin(lshCandidatePairs(sigs, idCol, bands, maxBucket))
     jaccardVerify(docs, idCol, textCol, cands, threshold)
   }
 
@@ -316,28 +317,20 @@ object Dedup {
     * the bucket a full re-run over corpus ∪ delta would see, so the guard
     * fires in the same places — audit what it drops with
     * [[lshOversizeBucketsUnion]] (no silent caps). Delta-side stage
-    * outputs feed 2+ consumers each, so they are materialized
-    * (`localCheckpoint`) like the composed cleaning pipeline; pass
-    * `materialize = false` to keep full lineage (plan inspection / tiny
-    * inputs). */
+    * outputs feed 2+ consumers each, so they are pinned lazily
+    * ([[graft.Pin]]): compute-once caching, materialized by the first
+    * consuming job instead of an eager job each. */
   def incrementalDedup(delta: DataFrame, corpus: DataFrame, idCol: String,
       textCol: String, k: Int = 8, bands: Int = 4, threshold: Double = 0.7,
-      maxBucket: Int = 4096, maxIters: Int = 50,
-      materialize: Boolean = true): DataFrame = {
-    // LAZY checkpoints: plan truncation + compute-once caching as before,
-    // but materialization folds into the first consuming job instead of
-    // paying one eager job per checkpoint (the frames feed 2+ consumers
-    // each; later consumers hit the cache exactly as with eager)
-    def mat(df: DataFrame): DataFrame =
-      if (materialize) df.localCheckpoint(eager = false) else df
+      maxBucket: Int = 4096, maxIters: Int = 50): DataFrame = {
     // delegate to the index path with a just-built (materialized — both
     // the hash and banding consumers read it) index: ONE signature pass
     // over the corpus, and the semantics are the index path's by
     // construction. Callers with a persisted index skip this pass
     // entirely via incrementalDedupIndexed.
     incrementalDedupIndexed(delta, corpus,
-      mat(buildIndex(corpus, idCol, textCol, k, bands)),
-      idCol, textCol, k, bands, threshold, maxBucket, maxIters, materialize)
+      Pin(buildIndex(corpus, idCol, textCol, k, bands)),
+      idCol, textCol, k, bands, threshold, maxBucket, maxIters)
   }
 
   /** [[incrementalDedup]] against a PERSISTED corpus index
@@ -364,10 +357,9 @@ object Dedup {
       index: DataFrame, idCol: String, textCol: String,
       k: Int = 8, bands: Int = 4, threshold: Double = 0.7,
       maxBucket: Int = 4096, maxIters: Int = 50,
-      materialize: Boolean = true,
       pruneBucket: Option[(String, Column => Column)] = None): DataFrame =
     incrementalDedupIndexedOutcome(delta, corpus, index, idCol, textCol,
-      k, bands, threshold, maxBucket, maxIters, materialize, pruneBucket).admitted
+      k, bands, threshold, maxBucket, maxIters, pruneBucket).admitted
 
   /** The admission breakdown of one [[incrementalDedupIndexedOutcome]]
     * call — the observability surface an ingest operator watches:
@@ -393,21 +385,18 @@ object Dedup {
       corpus: DataFrame, index: DataFrame, idCol: String, textCol: String,
       k: Int = 8, bands: Int = 4, threshold: Double = 0.7,
       maxBucket: Int = 4096, maxIters: Int = 50,
-      materialize: Boolean = true,
       pruneBucket: Option[(String, Column => Column)] = None): IncrementalOutcome = {
-    // lazy checkpoints — see incrementalDedup's mat note
-    def mat(df: DataFrame): DataFrame =
-      if (materialize) df.localCheckpoint(eager = false) else df
+    // lazy pins — see incrementalDedup's note
     // 1. exact, within delta then vs corpus hash rows (band <= 0 selects
     // exactly one index row per doc; left-anti ignores multiplicity
     // anyway, the predicate just avoids scanning bands× rows)
-    val deltaE = mat(exactDedup(delta, idCol, textCol)
+    val deltaE = Pin(exactDedup(delta, idCol, textCol)
       .join(index.where(col("band") <= 0).select(col("h").as("__ch")),
         md5(col(textCol)) === col("__ch"), "left_anti"))
     // 2. the delta's own index rows, built ONCE: its banded rows drive the
     // LSH pass here and the admitted subset is what the commit appends;
     // corpus side comes from the index; guard on the UNION bucket size
-    val deltaIndex = mat(buildIndex(deltaE, idCol, textCol, k, bands))
+    val deltaIndex = Pin(buildIndex(deltaE, idCol, textCol, k, bands))
     val dBand = indexBands(deltaIndex, idCol)
     val cBand = indexBands(index, idCol)
     // the guard is DELTA-DRIVEN: only buckets the delta actually touches
@@ -432,7 +421,7 @@ object Dedup {
     // the delta side of the cross-candidate join is batch-bounded: hint it
     // as the broadcast build side so the corpus index STREAMS through a
     // BroadcastHashJoin instead of shuffling both sides into a sort-merge
-    val across = mat(gc.as("c").join(broadcast(gd.as("d")),
+    val across = Pin(gc.as("c").join(broadcast(gd.as("d")),
         col("d.band") === col("c.band") && col("d.bandhash") === col("c.bandhash"))
       .select(col("d.__id").as("id_a"), col("c.__id").as("id_b")).distinct())
     // verify each side against its OWN text table — a delta id that
@@ -454,21 +443,21 @@ object Dedup {
     }
     val corpusCands = corpusBase.join(broadcast(candIds),
       corpusBase(idCol) === col("__cid"), "left_semi")
-    val matched = mat(
+    val matched = Pin(
       jaccardVerifyAcross(deltaE, corpusCands, idCol, textCol,
           broadcast(across), threshold)
         .select(col("id_a").as("__mid")).distinct())
     // 3. within-delta near-dup clusters (same guarded banding reused); a
     //    corpus match poisons its whole cluster. Both sides batch-bounded
     //    — broadcast one so the self-join needs no shuffle.
-    val withinCands = mat(gd.as("x").join(broadcast(gd.as("y")),
+    val withinCands = Pin(gd.as("x").join(broadcast(gd.as("y")),
         col("x.band") === col("y.band") && col("x.bandhash") === col("y.bandhash") &&
         col("x.__id") < col("y.__id"))
       .select(col("x.__id").as("id_a"), col("y.__id").as("id_b")).distinct())
     val deltaPairs = jaccardVerify(deltaE, idCol, textCol,
         broadcast(withinCands), threshold)
       .select(col("id_a"), col("id_b"))
-    val clusters = mat(resolveClusters(deltaPairs, maxIters = maxIters))
+    val clusters = Pin(resolveClusters(deltaPairs, maxIters = maxIters))
     val poisoned = clusters
       .join(matched, col("id") === col("__mid"))
       .select(col("cluster_id").as("__pc")).distinct()
@@ -542,9 +531,8 @@ object Dedup {
     // simhash is typically an explode+aggregate over every word of the
     // corpus. Cache the narrow (id, simhash) relation once, lazily; the
     // band explode over cached rows is bit algebra.
-    val banded = df
-      .select(col(idCol).as("__id"), col(simhashCol).as("__sh"))
-      .localCheckpoint(eager = false)
+    val banded = Pin(df
+      .select(col(idCol).as("__id"), col(simhashCol).as("__sh")))
       .select(col("__id"), col("__sh"), explode(array(bandStructs: _*)).as("__b"))
       .select(col("__id"), col("__sh"),
         col("__b.band").as("band"), col("__b.bv").as("bv"))
@@ -623,19 +611,21 @@ object Dedup {
     * skips the fixpoint loop ENTIRELY for pair graphs that are already
     * star forests — the common LSH output of isolated near-dup pairs and
     * small first-linked clusters. O(log²) rounds on worst-case path
-    * graphs. Each round's result is lazily localCheckpoint'ed (the
-    * convergence-test job materializes it — one job, not two) to truncate
-    * the iterative lineage (swap for reliable checkpoint() on a real
-    * cluster). Throws IllegalStateException after `maxIters` rounds —
-    * convergence is a correctness precondition for the star→cluster read. */
+    * graphs. Each round's result is pinned lazily through
+    * [[graft.Pin.Rounds]] (the convergence-test job materializes it — one
+    * job, not two), which truncates the iterative lineage (swap for a
+    * reliable checkpoint on a real cluster) and releases the superseded
+    * round right after that test. Throws
+    * IllegalStateException after `maxIters` rounds — convergence is a
+    * correctness precondition for the star→cluster read. */
   def resolveClusters(pairs: DataFrame, idA: String = "id_a",
       idB: String = "id_b", maxIters: Int = 50): DataFrame = {
     require(maxIters >= 1, s"maxIters must be >= 1, got $maxIters")
-    var edges = pairs
+    val rounds = new Pin.Rounds
+    var edges = rounds.next(pairs
       .select(least(col(idA), col(idB)).as("src"), greatest(col(idA), col(idB)).as("dst"))
       .where(col("src") =!= col("dst"))
-      .distinct()
-      .localCheckpoint(eager = false)
+      .distinct())
 
     // star-forest fixpoint test: one partial-agg pass over 2|E| narrow
     // rows; empty edge sets are trivially converged
@@ -649,10 +639,9 @@ object Dedup {
     var converged = isStarForest(edges)
     var it = 0
     while (!converged && it < maxIters) {
-      val prev0 = edges
-      edges = smallStar(largeStar(edges)).localCheckpoint(eager = false)
+      edges = rounds.next(smallStar(largeStar(edges)))
       converged = isStarForest(edges)
-      prev0.unpersist() // superseded checkpoint: ~log(diameter) rounds, one pinned edge copy each
+      rounds.read()
       it += 1
     }
     if (!converged)

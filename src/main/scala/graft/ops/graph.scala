@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Pin
 
 /** Link-graph operators — the quality-propagation stage a web-scale corpus
   * pipeline runs between extraction and filtering. The canonical instance
@@ -27,16 +28,17 @@ object Graph {
     *
     * Everything stays DataFrame-side:
     *  - the edge set is null-pruned, deduped (unweighted classic form) and
-    *    localCheckpoint'ed ONCE together with its out-degrees, so the
+    *    pinned ONCE together with its out-degrees, so the
     *    per-iteration plans never re-run the — possibly expensive,
     *    e.g. extraction-derived — upstream lineage;
     *  - each round is ONE data-scale shuffle: edges equi-joined to the
     *    node-sized rank relation on src, partial-agg summed per dst; the
     *    dangling mass is a 1-ROW aggregate cross-joined back (a broadcast
     *    of one row — not a data-scale cartesian);
-    *  - ranks live as a (node, rank) relation between rounds
-    *    (localCheckpoint'ed, the superseded snapshot unpersisted — the
-    *    same discipline as [[Similarity]]'s DataFrame-side Lloyd loop).
+    *  - ranks live as a (node, rank) relation between rounds, pinned
+    *    lazily through [[graft.Pin.Rounds]]: one job forces the pending
+    *    rounds every [[graft.Pin.K]] rounds and the superseded ones are
+    *    released, so at most K + 1 rank copies are pinned at once.
     *    The relation is NODE-count-sized (hosts/domains, not documents),
     *    and never transits the driver; the only driver action is one
     *    count() for the scalar n.
@@ -51,73 +53,45 @@ object Graph {
     * Returns (node, rank) with Σrank ≈ 1, deterministic up to
     * floating-point summation order — round for cross-engine compares
     * (see [[pageRankCtes]], the generated DuckDB twin). The returned frame
-    * is its own checkpoint; every intermediate checkpoint (edges, nodes,
-    * degrees, superseded ranks) is unpersisted before returning, so
-    * repeated calls (per-crawl-increment ranking) leak nothing.
+    * is its own pin; every other pin (edges, nodes, degrees, superseded
+    * ranks) is released before returning, so repeated calls
+    * (per-crawl-increment ranking) keep one pinned copy each.
     *
-    * `materialize = false` skips ALL checkpointing and returns the fully
-    * composed plan — the plan-inspection/test hook (per-iteration join
-    * shapes are assertable; lineage grows with `iters`, so production
-    * callers leave it true). Host-extraction callers: prune the
-    * empty-string no-match sentinel from regexp-derived edges first, or
-    * it becomes a phantom node absorbing rank mass. */
+    * Host-extraction callers: prune the empty-string no-match sentinel
+    * from regexp-derived edges first, or it becomes a phantom node
+    * absorbing rank mass. */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
-      iters: Int, damping: Double = 0.85,
-      materialize: Boolean = true): DataFrame = {
+      iters: Int, damping: Double = 0.85): DataFrame = {
     require(iters >= 0, s"iters must be >= 0, got $iters")
     require(damping > 0 && damping < 1,
       s"damping must be in (0,1), got $damping")
-    // LAZY checkpoints: every round still truncates lineage to a
-    // node-sized segment, but materialization is deferred to ONE cascade
-    // at the end — the per-round eager-checkpoint job and its driver
-    // round trip disappear; the cascade runs the same stages back to
-    // back. Superseded rounds stay pinned only until the cascade, then
-    // every intermediate is unpersisted exactly as before.
-    def mat(df: DataFrame): DataFrame =
-      if (materialize) df.localCheckpoint(eager = false) else df
-    // force a lazily-checkpointed frame's partitions without a row-level
-    // action (no encoder round trip, no extra exchange)
-    def force(df: DataFrame): Unit =
-      if (materialize) df.queryExecution.toRdd.foreachPartition(_ => ())
-    val e = mat(edges
+    val e = Pin(edges
       .select(col(srcCol).cast("string").as("src"),
         col(dstCol).cast("string").as("dst"))
       .where(col("src").isNotNull && col("dst").isNotNull)
       .distinct())
-    val nodes = mat(e.select(col("src").as("node"))
+    val nodes = Pin(e.select(col("src").as("node"))
       .union(e.select(col("dst")))
       .distinct())
-    val deg = mat(e.groupBy("src")
+    val deg = Pin(e.groupBy("src")
       .agg(count(lit(1)).cast("double").as("__od")))
-    def release(): Unit =
-      if (materialize) Seq(e, nodes, deg).foreach(_.unpersist())
     val n = nodes.count().toDouble
-    if (n == 0) {
-      val out = mat(nodes.withColumn("rank", lit(0.0d)))
-      force(out) // self-contained before its inputs are unpersisted
-      release()
-      return out
-    }
-    var ranks = mat(nodes.withColumn("rank", lit(1.0 / n)))
-    val superseded = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    (0 until iters).foreach { _ =>
+    val rounds = new Pin.Rounds
+    var ranks = rounds.next(nodes.withColumn("rank", lit(if (n == 0) 0.0 else 1.0 / n)))
+    (0 until (if (n == 0) 0 else iters)).foreach { _ =>
       val share = ranks.join(deg, ranks("node") === deg("src"))
         .select(col("src"), (col("rank") / col("__od")).as("__sh"))
       val contrib = e.join(share, "src")
         .groupBy(col("dst").as("node")).agg(sum(col("__sh")).as("__c"))
       val dangling = ranks.join(deg, ranks("node") === deg("src"), "left_anti")
         .agg(coalesce(sum(col("rank")), lit(0.0)).as("__dm"))
-      val prev = ranks
-      ranks = mat(nodes.join(contrib, Seq("node"), "left")
+      ranks = rounds.next(nodes.join(contrib, Seq("node"), "left")
         .crossJoin(broadcast(dangling))
         .select(col("node"),
           (lit((1.0 - damping) / n) + lit(damping) *
             (coalesce(col("__c"), lit(0.0)) + col("__dm") / n)).as("rank")))
-      if (materialize) superseded += prev
     }
-    force(ranks) // one cascade materializes every pending round in order
-    superseded.foreach(_.unpersist())
-    release()
+    rounds.done(e, nodes, deg)
     ranks
   }
 

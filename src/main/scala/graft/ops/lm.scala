@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Pin
 
 /** N-gram language-model quality scoring — the CCNet-style gate
   * (Wenzek et al. 2020, "CCNet: Extracting High Quality Monolingual
@@ -75,7 +76,7 @@ object Lm {
   def trainBigramLm(ref: DataFrame, textCol: String): DataFrame = {
     // three consumers (vocab count, seen rows, per-prev unseen rows) —
     // materialize the counts once instead of re-scanning the reference
-    val counts = bigramCounts(ref, textCol).localCheckpoint(eager = false)
+    val counts = Pin(bigramCounts(ref, textCol))
     val vocab = counts.select(col("word")).distinct().count()
     require(vocab > 0,
       "trainBigramLm: empty reference corpus (vocab = 0) — refusing to " +
@@ -194,7 +195,7 @@ object Lm {
     * rows — [[stupidBackoffScore]] adds [[BackoffPenaltyQ]] per level at
     * lookup, so one model serves every order prefix. */
   def trainStupidBackoff(ref: DataFrame, textCol: String, n: Int = 3): DataFrame = {
-    val counts = backoffCounts(ref, textCol, n).localCheckpoint(eager = false)
+    val counts = Pin(backoffCounts(ref, textCol, n))
     val q = (p: Column) => floor(log(p) * lit(1e6)).cast("bigint")
     val seen = counts.select(col("ord"), col("ctx"), col("word"),
       q(col("cnt").cast("double") / col("tot")).as("logp_q"))

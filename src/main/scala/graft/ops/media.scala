@@ -280,7 +280,10 @@ object Media {
 
   /** Exact byte-shingle-set Jaccard for candidate pairs — the verify
     * stage after banding (the binary analog of Dedup.jaccardVerify):
-    * pair-driven equi-joins against the payload table, never all-pairs. */
+    * pair-driven equi-joins against the payload table, never all-pairs.
+    * `pairs` is read three times (the pair join and the two semi
+    * pre-filters), so pass it pinned ([[graft.Pin]]) unless it is a
+    * trivial relation. */
   def binaryJaccardVerify(df: DataFrame, idCol: String, binCol: String,
       pairs: DataFrame, n: Int, threshold: Double): DataFrame = {
     // shingle sets only for ids that appear in a candidate pair (the text
@@ -316,8 +319,7 @@ object Media {
       .select(col(idCol), col("sig"))
     // the verify consumes the candidates three times (pair join + two semi
     // pre-filters) — materialize them once, lazily
-    val cands = Dedup.lshCandidatePairs(sigs, idCol, bands, maxBucket)
-      .localCheckpoint(eager = false)
+    val cands = graft.Pin(Dedup.lshCandidatePairs(sigs, idCol, bands, maxBucket))
     binaryJaccardVerify(df, idCol, binCol, cands, n, threshold)
   }
 

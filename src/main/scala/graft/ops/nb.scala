@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Pin
 
 /** Multinomial Naive Bayes text classifier — the from-scratch analog of
   * the linear fastText classifier CCNet-style pipelines pair with their LM
@@ -66,7 +67,7 @@ object NaiveBayes {
     val base = labeled.where(col(textCol).isNotNull)
     // three consumers (vocab count, feat rows, unseen rows) — materialize
     // the counts once instead of re-scanning the labeled sample
-    val counts = nbCounts(base, textCol, labelCol).localCheckpoint(eager = false)
+    val counts = Pin(nbCounts(base, textCol, labelCol))
     val vocab = counts.select(col("word")).distinct().count()
     require(vocab > 0,
       "trainNb: empty labeled sample (vocab = 0) — refusing to train a " +
@@ -79,8 +80,8 @@ object NaiveBayes {
         lit("unseen").as("kind"),
         q(lit(1.0) / (col("tot") + lit(vocab))).as("logp_q"))
     // one scan: per-label doc counts; their sum is the prior denominator
-    val nd = base.groupBy(col(labelCol).as("label"))
-      .agg(count(lit(1)).as("nd")).localCheckpoint(eager = false)
+    val nd = Pin(base.groupBy(col(labelCol).as("label"))
+      .agg(count(lit(1)).as("nd")))
     val nDocs = nd.agg(sum(col("nd"))).head().getLong(0)
     val prior = nd.select(col("label"), lit(null).cast("string").as("word"),
       lit("prior").as("kind"),

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Pin
 
 /** Product quantization (PQ) — the memory-bounded ANN path beside IVF and
   * SRP-LSH: vectors are split into `m` subspaces, each subspace gets its
@@ -98,8 +99,8 @@ object Pq {
     * assign, one (subspace, code, dim)-mean aggregation per round. The
     * loop is DATAFRAME-side end to end (same discipline as
     * [[Similarity.refineCentroids]]): the codebook lives as a
-    * (sub, code, centroid) relation between rounds (localCheckpoint'ed —
-    * m·k rows), the per-round means join back onto it (empty cells keep
+    * (sub, code, centroid) relation between rounds (pinned through
+    * [[graft.Pin.Rounds]] — m·k rows, at most K + 1 copies), the per-round means join back onto it (empty cells keep
     * their previous centroid via the left-join coalesce), and the ONLY
     * driver collect is the FINAL codebook — which must reach the driver
     * anyway for LUT construction. No per-round driver transfer scales
@@ -110,14 +111,12 @@ object Pq {
     val spark = corpus.sparkSession
     import spark.implicits._
     val (m, k, subdim) = (cb0.length, cb0.head.length, subdimOf(cb0))
-    // LAZY round checkpoints (the pageRank cascade pattern): the codebook
-    // relation is m×k rows per round, so pinning every round until the
-    // final collect is config-sized; the collect materializes the whole
-    // cascade in one job sequence, then the intermediates are released
-    var cbDf = cb0.zipWithIndex.flatMap { case (cents, s) =>
+    // LAZY round pins (the pageRank cascade pattern): no action per
+    // round; the final collect materializes the pending cascade
+    val rounds = new Pin.Rounds
+    var cbDf = rounds.next(cb0.zipWithIndex.flatMap { case (cents, s) =>
       cents.zipWithIndex.map { case (c, code) => (s, code, c) }
-    }.toDF("__sub", "__code", "__cent").localCheckpoint(eager = false)
-    val superseded = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
+    }.toDF("__sub", "__code", "__cent"))
     (0 until iters).foreach { _ =>
       // rebuild the per-subspace broadcast codebook FROM the relation
       val cbBySub = cbDf.groupBy(col("__sub"))
@@ -132,19 +131,16 @@ object Pq {
         .agg(avg(col("__x")).as("__m"))
       val prevExpl = cbDf.select(col("__sub"), col("__code"),
         posexplode(col("__cent")).as(Seq("__d", "__pv")))
-      val prev = cbDf
-      cbDf = prevExpl.join(means, Seq("__sub", "__code", "__d"), "left")
+      cbDf = rounds.next(prevExpl.join(means, Seq("__sub", "__code", "__d"), "left")
         .select(col("__sub"), col("__code"), col("__d"),
           coalesce(col("__m"), col("__pv")).as("__v"))
         .groupBy(col("__sub"), col("__code"))
         .agg(expr("transform(array_sort(collect_list(struct(__d, __v))), s -> s.__v)")
-          .as("__cent"))
-        .localCheckpoint(eager = false)
-      superseded += prev
+          .as("__cent")))
     }
     val rows = cbDf.collect()
       .map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Double](2).toSeq).toMap
-    superseded.foreach(_.unpersist())
+    rounds.read()
     (0 until m).map(s => (0 until k).map(code => rows((s, code))))
   }
 

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Pin
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (array<float>).
@@ -118,10 +119,9 @@ object Similarity {
     // — cache it lazily so the SRP hash (nPlanes dot products per vector)
     // runs once per corpus, not once per consumer (same compute-once
     // discipline as lshCandidatePairs / semanticNearDupPairs)
-    val b0 = srpBucket(corpus.select(col(idCol).as("__id"), col(vecCol).as("__v")),
+    val b0 = Pin(srpBucket(corpus.select(col(idCol).as("__id"), col(vecCol).as("__v")),
         "__v", nPlanes, dims)
-      .withColumn("__n", norm("__v"))
-      .localCheckpoint(eager = false)
+      .withColumn("__n", norm("__v")))
     // hot-bucket guard, same rationale as Dedup.lshCandidatePairs: a
     // cluster of identical embeddings shares one SRP bucket and would
     // self-join quadratically — dedup exact-duplicate vectors first
@@ -167,12 +167,11 @@ object Similarity {
       threshold: Double, nCentroids: Int, lloydIters: Int = 0,
       maxCell: Int = 4096): DataFrame = {
     // the assignment feeds three consumers (the cell-size guard and both
-    // sides of the pairing self-join) — checkpoint it lazily so the
+    // sides of the pairing self-join) — pin it lazily so the
     // centroid ranking runs ONCE per corpus, not once per consumer (the
     // same corpus-sized compute-once discipline as the incremental-dedup
     // delta frames; MEMORY_AND_DISK, spills at scale)
-    val assigned0 = assignCells(corpus, idCol, vecCol, nCentroids, lloydIters)
-      .localCheckpoint(eager = false)
+    val assigned0 = Pin(assignCells(corpus, idCol, vecCol, nCentroids, lloydIters))
     val assigned =
       if (maxCell <= 0) assigned0
       else {
@@ -381,7 +380,8 @@ object Similarity {
   /** `iters` Lloyd refinements of `cents` over the corpus: assign → mean
     * per (cell, dim) → rebuild. The loop is DATAFRAME-side end to end:
     * the centroid table lives as a (cell, vector) relation between
-    * rounds (localCheckpoint'ed — nCentroids rows), the assign is the
+    * rounds (pinned eagerly through [[graft.Pin.Rounds]], the superseded
+    * round released — nCentroids rows), the assign is the
     * broadcast-join [[cellRanksByDf]], the update is one
     * groupBy(cell, dim) mean joined back onto the previous centroids
     * (empty cells keep their value via the left-join coalesce), and the
@@ -396,8 +396,9 @@ object Similarity {
     val spark = corpus.sparkSession
     import spark.implicits._
     val n = cents.length
-    var centsDf = cents.zipWithIndex.map { case (c, i) => (i, c) }
-      .toDF("__cid", "__cv").localCheckpoint()
+    val rounds = new Pin.Rounds
+    var centsDf = rounds.now(cents.zipWithIndex.map { case (c, i) => (i, c) }
+      .toDF("__cid", "__cv"))
     (0 until iters).foreach { _ =>
       val means = cellRanksByDf(
           corpus.select(col(vecCol)).withColumn("__vid", monotonically_increasing_id()),
@@ -407,14 +408,11 @@ object Similarity {
         .agg(avg(col("__x")).as("__m"))
       val prevExpl = centsDf
         .select(col("__cid"), posexplode(col("__cv")).as(Seq("__d", "__pv")))
-      val prev = centsDf
-      centsDf = prevExpl.join(means, Seq("__cid", "__d"), "left")
+      centsDf = rounds.now(prevExpl.join(means, Seq("__cid", "__d"), "left")
         .select(col("__cid"), col("__d"), coalesce(col("__m"), col("__pv")).as("__v"))
         .groupBy(col("__cid"))
         .agg(expr("transform(array_sort(collect_list(struct(__d, __v))), s -> s.__v)")
-          .as("__cv"))
-        .localCheckpoint()
-      prev.unpersist()
+          .as("__cv")))
     }
     centsDf.orderBy(col("__cid"))
       .collect().map(_.getSeq[Double](1).toSeq).toSeq
@@ -504,7 +502,7 @@ object Similarity {
     * [[ivfTopKIndexed]] and the manifest-committed streaming index
     * ([[graft.streaming.VectorIndexStream]]) so their decisions are the
     * same plan by construction: rank every probe's `nProbe` nearest cells
-    * against `cents`, localCheckpoint once (the ranking feeds both the
+    * against `cents`, pin once (the ranking feeds both the
     * prune and the join), and return the deduped probed-cell list — the
     * config-sized collect (≤ probes × nProbe, ≤ nCentroids absolutely)
     * that becomes the pruning literal. */
@@ -514,15 +512,14 @@ object Similarity {
     require(nProbe >= 1, s"nProbe must be >= 1, got $nProbe")
     require(nProbe <= cents.length,
       s"nProbe $nProbe exceeds the index's ${cents.length} cells")
-    val p = cellRanks(
+    // ranked once; reused for the prune AND the join (lazy — the prune
+    // collect right below materializes it)
+    val p = Pin(cellRanks(
         probes.select(col(idCol).as("probe_id"), col(vecCol).as("__pv")),
         "probe_id", "__pv", cents, maxRank = nProbe)
       .withColumn("__pn", norm("__pv"))
       .withColumn("cell", col("__cell").cast("int"))
-      .drop("__cell", "__rk")
-      // ranked once; reused for the prune AND the join (lazy — the prune
-      // collect right below materializes it)
-      .localCheckpoint(eager = false)
+      .drop("__cell", "__rk"))
     val probedCells = p.select(col("cell")).distinct()
       .collect().map(_.getInt(0)).sorted // config-sized: ≤ nCentroids
     (p, probedCells)

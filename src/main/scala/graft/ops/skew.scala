@@ -85,10 +85,10 @@ object Skew {
       sampleCol: Option[String] = None): DataFrame = {
     // the detector aggregation scans the BIG side — materialize its tiny
     // result once (one row per hot key) so the two joins below don't each
-    // recompute the scan+shuffle
-    val hot = detectHotKeys(big, key, targetRows, sampleBp, sampleCol)
-      .select(col(key), col("salt").as("__k"))
-      .localCheckpoint(eager = false)
+    // recompute the scan+shuffle. Lazy: q_skew_detect runs 8 jobs with it,
+    // 9 with an eager pin
+    val hot = graft.Pin(detectHotKeys(big, key, targetRows, sampleBp, sampleCol)
+      .select(col(key), col("salt").as("__k")))
     val bigS = big.join(broadcast(hot), Seq(key), "left")
       .withColumn("__k", coalesce(col("__k"), lit(1)))
       .withColumn("__salt", pmod(hash(struct(big.columns.map(col): _*)), col("__k")))

@@ -488,7 +488,7 @@ object ExtractJob {
     // the key set is the size of a forget request — distinct once, reused
     // by the locate scan and every rewrite group (lazy: the first consumer
     // materializes it, later ones hit the cache)
-    val keySet = keys.select(col(keyCol)).distinct().localCheckpoint(eager = false)
+    val keySet = Pin(keys.select(col(keyCol)).distinct())
 
     // one footer read per bucket, on the driver; buckets without keyCol
     // hold no per-document rows and are skipped, the rest group by schema

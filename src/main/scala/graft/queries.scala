@@ -1677,9 +1677,8 @@ object Queries {
         val docs = t(s, dir, "documents").where($"doc_id" < 400)
           .select($"doc_id", $"text")
         // postings feed the dictionary build AND the scoring join — one
-        // lazy checkpoint computes the explode+agg once
-        val post = ops.Bm25.postings(docs, "doc_id", "text")
-          .localCheckpoint(eager = false)
+        // lazy pin computes the explode+agg once
+        val post = Pin(ops.Bm25.postings(docs, "doc_id", "text"))
         Queries.synchronized {
           ops.Bm25.dictionary(post, "doc_id")
             .coalesce(1).write.mode("overwrite").parquet(dictPath)
@@ -1762,20 +1761,17 @@ object Queries {
       // LAZY checkpoints: same stage-boundary materialization points and
       // the same compute-once caching (each stage feeds 2+ consumers), but
       // the first consuming job materializes each — no eager job per stage
-      val exact = ops.Dedup.exactDedup(kept, "doc_id", "text")
-        .localCheckpoint(eager = false)
+      val exact = Pin(ops.Dedup.exactDedup(kept, "doc_id", "text"))
       // signatures are materialized INSIDE lshCandidatePairs (compute-once
       // for the guard + both self-join sides) — no second checkpoint here
       val sigs = ops.Dedup.minhashSignatures(exact, "text", 8)
         .select($"doc_id", $"sig")
       // the verify consumes cands three times (pair join + two semi
       // pre-filters) — materialize once, lazily
-      val cands = ops.Dedup.lshCandidatePairs(sigs, "doc_id", bands = 4)
-        .localCheckpoint(eager = false)
-      val pairs = ops.Dedup.jaccardVerify(exact, "doc_id", "text", cands, 0.5)
-        .select($"id_a", $"id_b").localCheckpoint(eager = false)
-      val resolved = ops.Dedup.dedupCorpus(exact, "doc_id", pairs)
-        .localCheckpoint(eager = false)
+      val cands = Pin(ops.Dedup.lshCandidatePairs(sigs, "doc_id", bands = 4))
+      val pairs = Pin(ops.Dedup.jaccardVerify(exact, "doc_id", "text", cands, 0.5)
+        .select($"id_a", $"id_b"))
+      val resolved = Pin(ops.Dedup.dedupCorpus(exact, "doc_id", pairs))
       val bench = Seq(ops.Cleaning.BenchProbe).toDF("text")
       val cleanIds = ops.Cleaning.decontaminate(resolved, bench, "doc_id", "text", 5)
         .where($"keep" === 1).select("doc_id")
@@ -2061,11 +2057,10 @@ object Queries {
       val base = t(s, dir, "embeddings").where($"vec_id" < 150)
         .select($"vec_id", $"embedding")
       val corpus = base.union(base.select(($"vec_id" + 1000).as("vec_id"), $"embedding"))
-      val bk = corpus.select($"vec_id", expr(srpQuantBucket).as("bucket"),
+      // both self-join sides — hash/quantize each vector once, not twice
+      val bk = Pin(corpus.select($"vec_id", expr(srpQuantBucket).as("bucket"),
           expr("transform(embedding, x -> cast(floor(cast(x as double)*1000) as bigint))").as("qv"))
-        .withColumn("nrm", expr("aggregate(qv, 0L, (a, x) -> a + x*x)"))
-        // both self-join sides — hash/quantize each vector once, not twice
-        .localCheckpoint(eager = false)
+        .withColumn("nrm", expr("aggregate(qv, 0L, (a, x) -> a + x*x)")))
       bk.as("x").join(bk.as("y"),
           col("x.bucket") === col("y.bucket") && col("x.vec_id") < col("y.vec_id"))
         .withColumn("dot",

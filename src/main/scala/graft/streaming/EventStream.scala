@@ -512,8 +512,8 @@ object EventStream {
     * corpus text is only reached through the candidates' sub-buckets. */
   private[graft] def admissionOutcome(spark: SparkSession, batch: DataFrame,
       table: graft.Manifest, bootstrap: Boolean, idCol: String, textCol: String,
-      threshold: Double, k: Int, bands: Int, corpusBuckets: Int,
-      materialize: Boolean = true): graft.ops.Dedup.IncrementalOutcome = {
+      threshold: Double, k: Int, bands: Int,
+      corpusBuckets: Int): graft.ops.Dedup.IncrementalOutcome = {
     val (corpus, index, prune) =
       if (!bootstrap) {
         // the corpus keeps its `bucket` partition column: pruneBucket
@@ -529,7 +529,7 @@ object EventStream {
           None)
     graft.ops.Dedup.incrementalDedupIndexedOutcome(
       batch, corpus, index, idCol, textCol, k, bands, threshold,
-      materialize = materialize, pruneBucket = prune)
+      pruneBucket = prune)
   }
 
   private[graft] def admitIndexedBatch(batch: DataFrame, batchId: Long,
@@ -561,9 +561,9 @@ object EventStream {
     val outcome = admissionOutcome(spark, batch, table, bootstrap,
       idCol, textCol, threshold, k, bands, corpusBuckets)
     // admitted feeds three consumers (corpus write, index rows, stats) —
-    // lazily checkpointed: compute-once caching, materialized by the
-    // first consuming job below instead of an eager job of its own
-    val admitted = outcome.admitted.localCheckpoint(eager = false)
+    // pinned lazily: compute-once caching, materialized by the first
+    // consuming job below instead of an eager job of its own
+    val admitted = graft.Pin(outcome.admitted)
     // the admitted rows' index rows were already built for the LSH pass:
     // buildIndex is per-row and admitted ⊆ exactSurvivors, so the semi
     // join IS buildIndex(admitted) without a second signature pass

@@ -210,11 +210,9 @@ object VectorIndexStream {
       .exists(_.buckets.exists(b => b.bucket == cbBucket && b.rows > 0))
     // rows with null id or vector cannot be assigned (and a null id would
     // break probe ranking) — dropped, but COUNTED in the metrics row
-    val rows = batch
-      .where(col(idCol).isNotNull && col(vecCol).isNotNull)
-      .localCheckpoint(eager = false)
+    val rows = graft.Pin(batch.where(col(idCol).isNotNull && col(vecCol).isNotNull))
     // independent counts overlap (guide §2.6); the nRows count also
-    // materializes the lazily-checkpointed `rows`
+    // materializes the lazily pinned `rows`
     val (nInput, nRows) = graft.Par.par2(() => batch.count(), () => rows.count())
     initialCodebook.foreach { cb =>
       require(cb.nonEmpty && cb.length <= nCells,
@@ -233,11 +231,11 @@ object VectorIndexStream {
     // then grows nCells× faster than it needs to between compactions
     val assigned =
       if (nRows == 0L) None
-      else Some(graft.ops.Similarity.cellRanks(rows, idCol, vecCol, cents,
+      else Some(graft.Pin(graft.ops.Similarity.cellRanks(rows, idCol, vecCol, cents,
           maxRank = 1)
         .withColumn("bucket", col("__cell").cast("int"))
         .drop("__cell", "__rk")
-        .repartition(col("bucket")).localCheckpoint(eager = false))
+        .repartition(col("bucket"))))
 
     // semantic near-dup ADMISSION gate (opt-in, the SemDeDup-at-ingest
     // composition): a batch row is dropped — and counted in the metrics —
@@ -265,8 +263,7 @@ object VectorIndexStream {
     val (admitted, nNearDropped, nGateSkipped): (Option[DataFrame], Long, Long) =
       (assigned, nearDupCosine) match {
         case (Some(a0), Some(t)) =>
-          val a = a0.withColumn("__n1", Similarity.norm(vecCol))
-            .localCheckpoint(eager = false)
+          val a = graft.Pin(a0.withColumn("__n1", Similarity.norm(vecCol)))
           // batch-side cell sizes: one config-sized collect (≤ nCells)
           val batchCellN: Map[Int, Long] = a.groupBy(col("bucket"))
             .agg(count(lit(1)).as("__c")).collect()
@@ -288,7 +285,7 @@ object VectorIndexStream {
             .where(col("__ia") < col(idCol) &&
               nearPred(cosine("__av", vecCol, "__na", "__n1"), t))
             .select(col(idCol))
-          val drops = (if (candCells.isEmpty) intraDrops else {
+          val drops = graft.Pin((if (candCells.isEmpty) intraDrops else {
             val cands = table.readData(spark, Some(candCells))
               .select(col("bucket"), col(vecCol).as("__cv3"))
               .withColumn("__n3", Similarity.norm("__cv3"))
@@ -296,11 +293,11 @@ object VectorIndexStream {
               .where(nearPred(cosine(vecCol, "__cv3", "__n1", "__n3"), t))
               .select(col(idCol))
               .unionByName(intraDrops)
-          }).distinct().localCheckpoint(eager = false)
+          }).distinct())
           // re-cluster by cell after the anti-join shuffled by id — the
           // partitioned write below must stay one-file-per-touched-cell
-          val kept = a0.join(drops, Seq(idCol), "left_anti")
-            .repartition(col("bucket")).localCheckpoint(eager = false)
+          val kept = graft.Pin(a0.join(drops, Seq(idCol), "left_anti")
+            .repartition(col("bucket")))
           val nKept = kept.count()
           (if (nKept == 0L) None else Some(kept), nRows - nKept, skipped)
         case _ => (assigned, 0L, 0L)

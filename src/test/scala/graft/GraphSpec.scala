@@ -83,14 +83,13 @@ class GraphSpec extends AnyFunSuite {
   }
 
   test("the only cartesian in the plan is the 1-row dangling broadcast") {
-    // materialize = false returns the COMPOSED plan (no localCheckpoint
+    // under Pin.lineage pageRank returns the COMPOSED plan (no pin
     // truncation), so this asserts the real per-iteration join shapes —
     // a checkpointed result would reduce to a cached-block scan and pass
     // vacuously no matter what the iteration did
     val df = Seq(("a", "b"), ("b", "a")).toDF("s", "t")
-    val plan = ops.Graph.pageRank(df, "s", "t", iters = 1,
-        materialize = false)
-      .queryExecution.executedPlan.toString
+    val plan = Pin.lineage { ops.Graph.pageRank(df, "s", "t", iters = 1)
+      .queryExecution.executedPlan.toString }
     assert(!plan.contains("CartesianProduct"), plan)
     // exactly ONE nested-loop join: the broadcast of the 1-row dangling
     // aggregate. The rank/contribution joins must all be hash equi-joins.
@@ -99,8 +98,8 @@ class GraphSpec extends AnyFunSuite {
     // and both plan variants agree on the numbers
     val a = ops.Graph.pageRank(df, "s", "t", iters = 3)
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    val b = ops.Graph.pageRank(df, "s", "t", iters = 3, materialize = false)
-      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+    val b = Pin.lineage { ops.Graph.pageRank(df, "s", "t", iters = 3)
+      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap }
     assert(a == b)
   }
 }

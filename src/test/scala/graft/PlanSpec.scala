@@ -259,14 +259,12 @@ class PlanSpec extends AnyFunSuite {
     import spark.implicits._
     val docs = spark.read.parquet(s"$dir/documents.parquet")
       .select($"doc_id", $"text")
-    // materialize=false keeps the candidate/verify/anti-join lineage
-    // visible (resolveClusters checkpoints its fixpoint rounds regardless,
-    // so the star-rewrite joins are asserted by their own OpsSpec/bench,
-    // not here)
-    val p = ops.Dedup.incrementalDedup(
+    // Pin.lineage keeps the candidate/verify/anti-join lineage visible,
+    // resolveClusters' fixpoint rounds included
+    val p = Pin.lineage { ops.Dedup.incrementalDedup(
         docs.where($"doc_id" >= 200), docs.where($"doc_id" < 200),
-        "doc_id", "text", materialize = false)
-      .queryExecution.executedPlan.toString
+        "doc_id", "text")
+      .queryExecution.executedPlan.toString }
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
       p.take(1500))
   }
@@ -290,9 +288,8 @@ class PlanSpec extends AnyFunSuite {
     val corpus = base.where($"doc_id" < 40)
     val delta = base.where($"doc_id" >= 40 && $"doc_id" < 60)
     val index = ops.Dedup.buildIndex(corpus, "doc_id", "text").localCheckpoint()
-    val admitted = ops.Dedup.incrementalDedupIndexed(delta, corpus, index,
-      "doc_id", "text", materialize = false)
-    val p = admitted.queryExecution.executedPlan.toString
+    val p = Pin.lineage { ops.Dedup.incrementalDedupIndexed(delta, corpus, index,
+      "doc_id", "text").queryExecution.executedPlan.toString }
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
       p.take(800))
     // the candidate-id semi filter reaches the corpus as a broadcast join
@@ -312,9 +309,9 @@ class PlanSpec extends AnyFunSuite {
     val delta = base.where($"doc_id" < 5)
       .select(($"doc_id" + 9000).as("doc_id"), concat($"text", lit(" zz")).as("text"))
     val index = ops.Dedup.buildIndex(corpus, "doc_id", "text").localCheckpoint()
-    val p = ops.Dedup.incrementalDedupIndexed(delta, corpus, index,
-        "doc_id", "text", materialize = false)
-      .queryExecution.executedPlan.toString
+    val p = Pin.lineage { ops.Dedup.incrementalDedupIndexed(delta, corpus, index,
+        "doc_id", "text")
+      .queryExecution.executedPlan.toString }
     // the band-bucket candidate join must be a BroadcastHashJoin keyed on
     // (band, bandhash) — the corpus index STREAMS while the delta side is
     // the build — never a sort-merge that shuffles the corpus-sized index
@@ -350,14 +347,21 @@ class PlanSpec extends AnyFunSuite {
       delta, corpus, index, "doc_id", "text",
       pruneBucket = Some(("cb", bucketOf))))
     assert(pruned == plain, s"pruning changed decisions: $pruned vs $plain")
+    def plan(prune: Option[(String, org.apache.spark.sql.Column => org.apache.spark.sql.Column)]) =
+      Pin.lineage { ops.Dedup.incrementalDedupIndexed(
+          delta, corpus, index, "doc_id", "text", pruneBucket = prune)
+        .queryExecution.executedPlan.toString }
     // the physical scan of the pruned path carries a cb partition filter
-    val p = ops.Dedup.incrementalDedupIndexed(
-        delta, corpus, index, "doc_id", "text",
-        materialize = false, pruneBucket = Some(("cb", bucketOf)))
-      .queryExecution.executedPlan.toString
+    val p = plan(Some(("cb", bucketOf)))
     assert("PartitionFilters: \\[[^\\]]*cb".r.findFirstIn(p).isDefined,
       "corpus scan must carry a partition filter on the bucket column:\n" +
         p.linesIterator.filter(_.contains("PartitionFilters")).mkString("\n"))
+    // and pruning never adds a scan of the bucketed corpus
+    def corpusScans(plan: String) =
+      plan.linesIterator.count(l => l.contains("FileScan parquet") && l.contains(bdir))
+    val unpruned = corpusScans(plan(None))
+    assert(unpruned >= 1 && corpusScans(p) <= unpruned,
+      s"corpus scans: pruned ${corpusScans(p)}, unpruned $unpruned")
   }
 
   test("ivfTopKIndexed: the cells scan carries a cell partition filter and probes fewer partitions than exist") {

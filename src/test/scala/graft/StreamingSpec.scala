@@ -462,9 +462,9 @@ class StreamingSpec extends AnyFunSuite {
     // candidate buckets) carries the partition IN filter on the corpus scan
     val next = base.where($"doc_id" < 5)
       .select(($"doc_id" + 9000).as("doc_id"), concat($"text", lit(" zz")).as("text"))
-    val plan = streaming.EventStream.admissionOutcome(spark, next, m4,
-        bootstrap = false, "doc_id", "text", 0.7, 8, 4, 4, materialize = false)
-      .admitted.queryExecution.executedPlan.toString
+    val plan = Pin.lineage { streaming.EventStream.admissionOutcome(spark, next, m4,
+        bootstrap = false, "doc_id", "text", 0.7, 8, 4, 4)
+      .admitted.queryExecution.executedPlan.toString }
     assert("PartitionFilters: \\[[^\\]]*bucket".r.findFirstIn(plan).isDefined,
       "corpus candidate-text scan must carry a bucket partition filter:\n" +
         plan.linesIterator.filter(_.contains("PartitionFilters")).mkString("\n"))
@@ -1284,9 +1284,9 @@ class StreamingSpec extends AnyFunSuite {
       streaming.EventStream.corpusBucketOf(4)($"doc_id")).count() == 0)
     val next = base.where($"doc_id" < 5)
       .select(($"doc_id" + 9000).as("doc_id"), concat($"text", lit(" zz")).as("text"))
-    val plan = streaming.EventStream.admissionOutcome(spark, next, m,
-        bootstrap = false, "doc_id", "text", 0.7, 8, 4, 4, materialize = false)
-      .admitted.queryExecution.executedPlan.toString
+    val plan = Pin.lineage { streaming.EventStream.admissionOutcome(spark, next, m,
+        bootstrap = false, "doc_id", "text", 0.7, 8, 4, 4)
+      .admitted.queryExecution.executedPlan.toString }
     assert("PartitionFilters: \\[[^\\]]*bucket".r.findFirstIn(plan).isDefined,
       "resharded corpus scan must carry a bucket partition filter")
 
@@ -1343,8 +1343,8 @@ class StreamingSpec extends AnyFunSuite {
     // the same admission as plain lineage (no pins), evaluated before the
     // commit: what the committed metrics and rows must agree with
     val m = new Manifest(tbl, spark.sessionState.newHadoopConf())
-    val lineage = streaming.EventStream.admissionOutcome(spark, batch, m,
-      bootstrap = false, "doc_id", "text", 0.7, 8, 4, 2, materialize = false)
+    val lineage = Pin.lineage { streaming.EventStream.admissionOutcome(spark, batch, m,
+      bootstrap = false, "doc_id", "text", 0.7, 8, 4, 2) }
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select($"doc_id", $"h", $"band", $"bandhash")
         .as[(Long, String, Int, Option[String])].collect().toSeq.sorted
