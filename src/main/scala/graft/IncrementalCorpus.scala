@@ -150,7 +150,8 @@ object IncrementalCorpus {
       .flatMap(_.streamWatermarks.get(ConsumedKey)).getOrElse(-1L).toInt
     if (consumed >= cHead.id) return 0L
 
-    val fresh = Pin.now(cm.readAppended(spark, consumed, Some(cHead.id),
+    // lazy: the count materializes the pin in its one job
+    val fresh = Pin(cm.readAppended(spark, consumed, Some(cHead.id),
         buckets = Some((0 until cb).toSet)).drop("bucket"))
     val n = fresh.count()
 

@@ -5,7 +5,8 @@ import java.nio.charset.StandardCharsets
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.graft.NullableSchema
+import org.apache.spark.sql.graft.Schemas
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
@@ -133,62 +134,95 @@ object Manifest {
     else Some((ranges.flatten.map(_._1).min, ranges.flatten.map(_._2).max))
   }
 
-  /** Exact row count and [[ZoneMapCol]] zone map of one parquet file, from
-    * ONE footer read — no data pages are read. The writer's own footers
-    * already carry both, so a commit needs no count() job. */
-  private def footerFacts(conf: Configuration, file: String): (Long, Option[FileStat]) =
-    withFooter(conf, file) { f =>
-      (f.getBlocks.asScala.map(_.getRowCount).sum,
-        idRange(f, ZoneMapCol).map { case (lo, hi) => FileStat(file, lo, hi) })
-    }
+  /** What one footer read tells about a parquet file: its exact row
+    * count, its [[ZoneMapCol]] zone map and its Spark schema. No data page
+    * is read; the writer's footers already carry all three, so a commit
+    * needs no count() job and a read no schema job. */
+  private final case class FileFooter(rows: Long, stat: Option[FileStat], schema: StructType)
 
-  /** Spark schema of one parquet file, read from its footer on the driver
-    * — no Spark job. It is exactly what `spark.read.parquet(file).schema`
-    * infers: the same conversion Spark's inference task runs
+  /** One footer read of `file`. Its schema is exactly what
+    * `spark.read.parquet(file).schema` infers: the conversion Spark's
+    * inference task runs
     * (`ParquetFileFormat.readSchemaFromFooter`, the writer's recorded
-    * Spark schema when present), in the all-nullable form a file source
-    * reports. */
-  def footerSchema(spark: SparkSession, file: String): StructType = {
+    * Spark schema when present). */
+  private def readFooter(conf: Configuration, sql: SQLConf, file: String): FileFooter = {
     import org.apache.parquet.hadoop.Footer
     import org.apache.spark.sql.execution.datasources.parquet.{
       ParquetFileFormat, ParquetToSparkSchemaConverter}
-    val footer = withFooter(spark.sessionState.newHadoopConf(), file)(identity)
-    NullableSchema(ParquetFileFormat.readSchemaFromFooter(
-      new Footer(new Path(file), footer),
-      new ParquetToSparkSchemaConverter(spark.sessionState.conf)))
+    withFooter(conf, file) { f =>
+      FileFooter(f.getBlocks.asScala.map(_.getRowCount).sum,
+        idRange(f, ZoneMapCol).map { case (lo, hi) => FileStat(file, lo, hi) },
+        ParquetFileFormat.readSchemaFromFooter(new Footer(new Path(file), f),
+          new ParquetToSparkSchemaConverter(sql)))
+    }
   }
 
+  // read options built from `conf`, as Spark's own footer reader builds
+  // them: the plain `open(file)` overload makes a fresh default Hadoop
+  // Configuration per file, which costs ~6 ms against ~0.2 ms for the read
   private def withFooter[T](conf: Configuration, file: String)(
       f: org.apache.parquet.hadoop.metadata.ParquetMetadata => T): T = {
+    import org.apache.parquet.HadoopReadOptions
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
-    val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(file), conf))
+    val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(file), conf),
+      HadoopReadOptions.builder(conf).build())
     try f(r.getFooter) finally r.close()
   }
 
-  /** [[footerFacts]] of every file of a commit. The collected result is
-    * one small tuple per file: manifest-sized by construction. */
-  private def fileFooters(spark: SparkSession,
-      files: Seq[String]): Map[String, (Long, Option[FileStat])] = {
+  /** [[readFooter]] of every file — the one footer pass behind both a
+    * commit's row counts and zone maps and a read's schema. The collected
+    * result is one small record per file: manifest-sized by construction. */
+  private def fileFooters(spark: SparkSession, files: Seq[String]): Map[String, FileFooter] = {
     if (files.isEmpty) return Map.empty
-    // SMALL commits (the common steady-state micro-batch / compaction of a
-    // few buckets) read their footers straight from the driver over a
-    // small thread pool — a Spark job would cost a scheduling round trip
-    // per commit for a handful of metadata reads. Large commits (tens of
-    // thousands of files at a 100 TB backfill) fan out as a metadata-plane
-    // job so remote-footer latency is paid in parallel across executors,
-    // not serialized on the driver.
+    val sql = spark.sessionState.conf
+    // SMALL passes (a read of a few buckets, the steady-state micro-batch
+    // or compaction commit) read their footers straight from the driver
+    // over a small thread pool — a Spark job would cost a scheduling round
+    // trip for a handful of metadata reads. Large ones (tens of thousands
+    // of files at a 100 TB backfill) fan out as a metadata-plane job so
+    // remote-footer latency is paid in parallel across executors, not
+    // serialized on the driver.
     if (files.length <= 32) {
       val conf = spark.sessionState.newHadoopConf()
-      Par.par(files.map(f => () => f -> footerFacts(conf, f))).toMap
+      Par.par(files.map(f => () => f -> readFooter(conf, sql, f))).toMap
     } else {
+      // a SQLConf ships without its settings (they are transient): the
+      // tasks rebuild it from the session's explicit entries
       val bc = spark.sparkContext.broadcast(
-        new SerConf(spark.sessionState.newHadoopConf()))
+        (new SerConf(spark.sessionState.newHadoopConf()), sql.getAllConfs))
       spark.sparkContext.parallelize(files, math.max(1, math.min(files.length, 64)))
-        .map(f => f -> footerFacts(bc.value.value, f))
+        .mapPartitions { part =>
+          val taskSql = new SQLConf
+          bc.value._2.foreach { case (k, v) => taskSql.setConfString(k, v) }
+          part.map(f => f -> readFooter(bc.value._1.value, taskSql, f))
+        }
         .collect().toMap
     }
   }
+
+  /** The read schema of a set of parquet files, from their footers on the
+    * driver when there are at most 32 of them — no Spark job. It equals
+    * Spark's schema-merging parquet inference over the same files: the
+    * footer schemas folded left to right in path order (Spark sorts the
+    * files by path and folds its merge job's partitions in order), in the
+    * all-nullable form a file source reports. Files of one schema read
+    * exactly that schema; a widened set reads every column, NULL where a
+    * file lacks it. */
+  def footerSchema(spark: SparkSession, files: Seq[String]): StructType =
+    merged(spark, files, fileFooters(spark, files.distinct))
+
+  /** Each bucket's [[footerSchema]], from one footer pass over the files of
+    * all of them. Every bucket must have files. */
+  def bucketSchemas(spark: SparkSession, buckets: Seq[BucketState]): Seq[StructType] = {
+    val footers = fileFooters(spark, buckets.flatMap(_.files).distinct)
+    buckets.map(b => merged(spark, b.files, footers))
+  }
+
+  private def merged(spark: SparkSession, files: Seq[String],
+      footers: Map[String, FileFooter]): StructType =
+    Schemas.nullable(files.distinct.sorted.map(footers(_).schema)
+      .reduceLeft(Schemas.merge(_, _, spark.sessionState.conf.caseSensitiveAnalysis)))
 
   /** One write-then-commit of a [[Manifest]] table (Iceberg's transaction
     * API: stage appends and rewrites, then one commit). Opened by
@@ -213,7 +247,7 @@ object Manifest {
     private val before: Map[Int, Set[String]] =
       buckets.map(b => b -> table.listBucketFiles(b).toSet).toMap
     private val listed = mutable.Map.empty[Int, Seq[String]]
-    private val footers = mutable.Map.empty[String, (Long, Option[FileStat])]
+    private val footers = mutable.Map.empty[String, FileFooter]
     private val staged = mutable.LinkedHashMap.empty[Int, () => BucketState]
 
     /** Files this transaction wrote to `bucket` (a bucket named at open). */
@@ -228,10 +262,10 @@ object Manifest {
     def rows(bs: Seq[Int]): Long = {
       val files = bs.flatMap(fresh)
       footers ++= fileFooters(spark, files.filterNot(footers.contains))
-      files.map(footers(_)._1).sum
+      files.map(footers(_).rows).sum
     }
 
-    private def freshStats(bucket: Int): Seq[FileStat] = fresh(bucket).flatMap(footers(_)._2)
+    private def freshStats(bucket: Int): Seq[FileStat] = fresh(bucket).flatMap(footers(_).stat)
 
     /** Stage `bucket` as its parent state grown by the fresh files. */
     def append(bucket: Int, watermark: String): Unit = staged(bucket) = { () =>
@@ -320,15 +354,18 @@ final class Manifest(tableDir: String, conf: Configuration = new Configuration()
         // same path a crash between delete and rename uses
         case _: java.io.FileNotFoundException => None
       }
-    fromHead.orElse(latestSnapName()).map(n => readSnap(new Path(meta, n)))
+    fromHead.orElse(snapIds().lastOption.map(snapName)).map(n => readSnap(new Path(meta, n)))
   }
 
-  private def latestSnapName(): Option[String] =
-    if (!fs.exists(meta)) None
+  private val SnapName = """snap-(\d+)\.json""".r
+  private def snapName(id: Int): String = s"snap-$id.json"
+
+  /** Ids of the snapshot files in meta/, ascending; any other name,
+    * `snap-x.json` included, is not a snapshot. */
+  private def snapIds(): Seq[Int] =
+    if (!fs.exists(meta)) Nil
     else fs.listStatus(meta).toSeq.map(_.getPath.getName)
-      .filter(n => n.startsWith("snap-") && n.endsWith(".json"))
-      .sortBy(n => n.stripPrefix("snap-").stripSuffix(".json").toInt)
-      .lastOption
+      .flatMap { case SnapName(n) => n.toIntOption; case _ => None }.sorted
 
   private def readSnap(p: Path): Snapshot = {
     val node = mapper.readTree(readString(p))
@@ -375,35 +412,28 @@ final class Manifest(tableDir: String, conf: Configuration = new Configuration()
     * predicate as usual; what pruning guarantees is that no row INSIDE
     * the range is lost.
     *
-    * PLANNING COST: building the frame starts no Spark job — the file
-    * list comes from the snapshot and the schema from one footer read on
-    * the driver ([[readFiles]]). A `mergeSchema = true` read keeps Spark's
-    * footer-merge job: it must read every planned file's footer. */
+    * SCHEMA: the merged schema of the files read ([[readFiles]]), so a
+    * bucket whose rows WIDENED across commits reads every column, NULL in
+    * the older rows. Building the frame starts no Spark job for up to 32
+    * files — the file list comes from the snapshot and the schema from
+    * their footers, read on the driver. */
   def readData(spark: SparkSession, buckets: Option[Set[Int]] = None,
-      asOf: Option[Int] = None, mergeSchema: Boolean = false,
+      asOf: Option[Int] = None,
       idRange: Option[(String, String)] = None): DataFrame = {
     val snap = asOf.map(snapshotById).orElse(head()).getOrElse(
       throw new IllegalStateException(s"no committed snapshot at $tableDir"))
     val files = planFiles(snap, buckets, idRange)
-    // mergeSchema: for buckets whose row schema has legitimately WIDENED
-    // across commits (e.g. a metrics row gaining audit columns), a plain
-    // read would take one arbitrary file's schema — new columns silently
-    // vanish or old rows fail a positional read. Callers that evolve a
-    // bucket's schema must read it merged (old rows surface NULL in the
-    // added columns; they coalesce defaults themselves).
-    if (files.nonEmpty) readFiles(spark, files, mergeSchema)
+    if (files.nonEmpty) readFiles(spark, files)
     else {
       // empty plan (zero-file selection, or idRange pruned everything):
-      // produce an empty frame with the right schema. The schema file
-      // must come from the SELECTED buckets when they have any — on a
-      // mixed-namespace table (corpus + index buckets) falling straight
-      // to an arbitrary file would leak another namespace's schema.
+      // an empty frame with the SELECTED buckets' schema when they have
+      // files — on a mixed-namespace table (corpus + index buckets) any
+      // other file would leak another namespace's schema
       val sel = snap.buckets.filter(b => buckets.forall(_.contains(b.bucket)))
         .flatMap(_.files)
-      val cand = if (sel.nonEmpty) sel else snap.buckets.flatMap(_.files)
+      val cand = if (sel.nonEmpty) sel else snap.buckets.flatMap(_.files).take(1)
       require(cand.nonEmpty, s"snapshot ${snap.id} has no data files")
-      readFiles(spark, Seq(cand.head), mergeSchema)
-        .where(org.apache.spark.sql.functions.lit(false))
+      readFiles(spark, cand).where(org.apache.spark.sql.functions.lit(false))
     }
   }
 
@@ -413,19 +443,15 @@ final class Manifest(tableDir: String, conf: Configuration = new Configuration()
     * materializes exactly as in [[readData]]. The caller owns the claim
     * that the files belong to a live snapshot.
     *
-    * An unmerged read plans without a Spark job: its schema is
-    * [[Manifest.footerSchema]] of the first file in path order — the file
-    * Spark's own inference would open (it sorts the listed files by path
-    * and reads the first footer, in a one-task job). `mergeSchema = true`
-    * leaves inference to Spark, whose merge job reads every file's
-    * footer. */
-  def readFiles(spark: SparkSession, files: Seq[String],
-      mergeSchema: Boolean = false): DataFrame = {
+    * The schema is [[Manifest.footerSchema]] of the files: every column
+    * any of them holds, exactly as Spark's merged inference would give.
+    * Up to 32 files it plans without a Spark job (their footers are read
+    * on the driver); above that the footers are read in one metadata job,
+    * and Spark lists the paths in one job of its own. */
+  def readFiles(spark: SparkSession, files: Seq[String]): DataFrame = {
     require(files.nonEmpty, "readFiles needs at least one file")
-    val reader = spark.read.option("basePath", dataDir.toString)
-      .option("mergeSchema", mergeSchema.toString)
-    (if (mergeSchema) reader else reader.schema(footerSchema(spark, files.min)))
-      .parquet(files: _*)
+    spark.read.option("basePath", dataDir.toString)
+      .schema(footerSchema(spark, files)).parquet(files: _*)
   }
 
   /** The manifest-planned file list for a scan of `snap` — the bucket
@@ -468,19 +494,13 @@ final class Manifest(tableDir: String, conf: Configuration = new Configuration()
   def txn(spark: SparkSession, buckets: Seq[Int]): Txn = new Txn(this, spark, buckets)
 
   /** Snapshot by id (must exist on disk). */
-  def snapshotById(id: Int): Snapshot = readSnap(new Path(meta, s"snap-$id.json"))
+  def snapshotById(id: Int): Snapshot = readSnap(new Path(meta, snapName(id)))
 
   /** Snapshot history (Iceberg's `snapshots` metadata table analog):
     * every RETAINED snapshot, oldest first. Exactly the set time travel
     * and [[rollback]] can still reach — expired snapshots are absent.
     * Manifest-sized: one small JSON parse per retained snapshot. */
-  def history(): Seq[Snapshot] = {
-    if (!fs.exists(meta)) return Nil
-    fs.listStatus(meta).toSeq.map(_.getPath)
-      .filter(p => p.getName.matches("snap-\\d+\\.json"))
-      .map(readSnap)
-      .sortBy(_.id)
-  }
+  def history(): Seq[Snapshot] = snapIds().map(snapshotById)
 
   /** CDC-lite: bucket states in HEAD whose LOGICAL content differs from
     * snapshot `sinceId` (new bucket, or different rows/watermark).
@@ -499,12 +519,8 @@ final class Manifest(tableDir: String, conf: Configuration = new Configuration()
     * history is pruned, current state is complete in one file. */
   def expireSnapshots(keepLast: Int): Seq[String] = {
     require(keepLast >= 1)
-    if (!fs.exists(meta)) return Nil
-    val snaps = fs.listStatus(meta).toSeq.map(_.getPath.getName)
-      .filter(n => n.startsWith("snap-") && n.endsWith(".json"))
-      .sortBy(n => n.stripPrefix("snap-").stripSuffix(".json").toInt)
-    val current = head().map(s => s"snap-${s.id}.json").toSet
-    val drop = snaps.dropRight(keepLast).filterNot(current)
+    val current = head().map(_.id).toSet
+    val drop = snapIds().dropRight(keepLast).filterNot(current).map(snapName)
     drop.foreach(n => fs.delete(new Path(meta, n), false))
     drop
   }
@@ -549,7 +565,9 @@ final class Manifest(tableDir: String, conf: Configuration = new Configuration()
     * default HEAD) — planned as the FILE-SET difference of the two
     * snapshots, so a downstream consumer processes each appended file
     * exactly once and never rescans the table. `fromId = -1` bootstraps
-    * (reads everything in `toId`).
+    * (reads everything in `toId`). The frame has the merged schema of the
+    * added files ([[readFiles]]), or of `toId`'s selection when none was
+    * added.
     *
     * EXACT only across append-only commits (extraction runs, stream
     * micro-batches): a REWRITE commit in the window (compact, delete,
@@ -564,8 +582,7 @@ final class Manifest(tableDir: String, conf: Configuration = new Configuration()
     * to HEAD's id after processing — and schedule table maintenance
     * (which rewrites) only at consumer sync points. */
   def readAppended(spark: SparkSession, fromId: Int, toId: Option[Int] = None,
-      allowRewrites: Boolean = false, buckets: Option[Set[Int]] = None,
-      mergeSchema: Boolean = false): DataFrame = {
+      allowRewrites: Boolean = false, buckets: Option[Set[Int]] = None): DataFrame = {
     val to = toId.map(snapshotById).orElse(head()).getOrElse(
       throw new IllegalStateException(s"no committed snapshot at $tableDir"))
     val fromFiles: Set[String] =
@@ -581,9 +598,8 @@ final class Manifest(tableDir: String, conf: Configuration = new Configuration()
         "would re-deliver surviving rows — re-sync from a full read, or pass " +
         "allowRewrites=true to audit the raw added files")
     val added = toSel.flatMap(_.files).filterNot(fromFiles)
-    if (added.nonEmpty) readFiles(spark, added, mergeSchema)
-    else readData(spark, buckets, Some(to.id), mergeSchema)
-      .where(org.apache.spark.sql.functions.lit(false))
+    if (added.nonEmpty) readFiles(spark, added)
+    else readData(spark, buckets, Some(to.id)).where(org.apache.spark.sql.functions.lit(false))
   }
 
   /** ROLL BACK the table to snapshot `toId` (Iceberg's
@@ -664,9 +680,9 @@ final class Manifest(tableDir: String, conf: Configuration = new Configuration()
         .map { case (k, v) => s"${jstr(k)}:$v" }.mkString("{", ",", "}")
       s"""{"id":$id,"parent":$parentId,"run_id":${jstr(runId)},"stream_wm":$wm,"buckets":$bs}"""
     }
-    writeString(new Path(meta, s"snap-$id.json"), body)
+    writeString(new Path(meta, snapName(id)), body)
     val tmp = new Path(meta, s".HEAD.tmp.$id")
-    writeString(tmp, s"snap-$id.json")
+    writeString(tmp, snapName(id))
     if (fs.exists(headPath)) fs.delete(headPath, false)
     if (!fs.rename(tmp, headPath))
       throw new java.io.IOException(s"HEAD swap failed for snap-$id at $meta")

@@ -593,6 +593,19 @@ object Dedup {
       .distinct()
   }
 
+  /** The nodes of edge set `e` (src < dst) that break the star-forest
+    * fixpoint: a dst of two edges, or a node that is both src and dst.
+    * One partial-agg pass over 2|E| narrow rows from ONE scan of `e`
+    * (each edge explodes into its two endpoints) — a union of two
+    * projections would read a freshly pinned round twice, and two tasks
+    * of one stage would compute the same lazy-pin partition. */
+  private[graft] def starForestViolations(e: DataFrame): DataFrame =
+    e.select(explode(array(
+        struct(col("dst").as("n"), lit(0L).as("s"), lit(1L).as("d")),
+        struct(col("src").as("n"), lit(1L).as("s"), lit(0L).as("d")))).as("e"))
+      .groupBy(col("e.n").as("n")).agg(sum(col("e.s")).as("sc"), sum(col("e.d")).as("dc"))
+      .where(col("dc") > 1 || (col("sc") > 0 && col("dc") > 0))
+
   /** Connected-component resolution of a near-dup pair graph:
     * (id, cluster_id, keep) for every id appearing in `pairs`, where
     * cluster_id is the component minimum and `keep` marks the canonical
@@ -627,20 +640,11 @@ object Dedup {
       .where(col("src") =!= col("dst"))
       .distinct())
 
-    // star-forest fixpoint test: one partial-agg pass over 2|E| narrow
-    // rows; empty edge sets are trivially converged
-    def isStarForest(e: DataFrame): Boolean =
-      e.select(col("dst").as("n"), lit(0L).as("s"), lit(1L).as("d"))
-        .union(e.select(col("src").as("n"), lit(1L).as("s"), lit(0L).as("d")))
-        .groupBy(col("n")).agg(sum(col("s")).as("sc"), sum(col("d")).as("dc"))
-        .where(col("dc") > 1 || (col("sc") > 0 && col("dc") > 0))
-        .isEmpty
-
-    var converged = isStarForest(edges)
+    var converged = starForestViolations(edges).isEmpty
     var it = 0
     while (!converged && it < maxIters) {
       edges = rounds.next(smallStar(largeStar(edges)))
-      converged = isStarForest(edges)
+      converged = starForestViolations(edges).isEmpty
       rounds.read()
       it += 1
     }

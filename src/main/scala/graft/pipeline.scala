@@ -386,11 +386,12 @@ object ExtractJob {
     if (fat.isEmpty) return snap
     // fail FAST on mixed schemas: one combined scan over buckets that
     // namespace different relations would silently null-fill one side and
-    // commit the corruption (then GC deletes the originals). One footer
-    // read per fat bucket, on the driver; a doc comment is not a guard.
-    val schemas = fat.map(b => b.bucket -> Manifest.footerSchema(spark, b.files.head))
-    require(schemas.map(_._2).distinct.size <= 1,
-      s"compact: buckets ${schemas.map(_._1).mkString(",")} carry different " +
+    // commit the corruption (then GC deletes the originals). Each bucket's
+    // merged schema, from one footer pass; a doc comment is not a guard.
+    // A bucket that widened across commits is one schema and rewrites with
+    // every column.
+    require(Manifest.bucketSchemas(spark, fat).distinct.size <= 1,
+      s"compact: buckets ${fat.map(_.bucket).mkString(",")} carry different " +
         "schemas — compact each namespace separately via only=Some(...)")
 
     val fatIds = fat.map(_.bucket)
@@ -455,7 +456,8 @@ object ExtractJob {
     *     A bucket whose rows ALL die commits as rows=0 with no files (the
     *     legitimate zero-row state).
     *
-    * Buckets are grouped by their parquet schema and each group is scanned
+    * Buckets are grouped by their merged parquet schema (one footer pass
+    * over the selected buckets' files) and each group is scanned
     * separately, so heterogeneous bucket NAMESPACES (the indexed corpus
     * stream: corpus rows + index rows keyed by the same id) delete in ONE
     * call and ONE commit — corpus and index can never disagree about a
@@ -490,11 +492,12 @@ object ExtractJob {
     // materializes it, later ones hit the cache)
     val keySet = Pin(keys.select(col(keyCol)).distinct())
 
-    // one footer read per bucket, on the driver; buckets without keyCol
-    // hold no per-document rows and are skipped, the rest group by schema
-    // so each group is one homogeneous scan (same guard rationale as compact)
-    val schemas = sel.map(b => b -> Manifest.footerSchema(spark, b.files.head))
-    val keyed = schemas.filter(_._2.fieldNames.contains(keyCol))
+    // each bucket's merged schema from one footer pass; buckets without
+    // keyCol hold no per-document rows and are skipped, the rest group by
+    // schema so each group is one homogeneous scan (same guard rationale
+    // as compact)
+    val keyed = sel.zip(Manifest.bucketSchemas(spark, sel))
+      .filter(_._2.fieldNames.contains(keyCol))
     val groups = keyed.groupBy(_._2).values.map(_.map(_._1)).toSeq
 
     // parquet URIs come back from input_file_name percent-encoded and
@@ -527,15 +530,9 @@ object ExtractJob {
           statless ++ overlapping
         }
       // pass 2: locate — per-FILE hit counts over the candidates only;
-      // partial-agg, output manifest-sized. mergeSchema on both passes:
-      // a bucket whose row schema legitimately WIDENED across commits
-      // holds files of different widths, and an unmerged read would take
-      // one arbitrary file's schema — the rewritten survivors would
-      // silently lose the added columns (collateral loss during a
-      // takedown). Merged, old rows surface NULL in added columns and
-      // every recorded column survives the rewrite.
+      // partial-agg, output manifest-sized
       if (candidates.isEmpty) Nil
-      else table.readFiles(spark, candidates, mergeSchema = true)
+      else table.readFiles(spark, candidates)
         .select(col("bucket"), col(keyCol), input_file_name().as("f"))
         .join(keySet, Seq(keyCol), "left_semi")
         .groupBy(col("bucket"), col("f")).agg(count(lit(1)).as("doomed"))
@@ -547,11 +544,11 @@ object ExtractJob {
     def doomed(b: Manifest.BucketState): Seq[String] =
       b.files.filter(f => hitFiles.get(b.bucket).exists(_.contains(norm(f))))
 
-    // pass 3: rewrite ONLY the files with actual hits, one merged read per
-    // schema group (see the pass-2 note on widened bucket schemas)
+    // pass 3: rewrite ONLY the files with actual hits, one read per schema
+    // group; a widened bucket's survivors keep every column they hold
     val tx = table.txn(spark, hits.keys.toSeq.sorted)
     groups.map(_.flatMap(doomed)).filter(_.nonEmpty).foreach { files =>
-      table.readFiles(spark, files, mergeSchema = true)
+      table.readFiles(spark, files)
         .join(keySet, Seq(keyCol), "left_anti")
         .repartition($"bucket")
         .write.mode("append").partitionBy("bucket")

@@ -736,12 +736,10 @@ object EventStream {
     // new bucket, exactly the admit path's write shape)
     val oldCorpus = (0 until from).filter(b => states.get(b).exists(_.files.nonEmpty))
     val corpusRows = (0 until from).flatMap(states.get).map(_.rows).sum
+    // (a corpus whose rows widened across commits reads, and so reshards,
+    // with every column: the manifest's read schema is the merged one)
     if (oldCorpus.nonEmpty)
-      // merged read: a corpus whose row schema WIDENED across commits
-      // must not be resharded through one arbitrary file's schema —
-      // added columns would silently vanish from the whole table
-      table.readData(spark, Some(oldCorpus.toSet), mergeSchema = true)
-        .drop("bucket")
+      table.readData(spark, Some(oldCorpus.toSet)).drop("bucket")
         .withColumn("bucket", corpusBucketOf(to)(col(idCol)))
         .repartition(col("bucket"))
         .write.mode("append").partitionBy("bucket").parquet(s"$tableDir/data")
@@ -756,10 +754,9 @@ object EventStream {
     // always equals the directory partition value (compaction's fresh-file
     // diff and the pruning contract both rely on that invariant); the
     // three moves are independent rewrites of disjoint bucket directories
-    // — overlap them (guide §2.6). Merged read — same widened-schema
-    // rationale as the corpus move
+    // — overlap them (guide §2.6)
     graft.Par.par(moves.filter(m => states(m._1).files.nonEmpty).map { case (o, n) => () =>
-      table.readData(spark, Some(Set(o)), mergeSchema = true).drop("bucket")
+      table.readData(spark, Some(Set(o))).drop("bucket")
         .coalesce(states(o).files.length)
         .write.mode("append").parquet(s"$tableDir/data/bucket=$n")
     })

@@ -95,16 +95,15 @@ object VectorIndexStream {
 
   /** Per-micro-batch ingest metrics, one row per committed batch. The
     * metrics row has WIDENED across versions (the admission gate added
-    * `near_dropped` / `gate_skipped_cells`), so the bucket is read
-    * schema-MERGED and pre-gate rows surface those columns as 0 — a table
-    * ingested partly before and partly after the gate stays readable with
-    * one stable 9-column schema. */
+    * `near_dropped` / `gate_skipped_cells`); the manifest reads the bucket
+    * with every column any of its files holds, and pre-gate rows surface
+    * those columns as 0 — a table ingested partly before and partly after
+    * the gate stays readable with one stable 9-column schema. */
   def readIngestMetrics(spark: SparkSession, tableDir: String,
       nCells: Int): DataFrame = {
     val m = new graft.Manifest(tableDir, spark.sessionState.newHadoopConf())
     requireLayout(m.head(), nCells, tableDir)
-    val raw = m.readData(spark, Some(Set(metricsBucketFor(nCells))),
-      mergeSchema = true).drop("bucket")
+    val raw = m.readData(spark, Some(Set(metricsBucketFor(nCells)))).drop("bucket")
     Seq("near_dropped", "gate_skipped_cells").foldLeft(raw) { (df, c) =>
       if (df.columns.contains(c)) df.withColumn(c, coalesce(col(c), lit(0L)))
       else df.withColumn(c, lit(0L))

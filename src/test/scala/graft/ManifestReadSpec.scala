@@ -7,10 +7,9 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Manifest reads plan from the snapshot and one driver-side footer read:
-  * building a frame starts no Spark job, and its schema is the one Spark's
-  * own inference gives for the same files. Merge reads keep Spark's
-  * footer merge. */
+/** Manifest reads plan from the snapshot and the footers of the files
+  * they read, on the driver: building a frame starts no Spark job, and its
+  * schema is the one Spark's merged inference gives for the same files. */
 class ManifestReadSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
   import spark.implicits._
@@ -44,19 +43,50 @@ class ManifestReadSpec extends AnyFunSuite {
     m.head().get.buckets.filter(b => buckets(b.bucket)).flatMap(_.files)
 
   /** Builds every frame without a job, then checks each schema against
-    * Spark's inference over `files`. */
+    * Spark's inference over `files`. Returns the frames. */
   private def assertPlansFree(dir: String,
-      frames: Seq[(String, () => DataFrame, Seq[String])]): Unit = {
+      frames: Seq[(String, () => DataFrame, Seq[String])],
+      merge: Boolean = false): Seq[(String, DataFrame)] = {
     val (built, jobs) = jobsDuring(frames.map { case (n, f, _) => n -> f() })
     assert(jobs == 0, s"building ${frames.map(_._1).mkString(", ")} started $jobs jobs")
     built.zip(frames).foreach { case ((n, df), (_, _, files)) =>
-      val want = inferred(dir, files)
+      val want = inferred(dir, files, merge)
       // a frame that drops the partition column is compared without it
       val cmp = if (df.columns.contains("bucket")) want
         else StructType(want.filterNot(_.name == "bucket"))
       assert(df.schema == cmp, s"$n: ${df.schema.treeString} vs ${cmp.treeString}")
     }
+    built
   }
+
+  /** Writes `df` as the single parquet file `name` of `bucket` in table
+    * `dir` (named, so the test fixes the path order) and returns its
+    * path as the manifest lists it. */
+  private def writeNamed(m: Manifest, dir: String, bucket: Int, name: String,
+      df: DataFrame): String = {
+    val tmp = freshDir("graft_mread_file_") + "/f"
+    df.coalesce(1).write.parquet(tmp)
+    val part = new java.io.File(tmp).listFiles().find(_.getName.endsWith(".parquet")).get
+    val to = new java.io.File(s"$dir/data/bucket=$bucket/$name")
+    to.getParentFile.mkdirs()
+    Files.move(part.toPath, to.toPath)
+    m.listBucketFiles(bucket).find(_.endsWith(s"/$name")).get
+  }
+
+  /** A table whose bucket 0 WIDENED: its narrow file (doc_id "a", no
+    * `extra`) sorts before its wide one (doc_id "b", extra "x"). Both are
+    * committed out of path order, with zone maps. */
+  private def widened(prefix: String): (String, Manifest, Seq[String]) = {
+    val dir = freshDir(prefix)
+    val m = new Manifest(dir, spark.sessionState.newHadoopConf())
+    val narrow = writeNamed(m, dir, 0, "part-0-narrow.parquet", Seq(("a", 1L)).toDF("doc_id", "n"))
+    val wide = writeNamed(m, dir, 0, "part-1-wide.parquet",
+      Seq(("b", 2L, "x")).toDF("doc_id", "n", "extra"))
+    (dir, m, Seq(narrow, wide))
+  }
+
+  private def extras(df: DataFrame): Set[(String, Option[String])] =
+    df.select($"doc_id", $"extra").as[(String, Option[String])].collect().toSet
 
   test("extraction table: readData, readFiles and readAppended frames plan without a Spark job") {
     val dir = freshDir("graft_mread_ext_")
@@ -107,43 +137,73 @@ class ManifestReadSpec extends AnyFunSuite {
     val buckets = m.head().get.buckets.filter(_.files.nonEmpty)
     def grouping(schemaOf: String => StructType): Set[Set[Int]] =
       buckets.groupBy(b => schemaOf(b.files.head)).values.map(_.map(_.bucket).toSet).toSet
-    val (byFooter, footerJobs) = jobsDuring(grouping(f => Manifest.footerSchema(spark, f)))
+    val (byFooter, footerJobs) = jobsDuring(grouping(f => Manifest.footerSchema(spark, Seq(f))))
     assert(footerJobs == 0)
     buckets.foreach { b =>
-      assert(Manifest.footerSchema(spark, b.files.head) == spark.read.parquet(b.files.head).schema,
+      assert(Manifest.footerSchema(spark, Seq(b.files.head)) == spark.read.parquet(b.files.head).schema,
         s"bucket ${b.bucket}")
     }
     assert(byFooter == grouping(f => spark.read.parquet(f).schema))
     assert(byFooter == Set(Set(0, 1), Set(ix), Set(mb)), byFooter)
   }
 
-  test("a widened bucket: the unmerged read takes Spark's schema file, a merged read shows the added column") {
-    val dir = freshDir("graft_mread_wide_")
-    val m = new Manifest(dir, spark.sessionState.newHadoopConf())
-    Seq(("a", 1L)).toDF("doc_id", "n").coalesce(1)
-      .write.parquet(s"$dir/data/bucket=0")
-    val narrow = m.listBucketFiles(0)
-    Seq(("b", 2L, "x")).toDF("doc_id", "n", "extra").coalesce(1)
-      .write.mode("append").parquet(s"$dir/data/bucket=0")
-    val files = m.listBucketFiles(0)
-    assert(files.length == 2 && narrow.length == 1)
-    // recorded out of path order: the schema file is the first in path
-    // order, not the first in the manifest
-    m.commit("w", Seq(Manifest.BucketState(0, 2L, "b", files.sorted.reverse)))
+  test("a widened bucket reads merged through every API") {
+    val (dir, m, files) = widened("graft_mread_wide_")
+    val other = writeNamed(m, dir, 1, "part-0.parquet", Seq(("c", 3L)).toDF("doc_id", "n"))
+    val all = files :+ other
+    m.commit("w", Seq(
+      Manifest.BucketState(0, 2L, "b", files.reverse,
+        files.zip(Seq("a", "b")).map { case (f, id) => Manifest.FileStat(f, id, id) }),
+      Manifest.BucketState(1, 1L, "c", Seq(other), Seq(Manifest.FileStat(other, "c", "c")))))
 
-    // unmerged: whichever file sorts first, exactly as Spark picks it
-    val (plain, jobs) = jobsDuring(m.readData(spark))
-    assert(jobs == 0)
-    assert(plain.schema == inferred(dir, files))
-    assert(plain.count() == 2L)
-    // merged: the added column is there, old rows read NULL in it
-    val merged = m.readData(spark, mergeSchema = true)
-    assert(merged.schema == inferred(dir, files, merge = true))
-    assert(merged.columns.contains("extra"))
-    assert(merged.select($"doc_id", $"extra").as[(String, Option[String])].collect().toSet ==
-      Set(("a", None), ("b", Some("x"))))
-    assert(m.readFiles(spark, narrow ++ files.filterNot(narrow.contains), mergeSchema = true)
-      .columns.contains("extra"))
+    val frames = assertPlansFree(dir, Seq(
+      ("readData", () => m.readData(spark), all),
+      ("readData(buckets)", () => m.readData(spark, Some(Set(0))), files),
+      ("readData(idRange)", () => m.readData(spark, idRange = Some(("a", "b"))), files),
+      ("readFiles", () => m.readFiles(spark, files), files),
+      ("readFiles(reversed)", () => m.readFiles(spark, files.reverse), files),
+      ("readAppended(-1)", () => m.readAppended(spark, -1), all)), merge = true)
+    frames.foreach { case (n, df) =>
+      assert(df.columns.contains("extra"), n)
+      assert(extras(df.where($"bucket" === 0)) == Set(("a", None), ("b", Some("x"))), n)
+    }
+    // the empty plan takes the merged schema of the selected buckets' files
+    val empty = assertPlansFree(dir, Seq(
+      ("readData(empty plan)", () => m.readData(spark, idRange = Some(("~", "~"))), all)),
+      merge = true).head._2
+    assert(empty.columns.contains("extra") && empty.count() == 0L)
+  }
+
+  test("compact of a widened bucket whose narrow file sorts first keeps the added column") {
+    val (dir, m, files) = widened("graft_mread_compact_")
+    m.commit("w", Seq(Manifest.BucketState(0, 2L, "b", files)))
+    ExtractJob.compact(spark, dir)
+    val rewritten = m.head().get.buckets.head.files
+    assert(rewritten.length == 1 && !files.contains(rewritten.head), rewritten)
+    assert(spark.read.parquet(rewritten.head).columns.contains("extra"))
+    assert(extras(m.readData(spark)) == Set(("a", None), ("b", Some("x"))))
+  }
+
+  test("readAppended over a widened window reads the added column") {
+    val (dir, m, files) = widened("graft_mread_append_")
+    val other = writeNamed(m, dir, 1, "part-0.parquet", Seq(("c", 3L)).toDF("doc_id", "n"))
+    val s0 = m.commit("before", Seq(Manifest.BucketState(1, 1L, "c", Seq(other))))
+    m.commit("window", Seq(Manifest.BucketState(0, 2L, "b", files)))
+    val appended = m.readAppended(spark, s0.id)
+    assert(appended.schema == inferred(dir, files, merge = true))
+    assert(extras(appended) == Set(("a", None), ("b", Some("x"))))
+  }
+
+  test("a read of more than 32 files merges its schema from the metadata job's footers") {
+    val (dir, m, files) = widened("graft_mread_many_")
+    (0 until 40).map(i => (f"m$i%03d", i.toLong)).toDF("doc_id", "n").coalesce(1)
+      .write.mode("append").option("maxRecordsPerFile", 1L).parquet(s"$dir/data/bucket=0")
+    val all = m.listBucketFiles(0)
+    assert(all.length == 42, all.length)
+    val df = m.readFiles(spark, all)
+    assert(df.schema == inferred(dir, all, merge = true))
+    assert(df.count() == 42L)
+    assert(extras(df.where($"doc_id" < "m")) == Set(("a", None), ("b", Some("x"))))
   }
 
   test("corpus stages and the train table plan without a job; footer row counts equal the rows read") {

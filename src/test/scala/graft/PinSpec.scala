@@ -7,7 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** [[Pin]]: what stays pinned (persistent RDDs) while and after iterative
   * operators run, the order in which rounds are released, the lineage test
-  * hook, and the rule that only util.scala pins or unpersists. */
+  * hook, and the source rules: only util.scala pins or unpersists, and
+  * only manifest.scala reads parquet footers. */
 class PinSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
   import spark.implicits._
@@ -122,17 +123,24 @@ class PinSpec extends AnyFunSuite {
     assert(spark.sparkContext.getLocalProperty("callSite.short") == null)
   }
 
-  test("only util.scala pins or unpersists in src/main/scala") {
+  test("source rules: each guarded call appears only in its allowed file") {
     val root = new java.io.File("src/main/scala")
     assert(root.isDirectory, s"run from the project root: ${root.getAbsolutePath}")
     def files(d: java.io.File): Seq[java.io.File] =
       d.listFiles().toSeq.flatMap(f => if (f.isDirectory) files(f) else Seq(f))
-    val offenders = files(root).filter(_.getName.endsWith(".scala"))
-      .filterNot(_.getPath.endsWith("graft/util.scala"))
-      .filter { f =>
-        val src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-        src.contains(".localCheckpoint(") || src.contains(".unpersist(")
-      }
-    assert(offenders.isEmpty, s"pin through graft.Pin instead: ${offenders.mkString(", ")}")
+    val sources = files(root).filter(_.getName.endsWith(".scala")).map(f =>
+      f -> new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
+    // pattern -> the only file that may contain it (None: no file)
+    val rules = Seq(
+      ".localCheckpoint(" -> Some("graft/util.scala"), // pin through graft.Pin
+      ".unpersist(" -> Some("graft/util.scala"),
+      "mergeSchema" -> None, // every read takes the manifest's merged schema
+      "ParquetFileReader" -> Some("graft/manifest.scala"), // footers: Manifest only
+      "footerSchema(" -> Some("graft/manifest.scala"))
+    val offenders = for {
+      (pattern, only) <- rules
+      (f, src) <- sources if src.contains(pattern) && !only.exists(f.getPath.endsWith)
+    } yield s"$pattern in $f"
+    assert(offenders.isEmpty, offenders.mkString("; "))
   }
 }

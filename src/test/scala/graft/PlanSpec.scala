@@ -269,6 +269,21 @@ class PlanSpec extends AnyFunSuite {
       p.take(1500))
   }
 
+  test("resolveClusters' star-forest test reads a pinned round once, not twice") {
+    import spark.implicits._
+    // a second read of a freshly (lazily) pinned round lets two tasks of
+    // one stage compute the same pin partition
+    val round = Pin(Seq((1L, 2L), (1L, 3L), (4L, 5L)).toDF("src", "dst"))
+    val v = ops.Dedup.starForestViolations(round)
+    val leaves = v.queryExecution.optimizedPlan.collectLeaves()
+    assert(leaves.size == 1, v.queryExecution.optimizedPlan.treeString)
+    assert(v.isEmpty)
+    // a path and a shared dst are not star forests
+    assert(ops.Dedup.starForestViolations(Seq((1L, 2L), (2L, 3L)).toDF("src", "dst"))
+      .as[(Long, Long, Long)].collect().map(_._1).toSeq == Seq(2L))
+    assert(!ops.Dedup.starForestViolations(Seq((1L, 3L), (2L, 3L)).toDF("src", "dst")).isEmpty)
+  }
+
   test("decontamination broadcasts the benchmark shingle set (corpus never reshuffles on it)") {
     import spark.implicits._
     val docs = spark.read.parquet(s"$dir/documents.parquet")

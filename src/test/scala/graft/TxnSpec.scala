@@ -32,7 +32,7 @@ class TxnSpec extends AnyFunSuite {
     assert(snap.id > since, s"$writer committed nothing")
     snap.buckets.foreach { b =>
       assert(b.rows == b.files.map(footerRows).sum, s"$writer: rows of bucket ${b.bucket}")
-      if (b.files.exists(f => Manifest.footerSchema(spark, f).fieldNames.contains("doc_id")))
+      if (b.files.exists(f => Manifest.footerSchema(spark, Seq(f)).fieldNames.contains("doc_id")))
         assert(b.stats.map(_.file).toSet == b.files.filter(footerRows(_) > 0).toSet,
           s"$writer: zone maps of bucket ${b.bucket}")
     }
