@@ -13,41 +13,54 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * additionally exposes the same transforms as an incremental pipeline for
   * continuously-arriving documents/events:
   *
-  *  - [[extractStream]]: file-source stream of raw docs → the SAME
-  *    extraction columns → parquet sink with checkpointing. Incremental
-  *    at-least-once with idempotent file commits; `Trigger.AvailableNow`
-  *    drains the backlog and stops (the streaming analog of our
-  *    batch-resume).
-  *  - [[eventCounts]]: watermarked tumbling-window aggregation over an
-  *    event stream (late data dropped past the watermark).
-  *
-  * Both are pure plan builders — callers pick sink/trigger — so tests and
-  * production share one definition.
+  *  - [[files]]: the one file source (parquet files appearing under a
+  *    directory, a bounded number per micro-batch);
+  *  - [[availableNow]]: the one runner — drains what is available under a
+  *    checkpoint, then stops (the streaming analog of our batch-resume),
+  *    handing each micro-batch to a manifest-committing batch function
+  *    ([[commitBatch]], [[admitIndexedBatch]],
+  *    [[VectorIndexStream.indexBatch]]) with the stream ids derived once;
+  *  - [[extractStream]]: raw docs → the SAME extraction columns, a pure
+  *    plan builder shared by tests and [[runExtractWithManifest]];
+  *  - [[eventCounts]] / [[firstSeenTtl]]: watermarked windows and
+  *    keep-first dedup state with an event-time TTL.
   */
 object EventStream {
+
+  /** The one file-source stream: parquet files appearing under `inDir`,
+    * at most `maxFiles` of them per micro-batch. */
+  private[graft] def files(spark: SparkSession, inDir: String,
+      schemaFrom: DataFrame, maxFiles: Int): DataFrame =
+    spark.readStream.schema(schemaFrom.schema)
+      .option("maxFilesPerTrigger", maxFiles)
+      .parquet(inDir)
 
   /** Streaming extraction: raw-doc parquet files appearing under `inDir` →
     * extracted spans, through the same native `extract_spans` expression as
     * the batch path (Catalyst expressions are engine-agnostic between batch
     * and micro-batch plans). */
-  def extractStream(spark: SparkSession, inDir: String, schemaFrom: DataFrame): DataFrame = {
-    val raw = spark.readStream
-      .schema(schemaFrom.schema)
-      .option("maxFilesPerTrigger", 8)
-      .parquet(inDir)
-    graft.plans.GraftFunctions.extractColumnar(raw)
-  }
+  def extractStream(spark: SparkSession, inDir: String, schemaFrom: DataFrame): DataFrame =
+    graft.plans.GraftFunctions.extractColumnar(files(spark, inDir, schemaFrom, 8))
 
-  /** Run the extraction stream to a parquet sink, draining what is
-    * currently available, then stop (resumable via `checkpointDir`). */
-  def runExtractAvailableNow(
-      spark: SparkSession, inDir: String, outDir: String,
-      checkpointDir: String, schemaFrom: DataFrame): StreamingQuery = {
-    extractStream(spark, inDir, schemaFrom).writeStream
-      .format("parquet")
-      .option("path", outDir)
+  /** The one stream runner: drain what `source` has available now through
+    * `checkpointDir`, then stop (resumable from the checkpoint). Each
+    * micro-batch goes to `body` with its batch id and the stream's
+    * canonical and legacy ids ([[streamIdFor]], [[legacyStreamIdFor]]),
+    * derived once per run. The exactly-once guard stays in each batch
+    * function: they are also called directly (replays, the daily
+    * increment), and the corpus admit checks layout before the guard. */
+  private[graft] def availableNow(source: DataFrame, checkpointDir: String)(
+      body: (DataFrame, Long, String, String) => Unit): StreamingQuery = {
+    val streamId = streamIdFor(checkpointDir,
+      source.sparkSession.sessionState.newHadoopConf())
+    val legacyId = legacyStreamIdFor(checkpointDir)
+    source.writeStream
       .option("checkpointLocation", checkpointDir)
+      .outputMode(OutputMode.Append())
       .trigger(Trigger.AvailableNow())
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        body(batch, batchId, streamId, legacyId)
+      }
       .start()
   }
 
@@ -66,18 +79,9 @@ object EventStream {
     */
   def runExtractWithManifest(
       spark: SparkSession, inDir: String, tableDir: String,
-      checkpointDir: String, schemaFrom: DataFrame): StreamingQuery = {
-    val streamId = streamIdFor(checkpointDir, spark.sessionState.newHadoopConf())
-    val legacyId = legacyStreamIdFor(checkpointDir)
-    extractStream(spark, inDir, schemaFrom).writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        commitBatch(batch, batchId, tableDir, streamId, legacyId)
-      }
-      .start()
-  }
+      checkpointDir: String, schemaFrom: DataFrame): StreamingQuery =
+    availableNow(extractStream(spark, inDir, schemaFrom), checkpointDir)(
+      commitBatch(_, _, tableDir, _, _))
 
   /** Stream identity for the exactly-once watermark: micro-batch ids are
     * monotone only within one checkpoint lineage, so a fresh checkpoint
@@ -118,7 +122,7 @@ object EventStream {
     }
 
   private[graft] def commitBatch(batch: DataFrame, batchId: Long,
-      tableDir: String, streamId: String = "stream",
+      tableDir: String, streamId: String,
       legacyStreamId: String = ""): Unit = {
     val spark = batch.sparkSession
     import spark.implicits._
@@ -155,32 +159,14 @@ object EventStream {
       System.nanoTime() - t0, stats.keys.toSeq.sorted, stats)
   }
 
-  /** Streaming keep-first exact dedup — the custom-state surface
-    * (KeyValueGroupedDataset.flatMapGroupsWithState): state per content key
-    * is a single "seen" flag; the FIRST payload per key across all
-    * micro-batches is emitted, later duplicates are suppressed. Within one
-    * batch the minimum payload wins (deterministic under shuffle order).
-    * State is one boolean per distinct key, partitioned by key — but it
-    * never expires, so on an unbounded key universe use [[firstSeenTtl]]
-    * (finite retention, state removed on event-time timeout) instead. */
-  def firstSeen(kv: Dataset[(String, String)]): Dataset[(String, String)] = {
-    import kv.sparkSession.implicits._
-    kv.groupByKey(_._1)
-      .flatMapGroupsWithState[Boolean, (String, String)](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: String, rows: Iterator[(String, String)], state: GroupState[Boolean]) =>
-          if (state.exists) Iterator.empty
-          else {
-            state.update(true)
-            Iterator.single((key, rows.map(_._2).min))
-          }
-      }
-  }
-
-  /** [[firstSeen]] with a state TTL — the unbounded-keys fix: at stream
-    * scale one boolean per EVER-SEEN key grows forever, so retention must
-    * be finite. State carries its expiry (last sighting + `ttlMs`) and the
-    * key re-admits once the EVENT-TIME watermark passes it:
+  /** Streaming keep-first exact dedup with a state TTL — the custom-state
+    * surface (KeyValueGroupedDataset.flatMapGroupsWithState): the FIRST
+    * payload per key is emitted and later duplicates are suppressed;
+    * within one batch the minimum payload wins (deterministic under
+    * shuffle order). At stream scale one flag per EVER-SEEN key grows
+    * forever, so retention is finite: state carries its expiry (last
+    * sighting + `ttlMs`) and the key re-admits once the EVENT-TIME
+    * watermark passes it:
     *
     *  - a key idle past its TTL is timed out (`EventTimeTimeout`) and its
     *    state REMOVED — state size is bounded by keys active within one
@@ -241,61 +227,6 @@ object EventStream {
             out
           }
       }
-  }
-
-  /** Streaming corpus construction with CROSS-BATCH dedup: every
-    * micro-batch of raw documents is incrementally deduped against the
-    * corpus accumulated so far ([[graft.ops.Dedup.incrementalDedup]] —
-    * exact hash, LSH near-dup vs corpus, within-batch clusters with
-    * corpus-match poisoning) and only the admitted rows are appended.
-    *
-    * Idempotence is a property of the SEMANTICS, not a side channel: a
-    * re-delivered batch's rows are exact duplicates of their already-
-    * admitted copies, so the incremental dedup drops every one of them —
-    * replays self-cancel. (A production deployment would still commit
-    * appends through the snapshot manifest like [[runExtractWithManifest]]
-    * so a crash mid-append cannot expose partial files; the dedup
-    * guarantees cover re-delivery, not torn writes.)
-    *
-    * SCALE CAVEAT: this simple form re-reads and re-signatures the whole
-    * accumulated corpus every micro-batch — O(corpus) per batch. The
-    * production path is [[runIndexedCorpusStream]], which admits through
-    * the persisted dedup index and commits corpus + index atomically
-    * through the manifest. */
-  def runDedupedCorpusStream(spark: SparkSession, inDir: String,
-      corpusDir: String, checkpointDir: String, schemaFrom: DataFrame,
-      idCol: String = "doc_id", textCol: String = "text",
-      threshold: Double = 0.7): StreamingQuery =
-    spark.readStream.schema(schemaFrom.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        admitBatch(batch, corpusDir, idCol, textCol, threshold)
-      }
-      .start()
-
-  private[graft] def admitBatch(batch: DataFrame, corpusDir: String,
-      idCol: String, textCol: String, threshold: Double): Unit = {
-    val spark = batch.sparkSession
-    // first-batch detection looks for COMMITTED data files, NOT a broad
-    // exception catch and not bare directory existence: a pre-created or
-    // crash-leftover empty dir is still "no corpus yet", while a transient
-    // read failure (permissions, metastore, storage) on a real corpus must
-    // fail the batch — substituting an empty corpus would skip dedup and
-    // permanently admit duplicates
-    val path = new org.apache.hadoop.fs.Path(corpusDir)
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    val hasData = fs.exists(path) &&
-      fs.listStatus(path).exists(_.getPath.getName.endsWith(".parquet"))
-    val corpus =
-      if (hasData) spark.read.parquet(corpusDir) else batch.limit(0)
-    val admitted = graft.ops.Dedup.incrementalDedup(
-      batch, corpus, idCol, textCol, threshold = threshold)
-    admitted.write.mode("append").parquet(corpusDir)
   }
 
   /** Manifest bucket namespaces of the indexed corpus table, parameterized
@@ -459,11 +390,12 @@ object EventStream {
         "table creation or rebuild the table")
   }
 
-  /** [[runDedupedCorpusStream]] upgraded with the PERSISTED dedup index
-    * and the snapshot manifest — the production wiring the index exists
-    * for (without it every micro-batch re-hashes and re-signatures the
-    * whole accumulated corpus — O(corpus) per batch on a corpus that
-    * grows forever):
+  /** Streaming corpus construction with CROSS-BATCH dedup through the
+    * PERSISTED dedup index and the snapshot manifest: every micro-batch is
+    * deduped against the corpus committed so far (exact hash, LSH near-dup
+    * vs corpus, within-batch clusters with corpus-match poisoning) without
+    * re-hashing and re-signaturing the whole accumulated corpus — O(corpus)
+    * per batch on a corpus that grows forever:
     *
     *  - table layout: `<tableDir>/data/bucket=0` = corpus rows,
     *    `bucket=1` = index rows (content hashes + banded signatures);
@@ -487,23 +419,13 @@ object EventStream {
       threshold: Double = 0.7, k: Int = 8, bands: Int = 4,
       corpusBuckets: Int = 1, heatCol: Option[String] = None,
       heatDepth: Int = HeatDepthDefault,
-      heatWidth: Int = HeatWidthDefault): StreamingQuery = {
-    val streamId = streamIdFor(checkpointDir, spark.sessionState.newHadoopConf())
-    val legacyId = legacyStreamIdFor(checkpointDir)
-    spark.readStream.schema(schemaFrom.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      heatWidth: Int = HeatWidthDefault): StreamingQuery =
+    availableNow(files(spark, inDir, schemaFrom, 1), checkpointDir) {
+      (batch, batchId, streamId, legacyId) =>
         admitIndexedBatch(batch, batchId, tableDir, streamId,
           idCol, textCol, threshold, k, bands, corpusBuckets, legacyId,
           heatCol, heatDepth, heatWidth)
-      }
-      .start()
-  }
+    }
 
   /** The admission plan of one micro-batch against the COMMITTED table —
     * factored out so tests can assert its physical shape (the corpus scan

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ops.Similarity
 
@@ -166,22 +166,13 @@ object VectorIndexStream {
       nCells: Int = 16, lloydIters: Int = 2,
       initialCodebook: Option[Seq[Seq[Double]]] = None,
       nearDupCosine: Option[Double] = None,
-      maxGateCell: Int = 4096): StreamingQuery = {
-    val streamId = EventStream.streamIdFor(
-      checkpointDir, spark.sessionState.newHadoopConf())
-    spark.readStream.schema(schemaFrom.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      maxGateCell: Int = 4096): StreamingQuery =
+    EventStream.availableNow(
+      EventStream.files(spark, inDir, schemaFrom, 1), checkpointDir) {
+      (batch, batchId, streamId, _) =>
         indexBatch(batch, batchId, tableDir, streamId, idCol, vecCol,
           nCells, lloydIters, initialCodebook, nearDupCosine, maxGateCell)
-      }
-      .start()
-  }
+    }
 
   private[graft] def indexBatch(batch: DataFrame, batchId: Long,
       tableDir: String, streamId: String, idCol: String, vecCol: String,
@@ -307,19 +298,17 @@ object VectorIndexStream {
     // written footers). The drift aggregate below is independent of it, so
     // the two actions overlap (guide §2.6); concurrent first-touch of the
     // lazily-checkpointed frame is block-manager-safe.
-    val fCellWm = scala.concurrent.Future {
-      admitted.map(
+    val (cellWm, msdQ) = graft.Par.par2(
+      () => admitted.map(
         _.groupBy(col("bucket")).agg(max(col(idCol).cast("string")))
           .collect().map(r => r.getInt(0) -> r.getString(1)).toMap)
-        .getOrElse(Map.empty[Int, String])
-    }(graft.Par.ec)
-    // drift signal: mean squared distance of this batch's rows to their
-    // assigned centroids, floored to integer micro-units (−1 = no rows).
-    // The codebook is frozen, so a rising assign_msd_q across batches is
-    // the operator's rebuild trigger — without it "never re-fit" is an
-    // unobservable liability. One narrow broadcast join on the cell id.
-    val fMsdQ = scala.concurrent.Future {
-      assigned.map { a =>
+        .getOrElse(Map.empty[Int, String]),
+      // drift signal: mean squared distance of this batch's rows to their
+      // assigned centroids, floored to integer micro-units (−1 = no rows).
+      // The codebook is frozen, so a rising assign_msd_q across batches is
+      // the operator's rebuild trigger — without it "never re-fit" is an
+      // unobservable liability. One narrow broadcast join on the cell id.
+      () => assigned.map { a =>
         val cb = cents.zipWithIndex.map { case (c, i) => (i, c) }
           .toDF("bucket", "__centv2")
         val sqd = expr(s"""aggregate(zip_with(__centv2, $vecCol,
@@ -327,12 +316,7 @@ object VectorIndexStream {
           |  0D, (acc, v) -> acc + v)""".stripMargin)
         math.floor(a.join(broadcast(cb), "bucket")
           .agg(avg(sqd)).head().getDouble(0) * 1e6).toLong
-      }.getOrElse(-1L)
-    }(graft.Par.ec)
-    val cellWm: Map[Int, String] =
-      scala.concurrent.Await.result(fCellWm, scala.concurrent.duration.Duration.Inf)
-    val msdQ: Long =
-      scala.concurrent.Await.result(fMsdQ, scala.concurrent.duration.Duration.Inf)
+      }.getOrElse(-1L))
 
     // only TOUCHED buckets are listed and committed — the commit
     // carries every untouched bucket's state forward, so at nCells=1024 a

@@ -136,7 +136,11 @@ class PinSpec extends AnyFunSuite {
       ".unpersist(" -> Some("graft/util.scala"),
       "mergeSchema" -> None, // every read takes the manifest's merged schema
       "ParquetFileReader" -> Some("graft/manifest.scala"), // footers: Manifest only
-      "footerSchema(" -> Some("graft/manifest.scala"))
+      "footerSchema(" -> Some("graft/manifest.scala"),
+      // one stream source and one runner: EventStream.files / availableNow
+      ".readStream" -> Some("graft/streaming/EventStream.scala"),
+      ".foreachBatch" -> Some("graft/streaming/EventStream.scala"),
+      "Trigger.AvailableNow" -> Some("graft/streaming/EventStream.scala"))
     val offenders = for {
       (pattern, only) <- rules
       (f, src) <- sources if src.contains(pattern) && !only.exists(f.getPath.endsWith)

@@ -10,39 +10,6 @@ class StreamingSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
   import spark.implicits._
 
-  test("AvailableNow extraction stream == batch extraction, and checkpoint-resumes") {
-    val in = Files.createTempDirectory("graft_stream_in_").toString
-    val out = Files.createTempDirectory("graft_stream_out_").toString
-    val ckpt = Files.createTempDirectory("graft_stream_ckpt_").toString
-    val schemaFrom = spark.createDataset(Seq(DocGen.docFor(0L))).toDF()
-
-    // batch 1: docs 0..199
-    spark.createDataset((0L until 200L).map(DocGen.docFor)).toDF()
-      .write.mode("append").parquet(in)
-    val q1 = streaming.EventStream.runExtractAvailableNow(spark, in, out, ckpt, schemaFrom)
-    q1.awaitTermination()
-    val n1 = spark.read.parquet(out).count()
-    assert(n1 == 200)
-
-    // batch 2: docs 200..299 arrive; restart from checkpoint
-    spark.createDataset((200L until 300L).map(DocGen.docFor)).toDF()
-      .write.mode("append").parquet(in)
-    val q2 = streaming.EventStream.runExtractAvailableNow(spark, in, out, ckpt, schemaFrom)
-    q2.awaitTermination()
-
-    val streamed = spark.read.parquet(out).as[ExtractedDoc].collect()
-    assert(streamed.length == 300, "resume must process only the new files, once")
-
-    // span-for-span equality with the batch oracle
-    val byId = streamed.map(d => d.doc_id -> d).toMap
-    (0L until 300L).map(DocGen.docFor).foreach { d =>
-      val exp = ReferenceOracle.extract(d)
-      val act = byId(d.doc_id)
-      assert(act.spans.map(s => (s.kind, s.text, s.media_ref)) ==
-        exp.spans.map(s => (s.kind, s.text, s.media_ref)), s"mismatch ${d.doc_id}")
-    }
-  }
-
   test("native extract_spans runs unchanged under incremental execution (stream == oracle)") {
     val in = Files.createTempDirectory("graft_nstream_in_").toString
     val out = Files.createTempDirectory("graft_nstream_out_").toString
@@ -65,23 +32,6 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
-  test("flatMapGroupsWithState streaming dedup keeps the first payload per key across batches") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sq = spark.sqlContext
-    val mem = MemoryStream[(String, String)]
-    val q = streaming.EventStream.firstSeen(mem.toDS())
-      .writeStream.format("memory").queryName("dedup_test")
-      .outputMode("append").start()
-    mem.addData(("h1", "doc_b"), ("h1", "doc_a"), ("h2", "doc_c"))
-    q.processAllAvailable()
-    mem.addData(("h1", "doc_z"), ("h3", "doc_d")) // h1 already seen → suppressed
-    q.processAllAvailable()
-    val rows = spark.sql("select * from dedup_test").collect()
-      .map(r => (r.getString(0), r.getString(1))).toSet
-    q.stop()
-    assert(rows == Set(("h1", "doc_a"), ("h2", "doc_c"), ("h3", "doc_d")), rows.toString)
-  }
-
   test("firstSeenTtl: live keys dedup, expired keys re-admit, idle state is removed") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import java.sql.Timestamp
@@ -91,13 +41,15 @@ class StreamingSpec extends AnyFunSuite {
     val q = streaming.EventStream.firstSeenTtl(mem.toDS(), ttlMs = 60 * 60 * 1000) // 1h TTL
       .writeStream.format("memory").queryName("ttl_test")
       .outputMode("append").start()
-    // batch 1: first sightings emit
-    mem.addData(("k1", "v1", ts("10:00")), ("k2", "w1", ts("10:00")))
+    // batch 1: first sightings emit; within one batch the minimum payload wins
+    mem.addData(("k1", "v1", ts("10:00")), ("k2", "w1", ts("10:00")),
+      ("k3", "b3", ts("10:00")), ("k3", "a3", ts("10:00")))
     q.processAllAvailable()
     // batch 2: duplicates within the TTL → suppressed (and TTL extended)
     mem.addData(("k1", "v2", ts("10:30")), ("k2", "w2", ts("10:30")))
     q.processAllAvailable()
-    // batch 3: advance the watermark past both expiries (10:30 + 1h)
+    // batch 3: advance the watermark past every expiry (k3 at 11:00, k1
+    // and k2 at 10:30 + 1h); k3 times out here and never emits again
     mem.addData(("other", "x", ts("13:00")))
     q.processAllAvailable()
     // batch 4: k1 reappears AFTER expiry (data present → expiry check path)
@@ -109,7 +61,7 @@ class StreamingSpec extends AnyFunSuite {
     val rows = spark.sql("select * from ttl_test").collect()
       .map(r => (r.getString(0), r.getString(1)))
     q.stop()
-    assert(rows.toSet == Set(("k1", "v1"), ("k2", "w1"), ("other", "x"),
+    assert(rows.toSet == Set(("k1", "v1"), ("k2", "w1"), ("k3", "a3"), ("other", "x"),
       ("k1", "v3"), ("k2", "w3")), rows.mkString("; "))
     assert(!rows.contains(("k1", "v2")) && !rows.contains(("k2", "w2")),
       "within-TTL duplicates must be suppressed")
@@ -259,56 +211,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(runs.length == 2 && runs.forall(_.startsWith("stream-batch-")), runs.mkString(","))
   }
 
-  test("deduped-corpus stream: cross-batch admission matches batch, re-delivery self-cancels") {
-    import org.apache.spark.sql.functions._
-    val in = Files.createTempDirectory("graft_corp_in_").toString
-    val corpusDir = Files.createTempDirectory("graft_corp_tbl_").toString + "/c"
-    val ckpt = Files.createTempDirectory("graft_corp_ckpt_").toString
-    val base = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-      .select($"doc_id", $"text")
-
-    // a PRE-CREATED empty corpus dir (object-store mkdir convention) must
-    // read as "no corpus yet", not fail the first batch
-    new java.io.File(corpusDir).mkdirs()
-
-    // wave 1: 40 natural docs + 10 exact dups + 5 near-dups, one file
-    val wave1 = base.where($"doc_id" < 40)
-      .union(base.where($"doc_id" < 10).select(($"doc_id" + 1000).as("doc_id"), $"text"))
-      .union(base.where($"doc_id" >= 10 && $"doc_id" < 15)
-        .select(($"doc_id" + 2000).as("doc_id"), concat($"text", lit(" extra")).as("text")))
-    wave1.coalesce(1).write.mode("append").parquet(in)
-    streaming.EventStream.runDedupedCorpusStream(spark, in, corpusDir, ckpt, base)
-      .awaitTermination()
-    val c1 = spark.read.parquet(corpusDir)
-    // admission must equal the batch operator applied to the same wave
-    val exp1 = ops.Dedup.incrementalDedup(wave1, wave1.limit(0), "doc_id", "text")
-      .select($"doc_id").as[Long].collect().toSet
-    assert(c1.select($"doc_id").as[Long].collect().toSet == exp1)
-
-    // wave 2: 20 re-crawled exact copies + 10 fresh docs → only fresh admitted
-    val wave2 = base.where($"doc_id" < 20)
-      .select(($"doc_id" + 3000).as("doc_id"), $"text")
-      .union(base.where($"doc_id" >= 40 && $"doc_id" < 50))
-    wave2.coalesce(1).write.mode("append").parquet(in)
-    streaming.EventStream.runDedupedCorpusStream(spark, in, corpusDir, ckpt, base)
-      .awaitTermination()
-    val c2ids = spark.read.parquet(corpusDir).select($"doc_id").as[Long].collect().toSet
-    assert((c2ids -- c1.select($"doc_id").as[Long].collect().toSet) ==
-      (40L until 50L).toSet, "only the fresh wave-2 docs are admitted")
-
-    // re-delivery: a FRESH checkpoint reprocesses both files; every row is
-    // an exact dup of its admitted copy, so nothing new lands
-    val ckpt2 = Files.createTempDirectory("graft_corp_ckpt2_").toString
-    streaming.EventStream.runDedupedCorpusStream(spark, in, corpusDir, ckpt2, base)
-      .awaitTermination()
-    assert(spark.read.parquet(corpusDir).count() == c2ids.size.toLong)
-
-    // the built corpus is internally duplicate-free (exact AND near)
-    val corpus = spark.read.parquet(corpusDir)
-    assert(corpus.select(md5($"text")).distinct().count() == c2ids.size.toLong)
-    assert(ops.Dedup.nearDupPairs(corpus, "doc_id", "text", threshold = 0.7).count() == 0)
-  }
-
   test("indexed corpus stream: manifest-committed corpus+index, admission == batch, crash files stay orphans") {
     import org.apache.spark.sql.functions._
     val in = Files.createTempDirectory("graft_icorp_in_").toString
@@ -372,6 +274,20 @@ class StreamingSpec extends AnyFunSuite {
     assert(removed.nonEmpty)
     assert(corpusNow().select($"doc_id").as[Long].collect().toSet == c2)
     assert(table.orphanFiles().isEmpty)
+
+    // re-delivery under a FRESH checkpoint (a new stream id, so the batch
+    // watermark cannot skip it): both wave files go through admission
+    // again, every row dedups against the committed corpus, and nothing
+    // new lands
+    val ckpt2 = Files.createTempDirectory("graft_icorp_ckpt2_").toString
+    streaming.EventStream.runIndexedCorpusStream(spark, in, tableDir, ckpt2, base)
+      .awaitTermination()
+    assert(corpusNow().count() == c2.size.toLong)
+
+    // the built corpus is internally duplicate-free (exact AND near)
+    val corpus = corpusNow()
+    assert(corpus.select(md5($"text")).distinct().count() == c2.size.toLong)
+    assert(ops.Dedup.nearDupPairs(corpus, "doc_id", "text", threshold = 0.7).count() == 0)
   }
 
   test("incremental read over the streaming corpus: a consumer syncs exactly each batch's admissions") {
