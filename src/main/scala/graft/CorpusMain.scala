@@ -116,11 +116,12 @@ object CorpusMain {
     def apply(name: String)(compute: => DataFrame): DataFrame = {
       val tdir = s"$stagesDir/$name"
       val m = new Manifest(tdir, spark.sessionState.newHadoopConf())
-      val snap = m.head().filter(_.runId == runIdOf(name)).getOrElse {
+      val head = m.head()
+      val snap = head.filter(_.runId == runIdOf(name)).getOrElse {
         computed += name
         val df = compute
         def written(out: DataFrame): Manifest.Txn = {
-          val tx = m.txn(spark, Seq(0))
+          val tx = m.txn(spark, head, Seq(0))
           out.write.mode("append").parquet(s"$tdir/data/bucket=0")
           tx
         }
@@ -137,7 +138,7 @@ object CorpusMain {
         tx.commit(runIdOf(name))
       }
       rows(name) = snap.buckets.headOption.map(_.rows).getOrElse(0L)
-      m.readData(spark, Some(Set(0))).drop("bucket")
+      m.read(spark, snap, Some(Set(0))).drop("bucket")
     }
   }
 

@@ -37,13 +37,12 @@ object IncrementalCorpus {
   val OovBucket = 2
 
   private def conf(spark: SparkSession) = spark.sessionState.newHadoopConf()
+  import streaming.EventStream.{HeatDepthDefault => HeatDepth, HeatWidthDefault => HeatWidth}
 
-  /** The corpus table's committed sub-bucket layout (from the layout
+  /** The sub-bucket layout of corpus snapshot `snap` (from the layout
     * stamp [[streaming.EventStream]] maintains). */
-  private def layoutOf(spark: SparkSession, outDir: String): Int =
-    new Manifest(corpusTableDir(outDir), conf(spark)).head()
-      .flatMap(_.streamWatermarks.get(streaming.EventStream.LayoutKey))
-      .map(_.toInt).getOrElse(1)
+  private def layoutOf(snap: Manifest.Snapshot): Int =
+    snap.streamWatermarks.get(streaming.EventStream.LayoutKey).map(_.toInt).getOrElse(1)
 
   /** Seed the incremental corpus from the batch pipeline's committed
     * TRAIN side (lm_kept ∩ split=train) as admission batch 0 — the
@@ -62,8 +61,8 @@ object IncrementalCorpus {
     val train = gated
       .join(split.where(col("split") === "train").select(col("doc_id")), "doc_id")
       .select(col("doc_id"), col("domain"), col("text"))
-    streaming.EventStream.admitIndexedBatch(train, 0L, corpusTableDir(outDir),
-      StreamId, "doc_id", "text", 0.8, 8, 4, corpusBuckets)
+    streaming.EventStream.admitOn(None, train, 0L, corpusTableDir(outDir), StreamId,
+      "doc_id", "text", 0.8, 8, 4, corpusBuckets, "", None, HeatDepth, HeatWidth)
   }
 
   /** Word-k-gram size of the holdout-leakage gate (GPT-3-style
@@ -88,9 +87,9 @@ object IncrementalCorpus {
   def admitIncrement(spark: SparkSession, raw: Dataset[RawDoc],
       outDir: String, batchId: Long): Unit = {
     require(batchId > 0, "batch 0 is the bootstrap; increments start at 1")
-    require(new Manifest(corpusTableDir(outDir), conf(spark)).head().nonEmpty,
-      s"no corpus at ${corpusTableDir(outDir)} — bootstrap first " +
-        "(an increment admitted before bootstrap would mute the seed batch)")
+    val prev = new Manifest(corpusTableDir(outDir), conf(spark)).head().getOrElse(
+      throw new IllegalArgumentException(s"no corpus at ${corpusTableDir(outDir)} — " +
+        "bootstrap first (an increment admitted before bootstrap would mute the seed batch)"))
     val gated = gateIncrement(raw.toDF())
     val holdout = CorpusMain.readStage(spark, outDir, "eval_holdout")
     // pinned lazily: the admission's input count and its exact pass both
@@ -100,9 +99,8 @@ object IncrementalCorpus {
           k = HoldoutDeconK)
         .where(col("keep") === 1).select(col("doc_id")),
       "doc_id"))
-    streaming.EventStream.admitIndexedBatch(admissible, batchId,
-      corpusTableDir(outDir), StreamId, "doc_id", "text", 0.8, 8, 4,
-      layoutOf(spark, outDir))
+    streaming.EventStream.admitOn(Some(prev), admissible, batchId, corpusTableDir(outDir),
+      StreamId, "doc_id", "text", 0.8, 8, 4, layoutOf(prev), "", None, HeatDepth, HeatWidth)
   }
 
   /** The admission front end of one increment: extraction, then the
@@ -144,9 +142,10 @@ object IncrementalCorpus {
     val cm = new Manifest(corpusTableDir(outDir), conf(spark))
     val cHead = cm.head().getOrElse(throw new IllegalStateException(
       s"no corpus at ${corpusTableDir(outDir)} — bootstrap first"))
-    val cb = layoutOf(spark, outDir)
+    val cb = layoutOf(cHead)
     val tm = new Manifest(trainTableDir(outDir), conf(spark))
-    val consumed = tm.head()
+    val tHead = tm.head()
+    val consumed = tHead
       .flatMap(_.streamWatermarks.get(ConsumedKey)).getOrElse(-1L).toInt
     if (consumed >= cHead.id) return 0L
 
@@ -156,7 +155,7 @@ object IncrementalCorpus {
     val n = fresh.count()
 
     val buckets = Seq(ShardsBucket, SequencesBucket, OovBucket)
-    val tx = tm.txn(spark, buckets)
+    val tx = tm.txn(spark, tHead, buckets)
     if (n > 0) {
       // frozen tokenizer artifacts from the base run
       val merges = CorpusMain.readStage(spark, outDir, "bpe_merges")

@@ -50,11 +50,20 @@ import scala.jdk.CollectionConverters._
   * recursive listing of the data directory is itself a scale bottleneck
   * (and on object stores, not even consistent).
   *
-  * Concurrency: SINGLE WRITER per table (the standard lakehouse ingest
-  * topology — one job owns a table's commit path; Iceberg's
-  * optimistic-retry commit would need a CAS primitive the plain-FS HEAD
-  * swap cannot provide). Any number of concurrent readers are safe: they
-  * resolve a snapshot once via [[head]] and read immutable files.
+  * Concurrency: one operation = one resolved snapshot. An operation
+  * resolves HEAD once and plans every read ([[Manifest.read]]), its
+  * [[Manifest.Txn]] and its commit from that snapshot; readers then touch
+  * only immutable files, so any number of concurrent readers are safe.
+  * A commit lands only on the parent it was planned from: it re-reads
+  * HEAD just before writing and, if another writer committed in between,
+  * fails with an [[IllegalStateException]] naming the table, the expected
+  * and the found snapshot ids, and commits nothing (its files stay
+  * GC-able orphans; re-plan from the new HEAD). The check narrows the
+  * two-writer window to the few metadata writes between it and the HEAD
+  * swap but does not close it: the plain-FS HEAD swap has no
+  * compare-and-swap, so two writers that both pass the check still race,
+  * and the later swap wins. Keep ONE writer per table (the standard
+  * lakehouse ingest topology — one job owns a table's commit path).
   *
   * Reference analog: qetch has NO resume (it re-downloads from scratch,
   * SURVEY.md §2A O15) — this is a north-rule addition.
@@ -226,9 +235,10 @@ object Manifest {
 
   /** One write-then-commit of a [[Manifest]] table (Iceberg's transaction
     * API: stage appends and rewrites, then one commit). Opened by
-    * [[Manifest.txn]] BEFORE the write, it lists the named buckets once;
-    * the caller then writes into their directories, concurrently if it
-    * likes, and stages each bucket's new state:
+    * [[Manifest.txn]] BEFORE the write, on the `parent` snapshot the
+    * operation resolved (None: the table has no commit yet), it lists the
+    * named buckets once; the caller then writes into their directories,
+    * concurrently if it likes, and stages each bucket's new state:
     *  - [[append]] grows the parent state by the fresh files (rows add,
     *    the watermark takes the max, files and stats extend);
     *  - [[replace]] sets it to the kept parent files plus the fresh files.
@@ -237,13 +247,15 @@ object Manifest {
     * files this transaction wrote, never a stale leftover of a crashed
     * run. [[commit]] reads every staged fresh file's footer once — its
     * row count and its [[ZoneMapCol]] zone map — and commits one
-    * snapshot. Nothing is visible before the commit: a writer that
-    * throws leaves HEAD untouched and its files as orphans
-    * [[Manifest.removeOrphans]] collects. Stage from one thread. */
+    * snapshot over `parent` — or, when another writer moved HEAD off
+    * `parent` since, throws and commits nothing. Nothing is visible
+    * before the commit: a writer that throws leaves HEAD untouched and
+    * its files as orphans [[Manifest.removeOrphans]] collects. Stage from
+    * one thread. */
   final class Txn private[Manifest] (table: Manifest, spark: SparkSession,
-      buckets: Seq[Int]) {
-    private val parent: Map[Int, BucketState] =
-      table.head().map(_.buckets.map(b => b.bucket -> b).toMap).getOrElse(Map.empty)
+      parent: Option[Snapshot], buckets: Seq[Int]) {
+    private val states: Map[Int, BucketState] =
+      parent.map(_.buckets.map(b => b.bucket -> b).toMap).getOrElse(Map.empty)
     private val before: Map[Int, Set[String]] =
       buckets.map(b => b -> table.listBucketFiles(b).toSet).toMap
     private val listed = mutable.Map.empty[Int, Seq[String]]
@@ -269,7 +281,7 @@ object Manifest {
 
     /** Stage `bucket` as its parent state grown by the fresh files. */
     def append(bucket: Int, watermark: String): Unit = staged(bucket) = { () =>
-      val p = parent.getOrElse(bucket, BucketState(bucket, 0L, ""))
+      val p = states.getOrElse(bucket, BucketState(bucket, 0L, ""))
       BucketState(bucket, p.rows + rows(Seq(bucket)), Seq(p.watermarkDocId, watermark).max,
         p.files ++ fresh(bucket), p.stats ++ freshStats(bucket))
     }
@@ -287,18 +299,19 @@ object Manifest {
     private def replaced(bucket: Int, watermark: String, kept: Seq[String],
         rows: Long): BucketState = {
       val keep = kept.toSet
-      val keptStats = parent.get(bucket).toSeq.flatMap(_.stats).filter(s => keep(s.file))
+      val keptStats = states.get(bucket).toSeq.flatMap(_.stats).filter(s => keep(s.file))
       BucketState(bucket, rows, watermark, kept ++ fresh(bucket),
         keptStats ++ freshStats(bucket))
     }
 
     /** Read the staged buckets' footers in one pass and commit them in one
-      * snapshot ([[Manifest.commit]]). */
+      * snapshot over the open-time parent ([[Manifest.commit]]'s merge);
+      * an [[IllegalStateException]] when HEAD no longer names it. */
     def commit(runId: String, streamWatermark: Option[(String, Long)] = None,
         extraWatermarks: Map[String, Long] = Map.empty,
         overwriteWatermarks: Map[String, Long] = Map.empty): Snapshot = {
       rows(staged.keys.toSeq) // one footer pass over every staged bucket
-      table.commit(runId, staged.values.map(_()).toSeq, streamWatermark,
+      table.commitOn(parent, runId, staged.values.map(_()).toSeq, streamWatermark,
         extraWatermarks, overwriteWatermarks)
     }
   }
@@ -340,9 +353,10 @@ final class Manifest(tableDir: String, conf: Configuration = new Configuration()
     finally out.close()
   }
 
-  /** Current snapshot, if any. HEAD wins; with no readable HEAD (crash
-    * between delete and rename in [[commit]]) the highest snap file is
-    * current — it was fully written before the swap began. */
+  /** Current snapshot, if any — what an operation resolves ONCE and then
+    * plans every read and its commit from. HEAD wins; with no readable
+    * HEAD (crash between delete and rename in [[commit]]) the highest snap
+    * file is current — it was fully written before the swap began. */
   def head(): Option[Snapshot] = {
     val fromHead =
       try {
@@ -385,9 +399,6 @@ final class Manifest(tableDir: String, conf: Configuration = new Configuration()
       node.get("run_id").asText(), buckets, wms)
   }
 
-  /** Buckets already completed per the current snapshot (resume set). */
-  def completedBuckets(): Set[Int] = head().map(_.buckets.map(_.bucket).toSet).getOrElse(Set.empty)
-
   /** Manifest-planned read of the committed table: the scan's file list
     * comes from the snapshot (optionally pruned to `buckets`), never from a
     * directory listing. `basePath` re-attaches the `bucket` partition
@@ -416,12 +427,25 @@ final class Manifest(tableDir: String, conf: Configuration = new Configuration()
     * bucket whose rows WIDENED across commits reads every column, NULL in
     * the older rows. Building the frame starts no Spark job for up to 32
     * files — the file list comes from the snapshot and the schema from
-    * their footers, read on the driver. */
+    * their footers, read on the driver.
+    *
+    * It resolves one snapshot — `asOf`, else HEAD — and plans from it
+    * ([[read]]); an operation that has already resolved its snapshot
+    * calls [[read]] directly. */
   def readData(spark: SparkSession, buckets: Option[Set[Int]] = None,
       asOf: Option[Int] = None,
-      idRange: Option[(String, String)] = None): DataFrame = {
-    val snap = asOf.map(snapshotById).orElse(head()).getOrElse(
+      idRange: Option[(String, String)] = None): DataFrame =
+    read(spark, resolve(asOf), buckets, idRange)
+
+  /** The snapshot an operation plans from: `asOf`, else HEAD, resolved
+    * once. Fails when the table has no commit. */
+  def resolve(asOf: Option[Int]): Snapshot =
+    asOf.map(snapshotById).orElse(head()).getOrElse(
       throw new IllegalStateException(s"no committed snapshot at $tableDir"))
+
+  /** [[readData]] of the already-resolved snapshot `snap`: no HEAD read. */
+  def read(spark: SparkSession, snap: Snapshot, buckets: Option[Set[Int]] = None,
+      idRange: Option[(String, String)] = None): DataFrame = {
     val files = planFiles(snap, buckets, idRange)
     if (files.nonEmpty) readFiles(spark, files)
     else {
@@ -490,8 +514,11 @@ final class Manifest(tableDir: String, conf: Configuration = new Configuration()
       .map(_.getPath.toString).sorted
   }
 
-  /** Open a write-then-commit [[Manifest.Txn]] over `buckets`. */
-  def txn(spark: SparkSession, buckets: Seq[Int]): Txn = new Txn(this, spark, buckets)
+  /** Open a write-then-commit [[Manifest.Txn]] over `buckets`, planned
+    * from `parent` — the snapshot the operation resolved (None: no commit
+    * yet). */
+  def txn(spark: SparkSession, parent: Option[Snapshot], buckets: Seq[Int]): Txn =
+    new Txn(this, spark, parent, buckets)
 
   /** Snapshot by id (must exist on disk). */
   def snapshotById(id: Int): Snapshot = readSnap(new Path(meta, snapName(id)))
@@ -583,8 +610,7 @@ final class Manifest(tableDir: String, conf: Configuration = new Configuration()
     * (which rewrites) only at consumer sync points. */
   def readAppended(spark: SparkSession, fromId: Int, toId: Option[Int] = None,
       allowRewrites: Boolean = false, buckets: Option[Set[Int]] = None): DataFrame = {
-    val to = toId.map(snapshotById).orElse(head()).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $tableDir"))
+    val to = resolve(toId)
     val fromFiles: Set[String] =
       if (fromId < 0) Set.empty
       else snapshotById(fromId).buckets
@@ -599,7 +625,7 @@ final class Manifest(tableDir: String, conf: Configuration = new Configuration()
         "allowRewrites=true to audit the raw added files")
     val added = toSel.flatMap(_.files).filterNot(fromFiles)
     if (added.nonEmpty) readFiles(spark, added)
-    else readData(spark, buckets, Some(to.id)).where(org.apache.spark.sql.functions.lit(false))
+    else read(spark, to, buckets).where(org.apache.spark.sql.functions.lit(false))
   }
 
   /** ROLL BACK the table to snapshot `toId` (Iceberg's
@@ -634,11 +660,13 @@ final class Manifest(tableDir: String, conf: Configuration = new Configuration()
     val gone = target.buckets.flatMap(_.files).filterNot(f => fs.exists(new Path(f)))
     require(gone.isEmpty,
       s"rollback to $toId impossible: ${gone.size} data files already GC'd, e.g. ${gone.take(3).mkString(", ")}")
-    commit(s"rollback-to-$toId", target.buckets)
+    commitOn(Some(cur), s"rollback-to-$toId", target.buckets, None, Map.empty, Map.empty)
   }
 
-  /** Commit: union the parent's completed buckets with `newBuckets` (new
-    * state wins on conflict), write snap-(n+1), advance HEAD.
+  /** Commit over the current HEAD: union its completed buckets with
+    * `newBuckets` (new state wins on conflict), write snap-(n+1), advance
+    * HEAD. HEAD is resolved once and committed against as a
+    * [[Manifest.Txn]] commits against its parent, check included.
     * `extraWatermarks` ride the same carried-forward-verbatim map as the
     * streaming watermark — the durable home for table-level metadata such
     * as the indexed-corpus layout stamp (reserved `__`-prefixed keys;
@@ -650,10 +678,25 @@ final class Manifest(tableDir: String, conf: Configuration = new Configuration()
   def commit(runId: String, newBuckets: Seq[BucketState],
       streamWatermark: Option[(String, Long)] = None,
       extraWatermarks: Map[String, Long] = Map.empty,
-      overwriteWatermarks: Map[String, Long] = Map.empty): Snapshot = {
-    fs.mkdirs(meta)
-    val parent = head()
+      overwriteWatermarks: Map[String, Long] = Map.empty): Snapshot =
+    commitOn(head(), runId, newBuckets, streamWatermark, extraWatermarks,
+      overwriteWatermarks)
+
+  /** [[commit]] over `parent`, which must still be HEAD. The check runs
+    * just before the writes, so it narrows the two-writer window without
+    * closing it (no compare-and-swap on a plain FS; see the header).
+    * `snap-<n+1>.json` is written with overwrite: a crashed commit's
+    * leftover, with HEAD still at n, never blocks the rerun. */
+  private def commitOn(parent: Option[Snapshot], runId: String,
+      newBuckets: Seq[BucketState], streamWatermark: Option[(String, Long)],
+      extraWatermarks: Map[String, Long],
+      overwriteWatermarks: Map[String, Long]): Snapshot = {
     val parentId = parent.map(_.id).getOrElse(-1)
+    val found = head().fold(-1)(_.id)
+    if (found != parentId) throw new IllegalStateException(s"commit '$runId' to " +
+      s"$tableDir was planned from snapshot $parentId but HEAD is now snapshot $found: " +
+      "another writer committed in between; nothing was committed, re-plan from HEAD")
+    fs.mkdirs(meta)
     val merged = (parent.map(_.buckets).getOrElse(Seq.empty)
       .filterNot(b => newBuckets.exists(_.bucket == b.bucket)) ++ newBuckets)
       .sortBy(_.bucket)

@@ -97,11 +97,12 @@ object ExtractJob {
     import spark.implicits._
     val t0 = System.nanoTime()
     val table = new Manifest(tableDir, spark.sessionState.newHadoopConf())
-    val completed = if (resume) table.completedBuckets() else Set.empty[Int]
+    val prev = table.head()
+    val completed = prev.filter(_ => resume).toSeq.flatMap(_.buckets.map(_.bucket))
     val allBuckets = (0 until DocGen.NumBuckets).toSet
     val pending = (allBuckets -- completed).toSeq.sorted
 
-    if (pending.isEmpty) return Some(table.head().get)
+    if (pending.isEmpty) return prev
 
     // partition-pruning filter: with a parquet source partitioned by bucket
     // this prunes directories; with a generated Dataset it's a cheap filter.
@@ -126,7 +127,7 @@ object ExtractJob {
     // must record only files THIS run produced — the Txn's fresh-file diff
     // excludes stale leftovers (they become unreferenced orphans,
     // removable via Manifest.removeOrphans).
-    val tx = table.txn(spark, pending)
+    val tx = table.txn(spark, prev, pending)
     extracted
       .write.mode("overwrite")
       // per-write option, NOT session config: a session-wide setting would
@@ -244,7 +245,7 @@ object ExtractJob {
 
     // affected buckets from data at rest: spans + bucket columns only,
     // config-sized result (bounded by the bucket count, never table width)
-    val pending = table.readData(spark)
+    val pending = table.read(spark, snap)
       .where(hit)
       .select($"bucket").distinct()
       .collect().map(_.getInt(0)).toSeq.sorted
@@ -256,7 +257,7 @@ object ExtractJob {
       else math.max(1, math.min(pending.length, pendingDocs.rdd.getNumPartitions))
     val extracted = transform(pendingDocs, numPartitions = parts, rules = newRules)
 
-    val tx = table.txn(spark, pending)
+    val tx = table.txn(spark, Some(snap), pending)
     extracted.toDF()
       .write.mode("append")
       .partitionBy("bucket")
@@ -395,14 +396,14 @@ object ExtractJob {
         "schemas — compact each namespace separately via only=Some(...)")
 
     val fatIds = fat.map(_.bucket)
-    val tx = table.txn(spark, fatIds)
+    val tx = table.txn(spark, Some(snap), fatIds)
     // (bucket, row-hash mod target) partitioning → exactly ≤ target output
     // files per bucket; with target=1 each bucket lands in one task. At
     // 100 TB pick target so bucket/target ≈ one task's worth of rows.
     // The split hash covers all data columns — compaction is schema-
     // agnostic (corpus, index and metrics namespaces all compact), and
     // the rewrite reads full width regardless.
-    val data = table.readData(spark, Some(fatIds.toSet))
+    val data = table.read(spark, snap, Some(fatIds.toSet))
     val rewritten =
       if (cluster.isEmpty) {
         val splitCols = data.columns.filterNot(_ == "bucket").map(col)
@@ -479,10 +480,18 @@ object ExtractJob {
       tableDir: String,
       keys: DataFrame,
       keyCol: String,
-      only: Option[Set[Int]] = None): Manifest.Snapshot = {
+      only: Option[Set[Int]] = None): Manifest.Snapshot =
+    deleteByKeyOn(spark, tableDir,
+      new Manifest(tableDir, spark.sessionState.newHadoopConf()).head(), keys, keyCol, only)
+
+  /** [[deleteByKey]] planned from `head`, the HEAD of the table at
+    * `tableDir` the caller resolved. */
+  private[graft] def deleteByKeyOn(spark: SparkSession, tableDir: String,
+      head: Option[Manifest.Snapshot], keys: DataFrame, keyCol: String,
+      only: Option[Set[Int]]): Manifest.Snapshot = {
     import spark.implicits._
     val table = new Manifest(tableDir, spark.sessionState.newHadoopConf())
-    val snap = table.head().getOrElse(
+    val snap = head.getOrElse(
       throw new IllegalStateException(s"nothing to delete from at $tableDir"))
     val sel = snap.buckets.filter(b => only.forall(_.contains(b.bucket)) &&
       b.files.nonEmpty)
@@ -546,7 +555,7 @@ object ExtractJob {
 
     // pass 3: rewrite ONLY the files with actual hits, one read per schema
     // group; a widened bucket's survivors keep every column they hold
-    val tx = table.txn(spark, hits.keys.toSeq.sorted)
+    val tx = table.txn(spark, Some(snap), hits.keys.toSeq.sorted)
     groups.map(_.flatMap(doomed)).filter(_.nonEmpty).foreach { files =>
       table.readFiles(spark, files)
         .join(keySet, Seq(keyCol), "left_anti")

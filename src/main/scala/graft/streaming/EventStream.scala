@@ -125,7 +125,6 @@ object EventStream {
       tableDir: String, streamId: String,
       legacyStreamId: String = ""): Unit = {
     val spark = batch.sparkSession
-    import spark.implicits._
     val runId = f"stream-batch-$batchId%06d"
     val table = new graft.Manifest(tableDir, spark.sessionState.newHadoopConf())
     val prev = table.head()
@@ -138,7 +137,7 @@ object EventStream {
       return // re-delivered
     val t0 = System.nanoTime()
     val buckets = 0 until graft.DocGen.NumBuckets
-    val tx = table.txn(spark, buckets)
+    val tx = table.txn(spark, prev, buckets)
 
     // one shuffle by bucket first: otherwise every task holds rows of every
     // bucket and a micro-batch writes O(tasks × buckets) small files — the
@@ -281,19 +280,35 @@ object EventStream {
     * with stream ids ([[streamIdFor]] emits hex digests). */
   private[graft] val LayoutKey = "__layout:corpus_buckets"
 
-  /** Fail fast when a committed table's layout stamp disagrees with the
-    * `corpusBuckets` it is being opened with. Tables committed before the
-    * stamp existed carry no entry and are accepted as-is (one-time upgrade
-    * window; the next commit stamps the value then in use). */
-  private def requireLayout(snap: Option[graft.Manifest.Snapshot],
-      corpusBuckets: Int, tableDir: String): Unit =
-    snap.flatMap(_.streamWatermarks.get(LayoutKey)).foreach { n =>
-      require(n == corpusBuckets.toLong,
-        s"indexed corpus table at $tableDir was written with corpusBuckets=$n " +
-          s"but opened with corpusBuckets=$corpusBuckets — bucket namespaces " +
-          "would be misread (corpus rows dropped from dedup, index/metrics " +
-          "buckets parsed as corpus)")
+  /** The one layout-stamp check: fail fast when the stamp `key` of
+    * snapshot `snap` disagrees with the value of `param` the table at
+    * `tableDir` is opened with — the corpus tables' [[LayoutKey]] and heat
+    * geometry, the vector-index tables' [[VectorIndexStream.LayoutKey]].
+    * Tables committed before a stamp existed carry no entry and are
+    * accepted as-is (one-time upgrade window; the next commit stamps the
+    * value then in use). */
+  private[graft] def requireLayout(snap: graft.Manifest.Snapshot, key: String,
+      param: String, opened: Int, tableDir: String): Unit =
+    snap.streamWatermarks.get(key).foreach { n =>
+      require(n == opened.toLong,
+        s"table at $tableDir was written with $param=$n but opened with " +
+          s"$param=$opened (layout stamp $key) — its buckets would be misread")
     }
+
+  private def requireCorpusLayout(snap: graft.Manifest.Snapshot,
+      corpusBuckets: Int, tableDir: String): Unit =
+    requireLayout(snap, LayoutKey, "corpusBuckets", corpusBuckets, tableDir)
+
+  /** Snapshot `asOf` (else HEAD) of the table at `tableDir`, resolved
+    * once — the one snapshot a namespace reader checks the layout stamp
+    * `key` of ([[requireLayout]]) and reads. */
+  private[graft] def open(spark: SparkSession, tableDir: String, asOf: Option[Int],
+      key: String, param: String, opened: Int): (graft.Manifest, graft.Manifest.Snapshot) = {
+    val m = new graft.Manifest(tableDir, spark.sessionState.newHadoopConf())
+    val snap = m.resolve(asOf)
+    requireLayout(snap, key, param, opened, tableDir)
+    (m, snap)
+  }
 
   /** The id→corpus-bucket function of the sub-bucketed layout — md5-based
     * (portable, partition-invariant, no seed state; same hash family as
@@ -304,31 +319,31 @@ object EventStream {
     pmod(conv(substring(md5(id.cast("string")), 1, 15), 16, 10).cast("bigint"),
       lit(corpusBuckets)).cast("int")
 
+  private def openCorpus(spark: SparkSession, tableDir: String, corpusBuckets: Int) =
+    open(spark, tableDir, None, LayoutKey, "corpusBuckets", corpusBuckets)
+
+  private def readNamespace(spark: SparkSession, tableDir: String,
+      corpusBuckets: Int, buckets: Set[Int]): DataFrame = {
+    val (m, snap) = openCorpus(spark, tableDir, corpusBuckets)
+    m.read(spark, snap, Some(buckets)).drop("bucket")
+  }
+
   /** Committed corpus rows across all corpus sub-buckets (bucket column
     * dropped). */
   def readCorpus(spark: SparkSession, tableDir: String,
-      corpusBuckets: Int = 1): DataFrame = {
-    val m = new graft.Manifest(tableDir, spark.sessionState.newHadoopConf())
-    requireLayout(m.head(), corpusBuckets, tableDir)
-    m.readData(spark, Some((0 until corpusBuckets).toSet)).drop("bucket")
-  }
+      corpusBuckets: Int = 1): DataFrame =
+    readNamespace(spark, tableDir, corpusBuckets, (0 until corpusBuckets).toSet)
 
   /** Committed dedup-index rows. */
   def readIndex(spark: SparkSession, tableDir: String,
-      corpusBuckets: Int = 1): DataFrame = {
-    val m = new graft.Manifest(tableDir, spark.sessionState.newHadoopConf())
-    requireLayout(m.head(), corpusBuckets, tableDir)
-    m.readData(spark, Some(Set(indexBucketFor(corpusBuckets)))).drop("bucket")
-  }
+      corpusBuckets: Int = 1): DataFrame =
+    readNamespace(spark, tableDir, corpusBuckets, Set(indexBucketFor(corpusBuckets)))
 
   /** Per-micro-batch admission metrics (batch_id, input_rows, admitted,
     * exact_dropped, near_dropped, poisoned), one row per committed batch. */
   def readAdmissionMetrics(spark: SparkSession, tableDir: String,
-      corpusBuckets: Int = 1): DataFrame = {
-    val m = new graft.Manifest(tableDir, spark.sessionState.newHadoopConf())
-    requireLayout(m.head(), corpusBuckets, tableDir)
-    m.readData(spark, Some(Set(metricsBucketFor(corpusBuckets)))).drop("bucket")
-  }
+      corpusBuckets: Int = 1): DataFrame =
+    readNamespace(spark, tableDir, corpusBuckets, Set(metricsBucketFor(corpusBuckets)))
 
   /** The MERGED running heat sketch of a table written with a `heatCol`:
     * cell-wise sum of every committed batch's sketch — feed it to
@@ -337,36 +352,28 @@ object EventStream {
   def readHeatSketch(spark: SparkSession, tableDir: String,
       heatDepth: Int = HeatDepthDefault, heatWidth: Int = HeatWidthDefault,
       corpusBuckets: Int = 1): DataFrame = {
-    val m = new graft.Manifest(tableDir, spark.sessionState.newHadoopConf())
-    val snap = m.head()
-    requireLayout(snap, corpusBuckets, tableDir)
+    val (m, snap) = openCorpus(spark, tableDir, corpusBuckets)
     // presence first: a table whose stream never ran with heatCol has no
     // geometry stamps (the check below passes vacuously) and no heat
     // bucket — without this the read fails later with an unresolved-
     // column error against the corpus schema, pointing at the wrong layer
-    require(snap.exists(_.streamWatermarks.contains(HeatDepthKey)),
+    require(snap.streamWatermarks.contains(HeatDepthKey),
       s"no heat sketch committed at $tableDir — the stream ran without " +
         "heatCol (re-run runIndexedCorpusStream with heatCol to record one)")
     requireHeatGeometry(snap, heatDepth, heatWidth, tableDir)
-    m.readData(spark, Some(Set(heatBucketFor(corpusBuckets)))).drop("bucket")
+    m.read(spark, snap, Some(Set(heatBucketFor(corpusBuckets)))).drop("bucket")
       .groupBy(col("r"), col("c")).agg(sum(col("n")).as("n"))
   }
 
   val HeatDepthDefault = 4
   val HeatWidthDefault = 1024
 
-  private def requireHeatGeometry(snap: Option[graft.Manifest.Snapshot],
-      heatDepth: Int, heatWidth: Int, tableDir: String): Unit =
-    snap.foreach { s =>
-      s.streamWatermarks.get(HeatDepthKey).foreach(d => require(
-        d == heatDepth.toLong,
-        s"heat sketch at $tableDir was written with depth=$d but opened " +
-          s"with depth=$heatDepth — mismatched cells would sum into garbage"))
-      s.streamWatermarks.get(HeatWidthKey).foreach(w => require(
-        w == heatWidth.toLong,
-        s"heat sketch at $tableDir was written with width=$w but opened " +
-          s"with width=$heatWidth — mismatched cells would sum into garbage"))
-    }
+  // mismatched sketch cells would sum into garbage
+  private def requireHeatGeometry(snap: graft.Manifest.Snapshot,
+      heatDepth: Int, heatWidth: Int, tableDir: String): Unit = {
+    requireLayout(snap, HeatDepthKey, "heatDepth", heatDepth, tableDir)
+    requireLayout(snap, HeatWidthKey, "heatWidth", heatWidth, tableDir)
+  }
 
   /** Heat-sketch PRESENCE must be stable across restarts: the geometry
     * check alone passes vacuously when one side has no stamps, so a
@@ -427,28 +434,31 @@ object EventStream {
           heatCol, heatDepth, heatWidth)
     }
 
-  /** The admission plan of one micro-batch against the COMMITTED table —
-    * factored out so tests can assert its physical shape (the corpus scan
-    * must carry the sub-bucket partition `IN` filter) on exactly the plan
-    * the stream runs. Returns the full [[graft.ops.Dedup]] outcome; the
-    * corpus text is only reached through the candidates' sub-buckets. */
+  /** The admission plan of one micro-batch against the corpus committed
+    * in snapshot `committed` of `table` (None: an empty corpus — bootstrap
+    * with the batch's schema, no pruning) — factored out so tests can
+    * assert its physical shape (the corpus scan must carry the sub-bucket
+    * partition `IN` filter) on exactly the plan the stream runs. Returns
+    * the full [[graft.ops.Dedup]] outcome; the corpus text is only reached
+    * through the candidates' sub-buckets. */
   private[graft] def admissionOutcome(spark: SparkSession, batch: DataFrame,
-      table: graft.Manifest, bootstrap: Boolean, idCol: String, textCol: String,
-      threshold: Double, k: Int, bands: Int,
+      table: graft.Manifest, committed: Option[graft.Manifest.Snapshot],
+      idCol: String, textCol: String, threshold: Double, k: Int, bands: Int,
       corpusBuckets: Int): graft.ops.Dedup.IncrementalOutcome = {
-    val (corpus, index, prune) =
-      if (!bootstrap) {
+    val (corpus, index, prune) = committed match {
+      case Some(snap) =>
         // the corpus keeps its `bucket` partition column: pruneBucket
         // computes the candidates' bucket values with the SAME hash the
         // writer used and the scan gets a partition IN filter — per-batch
         // candidate text resolution reads only the candidates' sub-buckets
-        (table.readData(spark, Some((0 until corpusBuckets).toSet)),
-          table.readData(spark, Some(Set(indexBucketFor(corpusBuckets)))).drop("bucket"),
+        (table.read(spark, snap, Some((0 until corpusBuckets).toSet)),
+          table.read(spark, snap, Some(Set(indexBucketFor(corpusBuckets)))).drop("bucket"),
           Some(("bucket", corpusBucketOf(corpusBuckets) _)))
-      } else // bootstrap: empty corpus with the batch's schema, no pruning
+      case None =>
         (batch.limit(0),
           graft.ops.Dedup.buildIndex(batch.limit(0), idCol, textCol, k, bands),
           None)
+    }
     graft.ops.Dedup.incrementalDedupIndexedOutcome(
       batch, corpus, index, idCol, textCol, k, bands, threshold,
       pruneBucket = prune)
@@ -459,28 +469,39 @@ object EventStream {
       threshold: Double, k: Int, bands: Int, corpusBuckets: Int = 1,
       legacyStreamId: String = "", heatCol: Option[String] = None,
       heatDepth: Int = HeatDepthDefault,
-      heatWidth: Int = HeatWidthDefault): Unit = {
+      heatWidth: Int = HeatWidthDefault): Unit =
+    admitOn(new graft.Manifest(tableDir, batch.sparkSession.sessionState.newHadoopConf())
+        .head(), batch, batchId, tableDir, streamId, idCol, textCol, threshold, k,
+      bands, corpusBuckets, legacyStreamId, heatCol, heatDepth, heatWidth)
+
+  /** [[admitIndexedBatch]] planned from `prev`, the HEAD of the table at
+    * `tableDir` the caller resolved: every check, read and the commit of
+    * the admission use that one snapshot. */
+  private[graft] def admitOn(prev: Option[graft.Manifest.Snapshot], batch: DataFrame,
+      batchId: Long, tableDir: String, streamId: String, idCol: String,
+      textCol: String, threshold: Double, k: Int, bands: Int, corpusBuckets: Int,
+      legacyStreamId: String, heatCol: Option[String], heatDepth: Int,
+      heatWidth: Int): Unit = {
     val spark = batch.sparkSession
     require(corpusBuckets >= 1, s"corpusBuckets must be >= 1, got $corpusBuckets")
     require(!batch.columns.contains("bucket"),
       "corpus schema must not carry a 'bucket' column (manifest partition name)")
     val table = new graft.Manifest(tableDir, spark.sessionState.newHadoopConf())
-    val prev = table.head()
     // layout + sketch presence/geometry checks BEFORE the redelivery
     // guard: a mis-opened table must fail loudly even on a batch that
     // would otherwise be skipped
-    requireLayout(prev, corpusBuckets, tableDir)
+    prev.foreach(requireCorpusLayout(_, corpusBuckets, tableDir))
     requireHeatPresence(prev, heatCol, tableDir)
-    if (heatCol.isDefined) requireHeatGeometry(prev, heatDepth, heatWidth, tableDir)
+    if (heatCol.isDefined) prev.foreach(requireHeatGeometry(_, heatDepth, heatWidth, tableDir))
     if (isRedelivered(prev, streamId, legacyStreamId, batchId))
       return // re-delivered
     // bootstrap when the corpus is EMPTY, not merely when no snapshot
     // exists: a first batch that admitted zero rows commits a snapshot
     // whose corpus buckets carry no files, and a manifest read of a
     // fileless selection cannot produce the corpus schema
-    val bootstrap = prev.forall(
-      _.buckets.filter(_.bucket < corpusBuckets).map(_.rows).sum == 0L)
-    val outcome = admissionOutcome(spark, batch, table, bootstrap,
+    val committed = prev.filter(
+      _.buckets.filter(_.bucket < corpusBuckets).map(_.rows).sum > 0L)
+    val outcome = admissionOutcome(spark, batch, table, committed,
       idCol, textCol, threshold, k, bands, corpusBuckets)
     // admitted feeds three consumers (corpus write, index rows, stats) —
     // pinned lazily: compute-once caching, materialized by the first
@@ -501,58 +522,42 @@ object EventStream {
 
     val hBucket = heatBucketFor(corpusBuckets)
     val touched = (cBuckets :+ ixBucket :+ mBucket) ++ heatCol.map(_ => hBucket)
-    val tx = table.txn(spark, touched)
+    val tx = table.txn(spark, prev, touched)
 
     // INDEPENDENT actions overlap (optimization guide §2.6): the corpus /
     // index / heat writes target disjoint directories of the table, and
     // the admission counts run over checkpointed batch-sized frames — the
-    // driver submits them concurrently so one job's task tail back-fills
-    // with the next job's work instead of serializing ~8 round trips.
-    // Concurrent first-touch of a lazily-checkpointed frame is safe: the
-    // block manager's per-partition load locks make one thread compute
-    // while the rest wait on the cached block.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: scala.concurrent.ExecutionContext = graft.Par.ec
-    // shuffle by sub-bucket before the partitioned write (one file per
-    // touched sub-bucket per batch instead of O(tasks × corpusBuckets) —
-    // a daily-ingest stream runs thousands of batches between compactions)
-    val fCorpusW = Future {
-      admitted.withColumn("bucket", corpusBucketOf(corpusBuckets)(col(idCol)))
+    // driver submits them all concurrently on graft.Par lanes so one job's
+    // task tail back-fills with the next job's work instead of serializing
+    // ~8 round trips. Every write lands before the Txn's post-write
+    // listing diff below. Concurrent first-touch of a lazily-checkpointed
+    // frame is safe: the block manager's per-partition load locks make
+    // one thread compute while the rest wait on the cached block.
+    val writes: Seq[() => Unit] = Seq(
+      // shuffle by sub-bucket before the partitioned write (one file per
+      // touched sub-bucket per batch instead of O(tasks × corpusBuckets) —
+      // a daily-ingest stream runs thousands of batches between compactions)
+      () => admitted.withColumn("bucket", corpusBucketOf(corpusBuckets)(col(idCol)))
         .repartition(col("bucket"))
-        .write.mode("append").partitionBy("bucket").parquet(s"$tableDir/data")
-    }
-    val fIdxW = Future {
-      idxDelta.write.mode("append").parquet(s"$tableDir/data/bucket=$ixBucket")
-    }
-    // heat sketch over the INPUT batch (duplicates included — arrival
-    // heat is operational signal even when dedup drops the rows);
-    // append-only: the running sketch is the cell-wise sum at read time
-    val fHeatW = heatCol.map { hc =>
-      Future {
-        graft.ops.Cms.build(batch.select(col(hc).as("key")), "key",
+        .write.mode("append").partitionBy("bucket").parquet(s"$tableDir/data"),
+      () => idxDelta.write.mode("append").parquet(s"$tableDir/data/bucket=$ixBucket")) ++
+      // heat sketch over the INPUT batch (duplicates included — arrival
+      // heat is operational signal even when dedup drops the rows);
+      // append-only: the running sketch is the cell-wise sum at read time
+      heatCol.map(hc => () => graft.ops.Cms.build(batch.select(col(hc).as("key")), "key",
           heatDepth, heatWidth)
-          .coalesce(1).write.mode("append").parquet(s"$tableDir/data/bucket=$hBucket")
-      }
-    }
+        .coalesce(1).write.mode("append").parquet(s"$tableDir/data/bucket=$hBucket"))
     // admission metrics — counts over batch-sized checkpointed frames
     // (poisoned falls out of the outcome identity; see IncrementalOutcome)
-    val fInput = Future(batch.count())
-    val fExact = Future(outcome.exactSurvivors.count())
-    val fDirect = Future(outcome.directDrops.count())
-    val fWm = Future {
-      Option(admitted.agg(max(col(idCol).cast("string"))).head().getString(0))
-        .getOrElse("")
-    }
-
-    val nInput = Await.result(fInput, Duration.Inf)
-    val nExactSurv = Await.result(fExact, Duration.Inf)
-    val nDirect = Await.result(fDirect, Duration.Inf)
-    val wm = Await.result(fWm, Duration.Inf)
-    // every write must land before the Txn's post-write listing diff
-    Await.result(fCorpusW, Duration.Inf)
-    Await.result(fIdxW, Duration.Inf)
-    fHeatW.foreach(Await.result(_, Duration.Inf))
+    // (lanes start writes first, as the jobs always have: the first job to
+    // touch the lazily pinned `admitted` is the one that computes it)
+    val (_, (Seq(nInput, nExactSurv, nDirect), wm)) = graft.Par.par2(
+      () => graft.Par.par(writes),
+      () => graft.Par.par2(
+        () => graft.Par.par(Seq(() => batch.count(), () => outcome.exactSurvivors.count(),
+          () => outcome.directDrops.count())),
+        () => Option(admitted.agg(max(col(idCol).cast("string"))).head().getString(0))
+          .getOrElse("")))
 
     // the admitted count comes from the fresh corpus files' own FOOTERS
     // (metadata plane, exact by construction) — no count() job
@@ -603,17 +608,18 @@ object EventStream {
   def deleteDocs(spark: SparkSession, tableDir: String, ids: DataFrame,
       idCol: String = "doc_id", corpusBuckets: Int = 1): graft.Manifest.Snapshot = {
     val table = new graft.Manifest(tableDir, spark.sessionState.newHadoopConf())
-    requireLayout(table.head(), corpusBuckets, tableDir)
+    val snap = table.head()
+    snap.foreach(requireCorpusLayout(_, corpusBuckets, tableDir))
     // candidate sub-buckets from the ids themselves (bounded by the
     // layout's bucket count — a config-sized collect)
     val cand = ids.select(corpusBucketOf(corpusBuckets)(col(idCol)).as("b"))
       .distinct().collect().map(_.getInt(0)).toSet
-    graft.ExtractJob.deleteByKey(spark, tableDir, ids, idCol,
-      only = Some(cand + indexBucketFor(corpusBuckets)))
+    graft.ExtractJob.deleteByKeyOn(spark, tableDir, snap, ids, idCol,
+      Some(cand + indexBucketFor(corpusBuckets)))
   }
 
   /** Reshard the indexed corpus table from its committed `from` layout to
-    * `to` corpus sub-buckets — the migration path [[requireLayout]]'s
+    * `to` corpus sub-buckets — the migration path [[requireCorpusLayout]]'s
     * fail-fast otherwise forecloses (a table started at corpusBuckets=1
     * would be stuck with O(corpus) candidate resolution forever; a table
     * over-sharded early pays per-batch small files forever).
@@ -639,7 +645,7 @@ object EventStream {
     val table = new graft.Manifest(tableDir, spark.sessionState.newHadoopConf())
     val prev = table.head().getOrElse(throw new IllegalStateException(
       s"nothing to reshard at $tableDir"))
-    requireLayout(Some(prev), from, tableDir)
+    requireCorpusLayout(prev, from, tableDir)
     require(to != from, s"table already has corpusBuckets=$from")
     val states = prev.buckets.map(b => b.bucket -> b).toMap
     val corpusWm = (0 until from)
@@ -652,7 +658,7 @@ object EventStream {
       .map(f => (f(from), f(to))).filter(m => states.contains(m._1))
     val newCorpus = 0 until to
     val stale = states.keySet.diff(newCorpus.toSet ++ moves.map(_._2)).toSeq.sorted
-    val tx = table.txn(spark, newCorpus ++ moves.map(_._2) ++ stale)
+    val tx = table.txn(spark, Some(prev), newCorpus ++ moves.map(_._2) ++ stale)
 
     // corpus rows: re-hash into the new sub-buckets (one shuffle by the
     // new bucket, exactly the admit path's write shape)
@@ -661,7 +667,7 @@ object EventStream {
     // (a corpus whose rows widened across commits reads, and so reshards,
     // with every column: the manifest's read schema is the merged one)
     if (oldCorpus.nonEmpty)
-      table.readData(spark, Some(oldCorpus.toSet)).drop("bucket")
+      table.read(spark, prev, Some(oldCorpus.toSet)).drop("bucket")
         .withColumn("bucket", corpusBucketOf(to)(col(idCol)))
         .repartition(col("bucket"))
         .write.mode("append").partitionBy("bucket").parquet(s"$tableDir/data")
@@ -678,7 +684,7 @@ object EventStream {
     // three moves are independent rewrites of disjoint bucket directories
     // — overlap them (guide §2.6)
     graft.Par.par(moves.filter(m => states(m._1).files.nonEmpty).map { case (o, n) => () =>
-      table.readData(spark, Some(Set(o))).drop("bucket")
+      table.read(spark, prev, Some(Set(o))).drop("bucket")
         .coalesce(states(o).files.length)
         .write.mode("append").parquet(s"$tableDir/data/bucket=$n")
     })

@@ -61,25 +61,23 @@ object VectorIndexStream {
     * metrics and vice versa. */
   private[graft] val LayoutKey = "__layout:ivf_cells"
 
-  private def requireLayout(snap: Option[graft.Manifest.Snapshot],
-      nCells: Int, tableDir: String): Unit =
-    snap.flatMap(_.streamWatermarks.get(LayoutKey)).foreach { n =>
-      require(n == nCells.toLong,
-        s"vector-index table at $tableDir was written with nCells=$n but " +
-          s"opened with nCells=$nCells — bucket namespaces would be misread")
-    }
+  private def open(spark: SparkSession, tableDir: String, nCells: Int, asOf: Option[Int]) =
+    EventStream.open(spark, tableDir, asOf, LayoutKey, "nCells", nCells)
 
-  /** Committed codebook of the table, cell-ordered (tiny: nCells × dims).
-    * Empty before the first non-empty batch commits. */
+  /** Committed codebook of snapshot `asOf` (else HEAD), cell-ordered
+    * (tiny: nCells × dims). Empty before the first non-empty batch
+    * commits; like every reader, fails on a table with no commit. */
   def readCodebook(spark: SparkSession, tableDir: String, nCells: Int,
       asOf: Option[Int] = None): Seq[Seq[Double]] = {
-    val m = new graft.Manifest(tableDir, spark.sessionState.newHadoopConf())
-    requireLayout(m.head(), nCells, tableDir)
+    val (m, snap) = open(spark, tableDir, nCells, asOf)
+    codebookOf(spark, m, snap, nCells)
+  }
+
+  private def codebookOf(spark: SparkSession, m: graft.Manifest,
+      snap: graft.Manifest.Snapshot, nCells: Int): Seq[Seq[Double]] = {
     val cb = codebookBucketFor(nCells)
-    val hasRows = asOf.map(m.snapshotById).orElse(m.head())
-      .exists(_.buckets.exists(b => b.bucket == cb && b.rows > 0))
-    if (!hasRows) Nil
-    else m.readData(spark, Some(Set(cb)), asOf)
+    if (!snap.buckets.exists(b => b.bucket == cb && b.rows > 0)) Nil
+    else m.read(spark, snap, Some(Set(cb)))
       .select(col("cell"), col("cv")).orderBy(col("cell"))
       .collect().map(_.getSeq[Double](1).toSeq).toSeq
   }
@@ -88,9 +86,8 @@ object VectorIndexStream {
     * reader; probes should use [[topKSnapshot]], which prunes. */
   def readVectors(spark: SparkSession, tableDir: String,
       nCells: Int): DataFrame = {
-    val m = new graft.Manifest(tableDir, spark.sessionState.newHadoopConf())
-    requireLayout(m.head(), nCells, tableDir)
-    m.readData(spark, Some((0 until nCells).toSet)).drop("bucket")
+    val (m, snap) = open(spark, tableDir, nCells, None)
+    m.read(spark, snap, Some((0 until nCells).toSet)).drop("bucket")
   }
 
   /** Per-micro-batch ingest metrics, one row per committed batch. The
@@ -101,9 +98,8 @@ object VectorIndexStream {
     * the gate stays readable with one stable 9-column schema. */
   def readIngestMetrics(spark: SparkSession, tableDir: String,
       nCells: Int): DataFrame = {
-    val m = new graft.Manifest(tableDir, spark.sessionState.newHadoopConf())
-    requireLayout(m.head(), nCells, tableDir)
-    val raw = m.readData(spark, Some(Set(metricsBucketFor(nCells)))).drop("bucket")
+    val (m, snap) = open(spark, tableDir, nCells, None)
+    val raw = m.read(spark, snap, Some(Set(metricsBucketFor(nCells)))).drop("bucket")
     Seq("near_dropped", "gate_skipped_cells").foldLeft(raw) { (df, c) =>
       if (df.columns.contains(c)) df.withColumn(c, coalesce(col(c), lit(0L)))
       else df.withColumn(c, lit(0L))
@@ -122,21 +118,19 @@ object VectorIndexStream {
   def topKSnapshot(spark: SparkSession, tableDir: String, probes: DataFrame,
       idCol: String, vecCol: String, k: Int, nProbe: Int, nCells: Int,
       asOf: Option[Int] = None): DataFrame = {
-    val m = new graft.Manifest(tableDir, spark.sessionState.newHadoopConf())
-    requireLayout(m.head(), nCells, tableDir)
-    val cents = readCodebook(spark, tableDir, nCells, asOf)
+    val (m, snap) = open(spark, tableDir, nCells, asOf)
+    val cents = codebookOf(spark, m, snap, nCells)
     require(cents.nonEmpty,
       s"vector-index table at $tableDir has no committed codebook yet")
     val (p, probedCells) = Similarity.rankProbes(probes, idCol, vecCol,
       cents, nProbe)
-    val snap = asOf.map(m.snapshotById).orElse(m.head()).get
     val hasFiles = snap.buckets
       .exists(b => probedCells.contains(b.bucket) && b.files.nonEmpty)
     if (!hasFiles) // none of the probed cells committed any vectors yet
       return probes.select(col(idCol).as("probe_id"), col(idCol).as("cand_id"))
         .withColumn("cosine", lit(0.0)).withColumn("rn", lit(1))
         .where(lit(false))
-    val cands = m.readData(spark, Some(probedCells.toSet), asOf)
+    val cands = m.read(spark, snap, Some(probedCells.toSet))
       .withColumnRenamed("bucket", "cell")
     Similarity.topKWithinCells(p, cands, idCol, vecCol, k)
   }
@@ -189,7 +183,7 @@ object VectorIndexStream {
       "vector schema must not carry a 'cell' column (probe-join name)")
     val table = new graft.Manifest(tableDir, spark.sessionState.newHadoopConf())
     val prev = table.head()
-    requireLayout(prev, nCells, tableDir)
+    prev.foreach(EventStream.requireLayout(_, LayoutKey, "nCells", nCells, tableDir))
     if (EventStream.isRedelivered(prev, streamId, "", batchId))
       return // re-delivered
     val cbBucket = codebookBucketFor(nCells)
@@ -209,7 +203,7 @@ object VectorIndexStream {
         s"initialCodebook must have 1..$nCells centroids, got ${cb.length}")
     }
     val cents: Seq[Seq[Double]] =
-      if (committed) readCodebook(spark, tableDir, nCells)
+      if (committed) codebookOf(spark, table, prev.get, nCells)
       else initialCodebook.getOrElse {
         if (nRows == 0L) Nil
         else Similarity.refineCentroids(rows, vecCol,
@@ -276,7 +270,7 @@ object VectorIndexStream {
               nearPred(cosine("__av", vecCol, "__na", "__n1"), t))
             .select(col(idCol))
           val drops = graft.Pin((if (candCells.isEmpty) intraDrops else {
-            val cands = table.readData(spark, Some(candCells))
+            val cands = table.read(spark, prev.get, Some(candCells))
               .select(col("bucket"), col(vecCol).as("__cv3"))
               .withColumn("__n3", Similarity.norm("__cv3"))
             g.join(cands, "bucket")
@@ -326,7 +320,7 @@ object VectorIndexStream {
     val trained = !committed && cents.nonEmpty
     val touched = cellWm.keys.toSeq.sorted ++
       (if (trained) Seq(cbBucket) else Nil) :+ mBucket
-    val tx = table.txn(spark, touched)
+    val tx = table.txn(spark, prev, touched)
     // the three writes target disjoint directories — overlap them
     graft.Par.par(Seq(
       () => admitted.foreach(_.select(batch.columns.map(col) :+ col("bucket"): _*)

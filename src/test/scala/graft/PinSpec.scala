@@ -7,8 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** [[Pin]]: what stays pinned (persistent RDDs) while and after iterative
   * operators run, the order in which rounds are released, the lineage test
-  * hook, and the source rules: only util.scala pins or unpersists, and
-  * only manifest.scala reads parquet footers. */
+  * hook, and the source rules: only util.scala pins, unpersists or
+  * awaits a lane, and only manifest.scala reads parquet footers. */
 class PinSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
   import spark.implicits._
@@ -140,7 +140,9 @@ class PinSpec extends AnyFunSuite {
       // one stream source and one runner: EventStream.files / availableNow
       ".readStream" -> Some("graft/streaming/EventStream.scala"),
       ".foreachBatch" -> Some("graft/streaming/EventStream.scala"),
-      "Trigger.AvailableNow" -> Some("graft/streaming/EventStream.scala"))
+      "Trigger.AvailableNow" -> Some("graft/streaming/EventStream.scala"),
+      // driver-side lanes run on graft.Par: no hand-rolled Future/Await
+      "Await.result" -> Some("graft/util.scala"))
     val offenders = for {
       (pattern, only) <- rules
       (f, src) <- sources if src.contains(pattern) && !only.exists(f.getPath.endsWith)

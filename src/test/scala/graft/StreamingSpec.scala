@@ -379,7 +379,7 @@ class StreamingSpec extends AnyFunSuite {
     val next = base.where($"doc_id" < 5)
       .select(($"doc_id" + 9000).as("doc_id"), concat($"text", lit(" zz")).as("text"))
     val plan = Pin.lineage { streaming.EventStream.admissionOutcome(spark, next, m4,
-        bootstrap = false, "doc_id", "text", 0.7, 8, 4, 4)
+        m4.head(), "doc_id", "text", 0.7, 8, 4, 4)
       .admitted.queryExecution.executedPlan.toString }
     assert("PartitionFilters: \\[[^\\]]*bucket".r.findFirstIn(plan).isDefined,
       "corpus candidate-text scan must carry a bucket partition filter:\n" +
@@ -1201,7 +1201,7 @@ class StreamingSpec extends AnyFunSuite {
     val next = base.where($"doc_id" < 5)
       .select(($"doc_id" + 9000).as("doc_id"), concat($"text", lit(" zz")).as("text"))
     val plan = Pin.lineage { streaming.EventStream.admissionOutcome(spark, next, m,
-        bootstrap = false, "doc_id", "text", 0.7, 8, 4, 4)
+        m.head(), "doc_id", "text", 0.7, 8, 4, 4)
       .admitted.queryExecution.executedPlan.toString }
     assert("PartitionFilters: \\[[^\\]]*bucket".r.findFirstIn(plan).isDefined,
       "resharded corpus scan must carry a bucket partition filter")
@@ -1260,7 +1260,7 @@ class StreamingSpec extends AnyFunSuite {
     // commit: what the committed metrics and rows must agree with
     val m = new Manifest(tbl, spark.sessionState.newHadoopConf())
     val lineage = Pin.lineage { streaming.EventStream.admissionOutcome(spark, batch, m,
-      bootstrap = false, "doc_id", "text", 0.7, 8, 4, 2) }
+      m.head(), "doc_id", "text", 0.7, 8, 4, 2) }
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select($"doc_id", $"h", $"band", $"bandhash")
         .as[(Long, String, Int, Option[String])].collect().toSeq.sorted

@@ -11,7 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * bucket obeys the same two invariants, whichever writer last touched
   * it: its row count is the sum of its files' footer row counts, and when
   * its files carry `doc_id` every non-empty file has a zone map (an empty
-  * file has no id range; it is always planned). Toy sizes. */
+  * file has no id range; it is always planned). A Txn commits only over
+  * the parent it was opened on, and an operation resolves HEAD once
+  * (plus its commit check), counted through [[CountingFs]]. Toy sizes. */
 class TxnSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
   import spark.implicits._
@@ -121,7 +123,7 @@ class TxnSpec extends AnyFunSuite {
     ExtractJob.run(spark, DocGen.generate(spark, 100, 2), dir, "base", resume = false)
     val m = new Manifest(dir, conf)
     val head0 = m.head().get
-    val tx = m.txn(spark, Seq(0))
+    val tx = m.txn(spark, Some(head0), Seq(0))
     intercept[IllegalStateException] {
       ExtractJob.transform(DocGen.generate(spark, 200, 2)).toDF().where($"bucket" === 0)
         .write.mode("append").partitionBy("bucket").parquet(s"$dir/data")
@@ -133,10 +135,96 @@ class TxnSpec extends AnyFunSuite {
     assert(crashed.nonEmpty && m.orphanFiles() == crashed)
 
     // a later Txn over the same bucket never adopts files written before it opened
-    val retry = m.txn(spark, Seq(0))
+    val retry = m.txn(spark, m.head(), Seq(0))
     retry.append(0, "")
     assert(retry.commit("retry").buckets == head0.buckets)
     assert(m.removeOrphans() == crashed)
     assert(m.orphanFiles().isEmpty)
   }
+
+  test("two Txns opened on one parent: the first commits, the second fails naming both snapshots") {
+    val dir = freshDir("graft_txn_race_")
+    ExtractJob.run(spark, DocGen.generate(spark, 100, 2), dir, "base", resume = false)
+    val m = new Manifest(dir, conf)
+    val parent = m.head()
+    val (first, second) = (m.txn(spark, parent, Seq(0)), m.txn(spark, parent, Seq(0)))
+    def write(n: Int): Unit = ExtractJob.transform(DocGen.generate(spark, n, 2)).toDF()
+      .where($"bucket" === 0).write.mode("append").partitionBy("bucket").parquet(s"$dir/data")
+    write(200)
+    first.append(0, "")
+    val committed = first.commit("first")
+    write(300)
+    second.append(0, "")
+    val e = intercept[IllegalStateException](second.commit("second"))
+    assert(e.getMessage.contains(dir) && e.getMessage.contains(s"snapshot ${parent.get.id}") &&
+      e.getMessage.contains(s"snapshot ${committed.id}"), e.getMessage)
+    assert(m.head().get == committed)
+    assert(m.readData(spark).count() == committed.buckets.map(_.rows).sum)
+    assert(committed.buckets.find(_.bucket == 0).get.rows >
+      parent.get.buckets.find(_.bucket == 0).get.rows)
+  }
+
+  test("a crashed commit's leftover snap-(n+1).json with HEAD at n does not block the rerun") {
+    val dir = freshDir("graft_txn_leftover_")
+    val m = new Manifest(dir, conf)
+    m.commit("a", Seq(Manifest.BucketState(0, 1, "d1")))
+    Files.writeString(java.nio.file.Path.of(dir, "meta", "snap-1.json"), "{\"id\":1,") // torn write
+    assert(m.head().map(_.id).contains(0))
+    val rerun = m.commit("b", Seq(Manifest.BucketState(1, 2, "d2")))
+    assert(rerun.id == 1 && m.head().get == rerun)
+    assert(rerun.buckets.map(_.bucket) == Seq(0, 1))
+  }
+
+  test("an operation opens meta/HEAD once, plus once for its commit check") {
+    spark.sparkContext.hadoopConfiguration.set("fs.countfs.impl", classOf[CountingFs].getName)
+    val root = "countfs://" + Files.createTempDirectory("graft_heads_").toString
+    def opens(dir: String)(op: => Any): Int = {
+      val before = CountingFs.headOpens(dir)
+      op
+      CountingFs.headOpens(dir) - before
+    }
+
+    // runGated resuming a run that committed half of the buckets
+    val ext = s"$root/extract"
+    new Manifest(ext, spark.sessionState.newHadoopConf())
+      .commit("half", (0 until 8).map(Manifest.BucketState(_, 0L, "")))
+    assert(opens(ext)(ExtractJob.run(spark, DocGen.generate(spark, 200, 2), ext, "rest")) == 2)
+
+    // admitIndexedBatch and a namespace reader over its table
+    val out = s"$root/inc"
+    val corpus = IncrementalCorpus.corpusTableDir(out)
+    def admit(df: org.apache.spark.sql.DataFrame, batchId: Long) =
+      streaming.EventStream.admitIndexedBatch(df, batchId, corpus,
+        IncrementalCorpus.StreamId, "doc_id", "text", 0.8, 8, 4, corpusBuckets = 2)
+    admit(texts(0, 30), 0L)
+    assert(opens(corpus)(admit(texts(30, 60), 1L)) == 2)
+    assert(opens(corpus)(streaming.EventStream.readCorpus(spark, corpus, 2)) == 1)
+
+    // admitIncrement over the same corpus (its holdout gate reads a stage)
+    val stages = new CorpusMain.StageStore(spark, s"$out/stages")
+    stages("eval_holdout") { texts(900, 905) }
+    assert(opens(corpus)(IncrementalCorpus.admitIncrement(spark,
+      DocGen.generate(spark, 40, 2).as[RawDoc], out, 2L)) == 2)
+    assert(streaming.EventStream.readAdmissionMetrics(spark, corpus, 2).count() == 3)
+  }
+}
+
+/** The local filesystem under the `countfs` scheme, counting every open of
+  * a file named HEAD by its path: the number of times a manifest resolved
+  * a table's HEAD. */
+final class CountingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("countfs:///")
+  override def getScheme: String = "countfs"
+  override def open(f: Path, bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream = {
+    if (f.getName == "HEAD") CountingFs.opened(f.toUri.getPath)
+    super.open(f, bufferSize)
+  }
+}
+
+object CountingFs {
+  private val counts = new java.util.concurrent.ConcurrentHashMap[String, Int]()
+  private def opened(path: String): Unit = counts.merge(path, 1, _ + _)
+  /** Opens of `tableDir`'s meta/HEAD so far. */
+  def headOpens(tableDir: String): Int =
+    counts.getOrDefault(new Path(tableDir, "meta/HEAD").toUri.getPath, 0)
 }
